@@ -7,12 +7,14 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# the package next to this file, whatever the checkout is named
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from document_text_extraction_spark import pipeline  # noqa: E402
 from document_text_extraction_spark.queries import (  # noqa: E402

@@ -7,7 +7,7 @@ this package re-expresses the same semantics Spark-first:
 
   read (url, warc_ts, html:binary, text, lang)
     -> content-sniff route (HTML vs PDF vs unknown)
-    -> vectorized pandas/Arrow extraction kernel (mapInPandas)
+    -> per-document extraction over pandas/Arrow batches (mapInPandas)
     -> (url, extracted_text, spans, fields, lineage)
     -> bucketed-url-hash partitioned, checkpoint-resumable write
        with per-partition counters.
@@ -16,9 +16,9 @@ Modules
 -------
 corpus     deterministic synthetic page generator (HTML / PDF-1.4 subset /
            malformed), no external data, no wall clock
-oracle     single-document pure-Python reference extractor — the golden
-           source every Spark path must match byte-identically
-kernels    the same algorithms vectorized over pandas/Arrow batches
+oracle     single-document pure-Python extractor — the one implementation
+           every Spark path runs and must match byte-identically
+kernels    Arrow-batch boundary: oracle.extract_document per document
 pipeline   the Spark job: salted bucketing, mapInPandas, metrics, resume
 functions  Spark-native (JVM-side) column expression library: regex field
            extraction, text statistics, quality scoring

@@ -1,7 +1,7 @@
 """JVM-side (codegen'd) column-expression form of the regex field library.
 
-The Arrow-batch kernel (``kernels._fields_batch``) is the hot path used
-inside extraction; these expressions are the *dataset-level* form for SQL
+``oracle.extract_fields`` is the per-document form used inside
+extraction; these expressions are the *dataset-level* form for SQL
 analytics over already-extracted text — they never leave the JVM, so no
 Python cost at all. Regex semantics follow the reference
 (``/root/reference/new_approaches/final.py:199-222``,

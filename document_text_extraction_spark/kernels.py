@@ -1,589 +1,51 @@
-"""Vectorized (pandas/Arrow-batch) form of the oracle's extraction.
+"""Arrow-batch boundary of the extraction map.
 
-This is the hot path that runs inside ``mapInPandas``: one call receives a
-pandas batch of documents and returns the full extraction record for each.
-Design contract (SURVEY.md §4 "what needs explicit engineering" #1):
-
-* the only per-document Python is the unavoidable parser scan (HTML tag
-  tokenizer / PDF content-stream tokenizer — both single C-regex passes);
-* everything after the scan is **batch-level**: whitespace normalization,
-  link-density classification, field regexes and span ordering run as
-  pandas ``.str`` / numpy array ops over *all blocks of all documents in
-  the batch at once*;
-* output is byte-identical to ``oracle.extract_document`` per document —
-  enforced by the ``test_kernels`` equivalence property test.
-
-Reference provenance: batch drivers ``/root/reference/batch_multi_column.py
-:496-611`` and ``grid_detector_v4.py:342-418`` loop documents one at a
-time; this module is their Arrow-batch re-expression.
+``extract_batch`` is the body that runs inside ``mapInPandas``: one call
+receives a pandas batch of documents and returns the full extraction
+record for each. The extraction itself is ``oracle.extract_document``,
+called once per document — the only implementation of sniff, HTML
+block classification, PDF reading order and fields. This module only
+times each call and lays the records out as batch columns.
 """
 
 from __future__ import annotations
 
-import html as _htmllib
-import re
 import time
 
 import numpy as np
 import pandas as pd
 
 from . import oracle
-from .oracle import (
-    BLOCK_TAGS,
-    BOILER_CONTAINERS,
-    COLUMN_GAP_PT,
-    CONTENT_KINDS,
-    EMAIL_RE,
-    HEADING_TAGS,
-    LINK_DENSITY_MAX,
-    LINK_RES,
-    PHONE_RES,
-    _COMMENT_RE,
-    _DECL_RE,
-    _PHONE_CLEAN_RE,
-    _SCRIPT_RE,
-    _STREAM_RE,
-    _STYLE_RE,
-    _TAG_RE,
-    _interpret_page,
-)
 
-_KIND_BOILER, _KIND_MAIN, _KIND_HEADING, _KIND_LIST = 0, 1, 2, 3
-_KIND_NAMES = np.array(["boilerplate", "main", "heading", "list_item"])
-
-
-# ---------------------------------------------------------------------------
-# Per-document scanners (emit raw pieces; no classification here)
-# ---------------------------------------------------------------------------
-
-def _scan_html_doc(data: bytes) -> tuple[list[tuple[int, str, str]],
-                                         list[str], list[str], str]:
-    """One regex pass over a document → raw blocks + outlink hrefs +
-    anchor texts + robots directive.
-
-    Returns ``([(full_raw, link_raw, base_kind_code)], hrefs, anchors,
-    meta_robots)`` per block with entity-unescaped but *un-normalized*
-    text; ``base_kind_code`` already folds in the boilerplate-ancestor
-    rule (cheap to track in the scan, and it keeps the batch stage
-    purely numeric). ``hrefs`` are the ``<a href>`` values in document
-    order, ``anchors[i]`` the whitespace-normalized visible text of
-    ``hrefs[i]``'s element (innermost-open-anchor attribution, same
-    stack rule as the oracle), and ``meta_robots`` the first ``<meta
-    name=robots>`` content (raw, entity-unescaped — mirrors
-    ``oracle.extract_html_full``).
-    """
-    raw = _COMMENT_RE.sub(b" ", data)
-    raw = _DECL_RE.sub(b" ", raw)
-    raw = _SCRIPT_RE.sub(b" ", raw)
-    raw = _STYLE_RE.sub(b" ", raw)
-    doc = raw.decode("utf-8", errors="replace")
-
-    blocks: list[tuple[int, str, str]] = []
-    hrefs: list[str] = []
-    anchor_pieces: list[list[str]] = []   # raw text per href-anchor
-    astack: list[tuple[int, int]] = []    # (anchor idx, depth at open)
-    meta_robots = ""
-    boiler_depth = 0
-    link_depth = 0
-    base_kind = _KIND_MAIN
-    pieces: list[str] = []
-    link_pieces: list[str] = []
-    any_boiler = False
-
-    # hot loop: split once (C-level), walk [text, closing, name, _, ...]
-    # strides; locals + prebound sets beat finditer+group by ~30%
-    parts = _TAG_RE.split(doc)
-    unescape = _htmllib.unescape
-    block_tags, boiler_tags, heading_tags = (
-        BLOCK_TAGS, BOILER_CONTAINERS, HEADING_TAGS)
-    # split with 3 capture groups always yields 4k+1 elements:
-    # [text, closing, name, attrs]*k + final text. Strided zip beats
-    # manual index arithmetic + per-iteration bounds checks (~15% on
-    # this loop); the final text segment is handled after the loop.
-    for txt, closing, name, attrs in zip(
-            parts[::4], parts[1::4], parts[2::4], parts[3::4]):
-        if txt:
-            # inline the unescape fast path: most pieces carry no
-            # entity, and the call per piece was visible in the profile
-            t = unescape(txt) if "&" in txt else txt
-            if t:
-                pieces.append(t)
-                if link_depth > 0:
-                    link_pieces.append(t)
-                    if astack:
-                        anchor_pieces[astack[-1][0]].append(t)
-                if boiler_depth > 0:
-                    any_boiler = True
-        if not name.islower():   # tag names are already lowercase on
-            name = name.lower()  # real pages; skip the allocation
-        if name in block_tags:
-            if pieces:
-                kind = _KIND_BOILER if any_boiler else base_kind
-                blocks.append(
-                    ("".join(pieces), "".join(link_pieces), kind))
-                pieces = []
-                link_pieces = []
-                any_boiler = False
-            if not closing and name in heading_tags:
-                base_kind = _KIND_HEADING
-            elif not closing and name == "li":
-                base_kind = _KIND_LIST
-            else:
-                base_kind = _KIND_MAIN
-        if name in boiler_tags:
-            if closing:
-                if boiler_depth > 0:
-                    boiler_depth -= 1
-            else:
-                boiler_depth += 1
-        elif name == "a":
-            if closing:
-                if astack and astack[-1][1] == link_depth:
-                    astack.pop()
-                if link_depth > 0:
-                    link_depth -= 1
-            else:
-                link_depth += 1
-                hm = oracle._HREF_RE.search(attrs)
-                if hm is not None:
-                    href = unescape(
-                        hm.group(1) or hm.group(2) or hm.group(3) or "")
-                    if href:
-                        hrefs.append(href)
-                        anchor_pieces.append([])
-                        astack.append((len(anchor_pieces) - 1,
-                                       link_depth))
-        elif (name == "meta" and not closing and not meta_robots
-                and oracle._META_NAME_ROBOTS_RE.search(attrs)):
-            cm = oracle._META_CONTENT_RE.search(attrs)
-            if cm is not None:
-                meta_robots = unescape(
-                    cm.group(1) or cm.group(2) or cm.group(3) or ""
-                ).lower()
-    txt = parts[-1]  # the final text segment after the last tag
-    if txt:
-        t = unescape(txt) if "&" in txt else txt
-        if t:
-            pieces.append(t)
-            if link_depth > 0:
-                link_pieces.append(t)
-                if astack:
-                    anchor_pieces[astack[-1][0]].append(t)
-            if boiler_depth > 0:
-                any_boiler = True
-    if pieces:
-        kind = _KIND_BOILER if any_boiler else base_kind
-        blocks.append(("".join(pieces), "".join(link_pieces), kind))
-    anchors = [oracle._norm_ws("".join(ps)) for ps in anchor_pieces]
-    return blocks, hrefs, anchors, meta_robots
-
-
-def _scan_pdf_doc(data: bytes) -> tuple[list[dict], int, list[str]]:
-    """Content-stream scan → raw shows ``{page,x,y,text}``, page count
-    and /Annots link URIs.
-
-    Shares ``oracle.page_contents`` (tree-walked page order, FlateDecode)
-    so the two implementations cannot drift on document structure."""
-    if not data.lstrip()[:5] == b"%PDF-":
-        raise oracle.PdfParseError("missing %PDF- magic", code="bad_magic")
-    if oracle._ENCRYPT_RE.search(data):
-        raise oracle.PdfParseError("encrypted document", code="encrypted")
-    pages_fonts = oracle.page_contents(data)
-    if not pages_fonts:
-        raise oracle.PdfParseError("no content streams", code="no_streams")
-    shows: list[dict] = []
-    links: list[str] = []
-    for page, (content, fonts, xobjects, uris, geom) in enumerate(
-            pages_fonts):
-        page_shows = _interpret_page(content, page, fonts, xobjects)
-        oracle._apply_page_rotation(page_shows, *geom)
-        shows.extend(page_shows)
-        links.extend(uris)
-    return shows, len(pages_fonts), links
-
-
-# ---------------------------------------------------------------------------
-# Batch-level stages
-# ---------------------------------------------------------------------------
-
-def _sniff_batch(payloads: pd.Series) -> np.ndarray:
-    """Route per document (vector of 'html' | 'pdf' | 'unknown')."""
-    return np.array(
-        [oracle.sniff(p) for p in payloads], dtype=object
-    )
-
-
-def _classify_html_blocks(
-    doc_idx: list, fulls: list, links: list, base_kinds: list,
-) -> tuple[list, list, list]:
-    """Classification of every HTML block in the batch, one fused pass.
-
-    Normalization + density + kind assignment per block (the batch
-    analogue of ``oracle.extract_html``'s per-block logic). One Python
-    loop instead of the previous 6 numpy-object-array passes (norm
-    listcomp, len listcomp, link-nlen listcomp, two np.where, masked
-    tolist): object-dtype numpy ops iterate in Python anyway, so the
-    fused loop is strictly less work — and it skips the link-text
-    split entirely for boiler-ancestor and linkless blocks.
-
-    ' '.join(s.split()) ≡ re.sub(r'\\s+', ' ', s).strip(): CPython's
-    sre \\s and str.isspace() share the same Unicode whitespace table
-    (equivalence guarded by the oracle-parity property tests). The
-    normalized LENGTH of the link text is sum(len(tok)) + gaps — no
-    join allocation.
-    """
-    out_docs: list = []
-    out_texts: list = []
-    out_kinds: list = []
-    ad, at, ak = out_docs.append, out_texts.append, out_kinds.append
-    names = _KIND_NAMES
-    boiler_name = names[_KIND_BOILER]
-    ldm = LINK_DENSITY_MAX
-    for doc, full, link, base in zip(doc_idx, fulls, links, base_kinds):
-        fn = " ".join(full.split())
-        if not fn:
-            continue
-        if base == _KIND_BOILER:
-            ad(doc); at(fn); ak(boiler_name)
-            continue
-        if link:
-            toks = link.split()
-            ll = sum(map(len, toks)) + len(toks) - 1 if toks else 0
-            if ll / len(fn) > ldm:
-                ad(doc); at(fn); ak(boiler_name)
-                continue
-        ad(doc); at(fn); ak(names[base])
-    return out_docs, out_texts, out_kinds
-
-
-def _order_pdf_shows(shows_df: pd.DataFrame) -> pd.DataFrame:
-    """Reading-order sort of every PDF show in the batch.
-
-    Column clustering per (doc, page) on unique x-origins (gap > 40pt,
-    O29) then a single stable lexsort over the whole batch by
-    (doc, page, col, -y, x, seq) — the total deterministic key (O36).
-    """
-    if shows_df.empty:
-        return shows_df.assign(col=np.array([], dtype=np.int64))
-    df = shows_df
-    # cluster x per (doc, page): sort by (doc,page,x); new cluster when the
-    # gap to the previous unique x within the group exceeds COLUMN_GAP_PT
-    order = np.lexsort((df["x"].to_numpy(), df["page"].to_numpy(),
-                        df["doc"].to_numpy()))
-    x_s = df["x"].to_numpy()[order]
-    d_s = df["doc"].to_numpy()[order]
-    p_s = df["page"].to_numpy()[order]
-    new_group = np.ones(len(df), dtype=bool)
-    new_group[1:] = (d_s[1:] != d_s[:-1]) | (p_s[1:] != p_s[:-1])
-    gap = np.empty(len(df))
-    gap[0] = np.inf
-    gap[1:] = x_s[1:] - x_s[:-1]
-    new_col = new_group | (gap > COLUMN_GAP_PT)
-    col_s = np.cumsum(new_col)  # global running id
-    # per-group re-base: subtract the group's first id
-    group_id = np.cumsum(new_group)
-    first_col_of_group = np.zeros(group_id.max() + 1, dtype=np.int64)
-    first_idx = np.searchsorted(group_id, np.arange(1, group_id.max() + 1))
-    first_col_of_group[1:] = col_s[first_idx]
-    col_rebased = col_s - first_col_of_group[group_id]
-    col = np.empty(len(df), dtype=np.int64)
-    col[order] = col_rebased
-    df = df.assign(col=col)
-    final = np.lexsort((
-        df["seq"].to_numpy(), df["x"].to_numpy(), -df["y"].to_numpy(),
-        df["col"].to_numpy(), df["page"].to_numpy(), df["doc"].to_numpy(),
-    ))
-    return df.iloc[final]
-
-
-# cheap one-scan triggers: a field family's (expensive, alternation-
-# heavy) findall only runs on documents whose text can possibly match —
-# on real webtext most documents lack '@'/digits/institution words, so
-# the masked form skips most of the per-family regex cost while being
-# observationally identical (a doc without the trigger has no matches)
-_DIGIT_SEARCH_RE = re.compile(r"\d")
-_LINK_TRIGGER_RE = re.compile(r"linkedin\.com|github\.com|https?://")
-_INST_TRIGGER_RE = re.compile(r"niversity|ollege")
-_JOB_TRIGGER_RE = re.compile(
-    r"Engineer|Developer|Manager|Analyst|Consultant|Intern")
-# union of every per-family trigger (plus '@' and \d): ONE scan decides
-# whether a document can match ANY family. On corpus text the all-clear
-# case is the overwhelming majority (measured 100% of ok docs at
-# sf1.0), so this replaces four separate full-text regex scans with
-# one; documents that do hit fall through to the per-family triggers
-# unchanged — observationally identical either way.
-_ANY_TRIGGER_RE = re.compile(
-    r"[@\d]|linkedin\.com|github\.com|https?://|niversity|ollege"
-    r"|Engineer|Developer|Manager|Analyst|Consultant|Intern")
-
-
-def _fields_batch(texts: list[str], headings: list[list[str]]) -> list[dict]:
-    """Batch regex field extraction over the extracted-text list:
-    one cheap trigger scan per family, then the family's compiled
-    findall only over triggered documents."""
-    arr = texts
-    email_find = EMAIL_RE.findall
-    digit_search = _DIGIT_SEARCH_RE.search
-    # one union-trigger scan per doc; only docs that hit pay the
-    # per-family triggers/findalls (none do on plain corpus text)
-    any_trigger = _ANY_TRIGGER_RE.search
-    hits = [any_trigger(s) is not None for s in arr]
-    # one shared empty list for every no-hit cell: nothing downstream
-    # mutates field lists in place (merge_link_uris REBINDS
-    # fields['links']; outlinks/anchors are rebound too), so sharing is
-    # safe and skips ~5 allocations per plain-text doc
-    EMPTY: list = []
-    emails = [
-        sorted(set(email_find(s))) if h and "@" in s else EMPTY
-        for s, h in zip(arr, hits)
-    ]
-
-    def doc_phones(s: str) -> list[str]:
-        found = set()
-        for rx in PHONE_RES:
-            for m in rx.findall(s):
-                c = _PHONE_CLEAN_RE.sub("", m)
-                if len(c) >= 10:
-                    found.add(c)
-        return sorted(found)
-
-    phones = [
-        doc_phones(s) if h and digit_search(s) is not None else EMPTY
-        for s, h in zip(arr, hits)
-    ]
-
-    def doc_links(s: str) -> list[str]:
-        found = set()
-        for rx in LINK_RES:
-            found.update(rx.findall(s))
-        return sorted(found)
-
-    link_trigger = _LINK_TRIGGER_RE.search
-    links = [
-        doc_links(s) if h and link_trigger(s) is not None else EMPTY
-        for s, h in zip(arr, hits)
-    ]
-    names = [oracle.extract_name(s) for s in arr]  # first 5 lines only
-    addresses = [oracle.extract_address(s) for s in arr]  # first 10 lines
-    inst_trigger = _INST_TRIGGER_RE.search
-    inst_find = oracle.INSTITUTION_RE.findall
-    institutions = [
-        sorted(set(inst_find(s))) if h and inst_trigger(s) is not None
-        else EMPTY
-        for s, h in zip(arr, hits)
-    ]
-    job_trigger = _JOB_TRIGGER_RE.search
-    job_find = oracle.JOB_TITLE_RE.findall
-    jobs = [
-        job_find(s) if h and job_trigger(s) is not None else EMPTY
-        for s, h in zip(arr, hits)
-    ]
-    # skills: C substring search per vocab word on the lowered text
-    vocab = oracle.SKILLS_VOCAB
-    skills = [
-        [w for w in vocab if w in s] for s in (t.lower() for t in arr)
-    ]
-    return [
-        {
-            "emails": e, "phones": p, "links": l, "headings": h,
-            "name": nm,
-            "address": addr,
-            "institutions": ins,
-            "positions": [t for t, _ in jb],
-            "companies": [c for _, c in jb],
-            "skills": sk,
-            "outlinks": [],
-            "anchors": [],
-            "meta_robots": "",
-        }
-        for e, p, l, h, nm, addr, ins, jb, sk in zip(
-            emails, phones, links, headings, names, addresses,
-            institutions, jobs, skills,
-        )
-    ]
-
-
-# ---------------------------------------------------------------------------
-# The batch kernel
-# ---------------------------------------------------------------------------
 
 def extract_batch(urls: pd.Series, payloads: pd.Series) -> pd.DataFrame:
-    """(url, html-bytes) batch → full extraction records.
+    """(url, payload-bytes) batch → full extraction records.
 
-    Output columns: url, status, route, extracted_text, spans (list of
-    span dicts), fields (dict), n_pages, n_blocks, elapsed_ms.
+    Output columns: url, status, route, reason, extracted_text, spans
+    (list of span dicts), fields (dict), sections, n_pages, n_blocks,
+    elapsed_ms — one row per input row, in input order. ``elapsed_ms``
+    (``lineage.elapsed_ms`` downstream) times the whole per-document
+    extraction: sniff, transfer decode, parse, classify and fields.
     """
-    n = len(payloads)
-    routes = _sniff_batch(payloads)
-    status = np.full(n, "ok", dtype=object)
-    reasons = np.full(n, None, dtype=object)
-    n_pages = np.zeros(n, dtype=np.int64)
-    elapsed = np.zeros(n, dtype=np.float64)
-
-    # ---- per-doc scans (the unavoidable parser loop) ------------------
-    html_blocks_doc: list[int] = []
-    html_blocks_full: list[str] = []
-    html_blocks_link: list[str] = []
-    html_blocks_kind: list[int] = []
-    pdf_rows: list[tuple] = []  # (doc, page, x, y, seq, text)
-    pdf_link_uris: dict[int, list[str]] = {}  # /Annots + docx rel URIs
-    html_outlinks: dict[int, list[str]] = {}  # <a href> values per doc
-    html_anchors: dict[int, list[str]] = {}   # anchor text per href
-    html_robots: dict[int, str] = {}          # <meta name=robots> content
-    docx_spans: dict[int, list[dict]] = {}
-
-    payload_arr = payloads.to_numpy()
-    for i in range(n):
-        r = routes[i]
-        t0 = time.perf_counter()
-        try:
-            if r == "html":
-                doc_blocks, doc_hrefs, doc_anchors, doc_robots = (
-                    _scan_html_doc(
-                        oracle._decode_transfer_html(payload_arr[i])))
-                for full, link, kind in doc_blocks:
-                    html_blocks_doc.append(i)
-                    html_blocks_full.append(full)
-                    html_blocks_link.append(link)
-                    html_blocks_kind.append(kind)
-                if doc_hrefs:
-                    html_outlinks[i] = doc_hrefs
-                    html_anchors[i] = doc_anchors
-                if doc_robots:
-                    html_robots[i] = doc_robots
-                n_pages[i] = 1
-            elif r == "docx":
-                # shared per-doc XML parse (structure-bound like the PDF
-                # page walk; sharing oracle.extract_docx_full prevents
-                # drift); gzip transfer layer decoded like html/pdf
-                _dx_text, dx_spans, dx_links = oracle.extract_docx_full(
-                    oracle._decode_transfer(payload_arr[i]))
-                docx_spans[i] = dx_spans
-                if dx_links:
-                    pdf_link_uris[i] = dx_links
-                n_pages[i] = 1
-            elif r == "pdf":
-                shows, np_pages, uris = _scan_pdf_doc(
-                    oracle._decode_transfer(payload_arr[i]))
-                n_pages[i] = np_pages
-                if uris:
-                    pdf_link_uris[i] = uris
-                for seq, s in enumerate(shows):
-                    pdf_rows.append((i, s["page"], s["x"], s["y"], seq,
-                                     s["text"]))
-            else:
-                status[i] = "parse_failure"
-                reasons[i] = "unknown_route"
-        except Exception as e:
-            status[i] = "parse_failure"
-            reasons[i] = oracle.fail_reason(e)
-            n_pages[i] = 0
-        elapsed[i] = (time.perf_counter() - t0) * 1000.0
-
-    # ---- batch classification: HTML ----------------------------------
-    # preallocated per-doc lists (direct index, no dict hashing /
-    # setdefault churn — the assembly glue measured ~24% of kernel CPU)
-    spans_per_doc: list[list[dict]] = [[] for _ in range(n)]
-    content_text: list[list[str]] = [[] for _ in range(n)]
-    headings_per_doc: list[list[str]] = [[] for _ in range(n)]
-
-    for doc, sp in docx_spans.items():
-        if status[doc] != "ok":
-            continue
-        spans_per_doc[doc] = sp
-        content_text[doc] = [s["text"] for s in sp]
-
-    if html_blocks_doc:
-        hb_docs, hb_texts, hb_kinds = _classify_html_blocks(
-            html_blocks_doc, html_blocks_full, html_blocks_link,
-            html_blocks_kind,
-        )
-        content_kinds = CONTENT_KINDS
-        for doc, text, kind in zip(hb_docs, hb_texts, hb_kinds):
-            sp = spans_per_doc[doc]
-            sp.append({
-                "page": 0, "block": len(sp),
-                "x0": 0.0, "y0": 0.0, "x1": 0.0, "y1": 0.0,
-                "kind": kind, "text": text,
-            })
-            if kind in content_kinds:
-                content_text[doc].append(text)
-            if kind == "heading":
-                headings_per_doc[doc].append(text)
-
-    # ---- batch ordering: PDF ------------------------------------------
-    if pdf_rows:
-        pdf_df = pd.DataFrame(
-            pdf_rows, columns=["doc", "page", "x", "y", "seq", "text"]
-        )
-        # cluster/sort over ALL shows (oracle does), then drop empties
-        ordered = _order_pdf_shows(pdf_df)
-        ordered = ordered.assign(text=ordered["text"].str.strip())
-        ordered = ordered[ordered["text"].str.len() > 0]
-        for doc, page, x, y, text in zip(
-            ordered["doc"].tolist(), ordered["page"].tolist(),
-            ordered["x"].tolist(), ordered["y"].tolist(),
-            ordered["text"].tolist(),
-        ):
-            sp = spans_per_doc[doc]
-            sp.append({
-                "page": int(page), "block": len(sp),
-                "x0": float(x), "y0": float(y),
-                "x1": float(x), "y1": float(y),
-                "kind": "block", "text": text,
-            })
-            content_text[doc].append(text)
-
-    # ---- assemble ------------------------------------------------------
-    ok_mask = status == "ok"
-    text_list = [
-        "\n".join(content_text[i]) if ok_mask[i] else ""
-        for i in range(n)
-    ]
-    # OCR-budget split (shared with oracle.extract_document): a PDF
-    # that parsed but shows NO text is not an 'ok' empty row — it is
-    # raster_only (image XObject declared; the OCR addressable market)
-    # or no_text_layer. Must run before spans/sections/fields, which
-    # key off status.
-    for i in range(n):
-        if routes[i] == "pdf" and status[i] == "ok" and not text_list[i]:
-            status[i] = "parse_failure"
-            reasons[i] = oracle.classify_pdf_no_text(payload_arr[i])
-    ok = (status == "ok").tolist()  # post-OCR-budget status, as a list
-    headings = [headings_per_doc[i] if ok[i] else [] for i in range(n)]
-    spans = [spans_per_doc[i] if ok[i] else [] for i in range(n)]
-    # shared per-doc section fold (measured ~1% of batch time; a
-    # reuse-the-joined-text fast path was tried and was SLOWER)
-    sections_of = oracle.sections_from_spans
-    sections = [sections_of(sp) if ok[i] else []
-                for i, sp in enumerate(spans)]
-    # fields as a plain list of dicts: index updates below were pandas
-    # .iloc lookups before (measured in the profile), now direct
-    fields = _fields_batch(text_list, headings)
-    for i, uris in pdf_link_uris.items():
-        if ok[i]:
-            oracle.merge_link_uris(fields[i], uris)
-    for i, hrefs in html_outlinks.items():
-        if ok[i]:
-            fields[i]["outlinks"] = hrefs
-            fields[i]["anchors"] = html_anchors[i]
-    for i, robots in html_robots.items():
-        if ok[i]:
-            fields[i]["meta_robots"] = robots
-    empty_fields = oracle.EMPTY_FIELDS
-    fields = [f if ok[i] else dict(empty_fields)
-              for i, f in enumerate(fields)]
-    n_pages = np.where(status == "ok", n_pages, 0)
+    records = []
+    elapsed = []
+    clock = time.perf_counter
+    extract = oracle.extract_document
+    for data in payloads:
+        t0 = clock()
+        records.append(extract(data))
+        elapsed.append((clock() - t0) * 1000.0)
     return pd.DataFrame({
         "url": urls.to_numpy(),
-        "status": status,
-        "route": routes,
-        "reason": reasons,
-        "extracted_text": text_list,
-        "spans": spans,
-        "fields": fields,
-        "sections": sections,
-        "n_pages": n_pages,
-        "n_blocks": np.array([len(s) for s in spans], dtype=np.int64),
-        "elapsed_ms": elapsed,
+        "status": [r["status"] for r in records],
+        "route": [r["route"] for r in records],
+        "reason": [r["reason"] for r in records],
+        "extracted_text": [r["extracted_text"] for r in records],
+        "spans": [r["spans"] for r in records],
+        "fields": [r["fields"] for r in records],
+        "sections": [r["sections"] for r in records],
+        "n_pages": np.array([r["n_pages"] for r in records], dtype=np.int64),
+        "n_blocks": np.array([r["n_blocks"] for r in records],
+                             dtype=np.int64),
+        "elapsed_ms": np.array(elapsed, dtype=np.float64),
     })

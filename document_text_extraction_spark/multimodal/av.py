@@ -32,9 +32,7 @@ Fixture encoders (``encode_wav``, ``encode_avi_mjpeg``) emit minimal
 valid containers so every decode path is exercised by self-produced
 bytes, the same policy as the PNG/JPEG fixtures.
 
-Reference parity: the reference's media handling delegates to
-OpenCV's VideoCapture/imread (combined_local_model_ocr.py); this repo
-keeps decode inside the Arrow batch with no native dependency.
+Decode stays inside the Arrow batch with no native dependency.
 """
 
 from __future__ import annotations

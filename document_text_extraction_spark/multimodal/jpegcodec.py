@@ -43,10 +43,8 @@ encode (``encode_jpeg``)
 
 Everything is deterministic: fixed tables, float64 arithmetic,
 round-half-away-from-zero at the two lossy points. Golden-pinned in
-tests/test_media_jpeg.py. Reference parity target: the reference
-pipeline hands JPEG decode to OpenCV/fitz raster paths
-(combined_local_model_ocr.py); this repo keeps decode inside the
-Arrow batch with no native dependency.
+tests/test_media_jpeg.py. Decode stays inside the Arrow batch with no
+native dependency.
 """
 
 from __future__ import annotations

@@ -4,10 +4,8 @@ A polite crawler fetches one URL per host per politeness interval
 (RFC 9309 ``Crawl-delay``, default courtesy delay otherwise), so the
 frontier's job is: within each host, order candidates by priority and
 assign each its fetch slot; slot × delay = the earliest time the fetch
-may start.  The reference has no crawler (single-shot folder walks,
-``/root/reference/hybrid_cv_parser.py:33-60``); this is the scheduling
-operator the robots.txt protocol layer (:mod:`.robots`, Crawl-delay
-parsing) feeds at web scale.
+may start.  This is the scheduling operator the robots.txt protocol
+layer (:mod:`.robots`, Crawl-delay parsing) feeds at web scale.
 
 Scale shape: ONE hash shuffle on the host.  ``row_number`` over a host
 window is the textbook plan, but a window's partition runs in a single

@@ -26,9 +26,8 @@ Spark shape:
   exactly representable for any practical ``k``, and a single division
   is deterministic IEEE-754 in both engines.
 
-Reference analogue: none (single-machine reference); this generalizes
-the counter sinks (``main_pipeline.py`` success/failure tallies) to
-the pre-aggregable form a 1000-executor metrics cube needs.
+This generalizes per-run success/failure tallies to the
+pre-aggregable form a 1000-executor metrics cube needs.
 """
 
 from __future__ import annotations

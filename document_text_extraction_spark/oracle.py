@@ -4,8 +4,9 @@ Role: the analogue of the reference repo's committed golden outputs
 (``/root/reference/extracted_regions_final.txt``,
 ``grid_analysis_v4_results.csv`` …) — every Spark execution path must match
 this module **byte-identically per url** at every scale and parallelism
-(SURVEY.md §5).  It is deliberately simple, sequential, per-document code;
-the vectorized batch form lives in ``kernels.py``.
+(SURVEY.md §5).  It is the only implementation of the extraction map:
+``kernels.extract_batch`` calls :func:`extract_document` once per
+document inside ``mapInPandas``.
 
 Semantics kept from the reference (the "what", SURVEY.md §7.1):
 
@@ -156,7 +157,7 @@ def _transcode_meta_charset(data: bytes) -> bytes:
 # (c) small common-hanzi sets breaking the GBK/Big5 tie (both decode
 # each other's bytes as valid CJK; only the right one hits the
 # frequent simplified/traditional characters). Pure byte/str functions
-# — kernel and oracle share this code path via _decode_transfer_html.
+# — every HTML payload reaches them via _decode_transfer_html.
 # ---------------------------------------------------------------------------
 
 _COMMON_SIMP = set("这们个来为时后么没于还发过学对里着会国说经现点业"
@@ -300,7 +301,7 @@ _DECL_RE = re.compile(rb"<![^>]*>")  # <!DOCTYPE ...> and other declarations
 _SCRIPT_RE = re.compile(rb"<script\b.*?</script\s*>", re.S | re.I)
 _STYLE_RE = re.compile(rb"<style\b.*?</style\s*>", re.S | re.I)
 # quote-aware: a '>' inside "..." or '...' attribute values does not end
-# the tag; exactly 3 capture groups (the split-based kernel scanner
+# the tag; exactly 3 capture groups (extract_html_full's split walk
 # strides on that shape)
 _TAG_RE = re.compile(
     # attrs: runs of plain chars are one possessive gulp instead of the
@@ -318,8 +319,7 @@ _WS_RE = re.compile(r"\s+")
 def _norm_ws(s: str) -> str:
     # ≡ _WS_RE.sub(" ", s).strip(): sre \s and str.isspace() share the
     # same Unicode whitespace table, and the C-level split/join is
-    # ~3.5x faster than the regex sub (same equivalence note as the
-    # kernel's block normalizer; guarded by the oracle-parity tests)
+    # ~3.5x faster than the regex sub
     return " ".join(s.split())
 
 
@@ -352,9 +352,8 @@ def extract_html_full(data: bytes) -> tuple[str, list[dict],
     whitespace-normalized visible text of outlinks[i]'s element (the
     anchor-text-index input; text attributes to the innermost OPEN
     href-bearing anchor, and an anchor left unclosed keeps collecting
-    until end of document — tolerated identically here and in the
-    batch kernel), and meta_robots is the lowercased content of the
-    first ``<meta name=robots>`` tag ('' if absent) — the
+    until end of document), and meta_robots is the lowercased content
+    of the first ``<meta name=robots>`` tag ('' if absent) — the
     crawl-hygiene directive (noindex/nofollow) a pipeline must honor.
     """
     raw = _COMMENT_RE.sub(b" ", data)
@@ -370,71 +369,82 @@ def extract_html_full(data: bytes) -> tuple[str, list[dict],
     meta_robots = ""
     boiler_depth = 0
     link_depth = 0
-    base_kind = "text"            # kind hint from the opening block tag
-    pieces: list[tuple[str, bool, bool]] = []   # (text, in_link, in_boiler)
+    base_kind = "main"            # kind hint from the opening block tag
+    pieces: list[str] = []        # raw text of the open block
+    link_pieces: list[str] = []   # the part of it inside <a>
+    any_boiler = False            # any piece under a boilerplate container
 
-    def flush() -> None:
-        nonlocal pieces, base_kind
-        if not pieces:
-            return
-        full = _norm_ws("".join(p[0] for p in pieces))
-        if not full:
-            pieces = []
-            return
-        link_chars = len(_norm_ws("".join(p[0] for p in pieces if p[1])))
-        any_boiler = any(p[2] for p in pieces)
-        density = link_chars / len(full)
-        if any_boiler or density > LINK_DENSITY_MAX:
-            kind = "boilerplate"
-        elif base_kind == "heading":
-            kind = "heading"
-        elif base_kind == "list_item":
-            kind = "list_item"
-        else:
-            kind = "main"
-        spans.append({
-            "page": 0, "block": len(spans),
-            "x0": 0.0, "y0": 0.0, "x1": 0.0, "y1": 0.0,
-            "kind": kind, "text": full,
-        })
-        pieces = []
-
-    pos = 0
-    for m in _TAG_RE.finditer(doc):
-        txt = doc[pos : m.start()]
+    # hot loop: split once (C-level), then walk the [text, closing, name,
+    # attrs] strides — 3 capture groups always yield 4k+1 parts. A
+    # closing </p> sentinel after the final text segment flushes the
+    # last block inside the loop. Locals and prebound sets beat
+    # finditer+group by ~30%, the strided zip beats index arithmetic by
+    # ~15%.
+    parts = _TAG_RE.split(doc)
+    unescape = _htmllib.unescape
+    block_tags, boiler_tags, heading_tags = (
+        BLOCK_TAGS, BOILER_CONTAINERS, HEADING_TAGS)
+    for txt, closing, name, attrs in zip(
+            parts[::4], parts[1::4] + ["/"], parts[2::4] + ["p"],
+            parts[3::4] + [""]):
         if txt:
-            t = _htmllib.unescape(txt)
+            # most pieces carry no entity; skip the call for those
+            t = unescape(txt) if "&" in txt else txt
             if t:
-                pieces.append((t, link_depth > 0, boiler_depth > 0))
-                if link_depth > 0 and astack:
-                    anchor_pieces[astack[-1][0]].append(t)
-        closing, name = m.group(1), m.group(2).lower()
-        if name in BLOCK_TAGS:
-            flush()
-            if not closing:
-                if name in HEADING_TAGS:
-                    base_kind = "heading"
-                elif name == "li":
-                    base_kind = "list_item"
-                else:
-                    base_kind = "text"
+                pieces.append(t)
+                if link_depth > 0:
+                    link_pieces.append(t)
+                    if astack:
+                        anchor_pieces[astack[-1][0]].append(t)
+                if boiler_depth > 0:
+                    any_boiler = True
+        if not name.islower():   # tag names are already lowercase on
+            name = name.lower()  # real pages; skip the allocation
+        if name in block_tags:
+            if pieces:
+                full = _norm_ws("".join(pieces))
+                if full:
+                    kind = base_kind
+                    if any_boiler:
+                        kind = "boilerplate"
+                    elif link_pieces:
+                        # normalized link-text length = token lengths
+                        # plus one gap between each pair, with no join
+                        toks = "".join(link_pieces).split()
+                        if toks and ((sum(map(len, toks)) + len(toks) - 1)
+                                     / len(full) > LINK_DENSITY_MAX):
+                            kind = "boilerplate"
+                    spans.append({
+                        "page": 0, "block": len(spans),
+                        "x0": 0.0, "y0": 0.0, "x1": 0.0, "y1": 0.0,
+                        "kind": kind, "text": full,
+                    })
+                pieces = []
+                link_pieces = []
+                any_boiler = False
+            if not closing and name in heading_tags:
+                base_kind = "heading"
+            elif not closing and name == "li":
+                base_kind = "list_item"
             else:
-                base_kind = "text"
-        if name in BOILER_CONTAINERS:
+                base_kind = "main"
+        if name in boiler_tags:
             if closing:
-                boiler_depth = max(0, boiler_depth - 1)
+                if boiler_depth > 0:
+                    boiler_depth -= 1
             else:
                 boiler_depth += 1
         elif name == "a":
             if closing:
                 if astack and astack[-1][1] == link_depth:
                     astack.pop()
-                link_depth = max(0, link_depth - 1)
+                if link_depth > 0:
+                    link_depth -= 1
             else:
                 link_depth += 1
-                hm = _HREF_RE.search(m.group(3))
+                hm = _HREF_RE.search(attrs)
                 if hm is not None:
-                    href = _htmllib.unescape(
+                    href = unescape(
                         hm.group(1) or hm.group(2) or hm.group(3) or "")
                     if href:
                         outlinks.append(href)
@@ -442,21 +452,12 @@ def extract_html_full(data: bytes) -> tuple[str, list[dict],
                         astack.append((len(anchor_pieces) - 1,
                                        link_depth))
         elif (name == "meta" and not closing and not meta_robots
-                and _META_NAME_ROBOTS_RE.search(m.group(3))):
-            cm = _META_CONTENT_RE.search(m.group(3))
+                and _META_NAME_ROBOTS_RE.search(attrs)):
+            cm = _META_CONTENT_RE.search(attrs)
             if cm is not None:
-                meta_robots = _htmllib.unescape(
+                meta_robots = unescape(
                     cm.group(1) or cm.group(2) or cm.group(3) or ""
                 ).lower()
-        pos = m.end()
-    tail = doc[pos:]
-    if tail:
-        t = _htmllib.unescape(tail)
-        if t:
-            pieces.append((t, link_depth > 0, boiler_depth > 0))
-            if link_depth > 0 and astack:
-                anchor_pieces[astack[-1][0]].append(t)
-    flush()
 
     text = "\n".join(s["text"] for s in spans if s["kind"] in CONTENT_KINDS)
     anchors = [_norm_ws("".join(ps)) for ps in anchor_pieces]
@@ -1320,8 +1321,7 @@ def _apply_page_rotation(shows: list[dict], rotate: int,
 
 def merge_link_uris(fields: dict, uris: list[str]) -> dict:
     """Fold annotation URIs into the regex-found ``fields['links']``
-    (sorted distinct union) — shared by the oracle and the batch kernel
-    so the merge cannot drift."""
+    (sorted distinct union)."""
     if uris:
         fields["links"] = sorted(set(fields["links"]).union(uris))
     return fields
@@ -2022,6 +2022,22 @@ def extract_address(text: str) -> str:
     return ""
 
 
+# cheap one-scan triggers: a field family's (expensive, alternation-
+# heavy) findall only runs on text that can possibly match it — a text
+# without the trigger has no matches, so the gate is observationally
+# identical. _ANY_TRIGGER_RE is the union of every family's trigger:
+# on corpus text the all-clear case is the overwhelming majority, so
+# one scan replaces the per-family scans for most documents.
+_DIGIT_SEARCH_RE = re.compile(r"\d")
+_LINK_TRIGGER_RE = re.compile(r"linkedin\.com|github\.com|https?://")
+_INST_TRIGGER_RE = re.compile(r"niversity|ollege")
+_JOB_TRIGGER_RE = re.compile(
+    r"Engineer|Developer|Manager|Analyst|Consultant|Intern")
+_ANY_TRIGGER_RE = re.compile(
+    r"[@\d]|linkedin\.com|github\.com|https?://|niversity|ollege"
+    r"|Engineer|Developer|Manager|Analyst|Consultant|Intern")
+
+
 def extract_fields(text: str, spans: list[dict]) -> dict:
     """Typed field families from extracted text (reference regexes:
     emails ``final.py:199-200``, phones ``final.py:202-212`` with
@@ -2029,18 +2045,26 @@ def extract_fields(text: str, spans: list[dict]) -> dict:
     ``approach4_v2.py:27-37``, institutions ``final.py:290-299``,
     positions/companies ``final.py:326-334`` in match order — pairing
     preserved for the zip-join, O19)."""
-    emails = sorted(set(EMAIL_RE.findall(text)))
+    hit = _ANY_TRIGGER_RE.search(text) is not None
+    emails = (sorted(set(EMAIL_RE.findall(text)))
+              if hit and "@" in text else [])
     phones = set()
-    for rx in PHONE_RES:
-        for m in rx.findall(text):
-            cleaned = _PHONE_CLEAN_RE.sub("", m)
-            if len(cleaned) >= 10:
-                phones.add(cleaned)
+    if hit and _DIGIT_SEARCH_RE.search(text) is not None:
+        for rx in PHONE_RES:
+            for m in rx.findall(text):
+                cleaned = _PHONE_CLEAN_RE.sub("", m)
+                if len(cleaned) >= 10:
+                    phones.add(cleaned)
     links = set()
-    for rx in LINK_RES:
-        links.update(rx.findall(text))
+    if hit and _LINK_TRIGGER_RE.search(text) is not None:
+        for rx in LINK_RES:
+            links.update(rx.findall(text))
+    institutions = (sorted(set(INSTITUTION_RE.findall(text)))
+                    if hit and _INST_TRIGGER_RE.search(text) is not None
+                    else [])
+    jobs = (JOB_TITLE_RE.findall(text)
+            if hit and _JOB_TRIGGER_RE.search(text) is not None else [])
     headings = [s["text"] for s in spans if s["kind"] == "heading"]
-    jobs = JOB_TITLE_RE.findall(text)
     low = text.lower()
     return {
         "emails": emails,
@@ -2049,7 +2073,7 @@ def extract_fields(text: str, spans: list[dict]) -> dict:
         "headings": headings,
         "name": extract_name(text),
         "address": extract_address(text),
-        "institutions": sorted(set(INSTITUTION_RE.findall(text))),
+        "institutions": institutions,
         "positions": [p for p, _ in jobs],
         "companies": [c for _, c in jobs],
         "skills": [w for w in SKILLS_VOCAB if w in low],
@@ -2121,8 +2145,7 @@ def sections_from_spans(spans: list[dict]) -> list[dict]:
 
 
 def fail_reason(exc: Exception) -> str:
-    """Stable failure-class code for ``lineage.reason`` (shared by the
-    oracle and the batch kernel so the two cannot drift)."""
+    """Stable failure-class code for ``lineage.reason``."""
     import zlib
     if isinstance(exc, PdfParseError):
         return exc.code
@@ -2142,7 +2165,7 @@ def classify_pdf_no_text(data: bytes) -> str:
     address — the addressable market), else ``no_text_layer`` (a
     text-capable page with an empty layer). The image declaration
     lives in a plain object dict (never inside a compressed stream),
-    so one bounded byte regex suffices and both engines share it."""
+    so one bounded byte regex suffices."""
     try:
         data = _decode_transfer(bytes(data))
     except Exception:

@@ -1,10 +1,11 @@
-"""The Spark extraction job: read → salted bucket shuffle → vectorized
+"""The Spark extraction job: read → salted bucket shuffle → Arrow-batch
 map → partitioned, checkpoint-resumable write with per-partition counters.
 
 Physical shape (SURVEY.md §4):
 
 * **one** wide stage: ``mapInPandas(kernels.extract_batch)`` over
   ``(url, html)`` — Catalyst prunes the scan to exactly those columns;
+  each batch runs ``oracle.extract_document`` once per document;
 * explicit bucketing: ``part_bucket = pmod(xxhash64(host(url)),
   n_buckets)`` — the url's HOST, not the full url, so a site's pages
   stay co-located (see :func:`bucket_col`). The output table is
@@ -136,7 +137,7 @@ _HOST_PATTERN = r"https?://([^/]+)"
 
 def _extract_iter(batches: Iterator[pd.DataFrame],
                   with_rollup: bool = False) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: vectorized kernel + lineage assembly.
+    """mapInPandas body: batch extraction + lineage assembly.
 
     ``with_rollup``: the last row of every emitted batch additionally
     carries a ``part_rollup`` struct summing that batch's counters

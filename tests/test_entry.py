@@ -67,6 +67,26 @@ def test_query_vs_oracle(spark, ddb, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
 
+def test_entry_imports_package_from_its_own_checkout():
+    """The driver contract must extract with the package that sits
+    next to ``__spark_entry__.py``, not one at a fixed path. A fresh
+    interpreter imports the entry module first, so no package copy is
+    cached from elsewhere."""
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.abspath(entry_mod.__file__))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import __spark_entry__, document_text_extraction_spark as p; "
+         "print(__spark_entry__.__file__); print(p.__file__)"],
+        cwd=os.path.dirname(root), env={**os.environ, "PYTHONPATH": root},
+        capture_output=True, text=True, check=True).stdout.split("\n")
+    entry_file, pkg_file = out[0], out[1]
+    entry_root = os.path.dirname(os.path.abspath(entry_file))
+    assert entry_root == root
+    assert os.path.abspath(pkg_file).startswith(entry_root + os.sep)
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

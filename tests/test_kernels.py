@@ -1,5 +1,7 @@
-"""Property: the vectorized batch kernel is byte-identical to the
-per-document oracle over mixed batches (FIXTURES.md §5 ``batch_equivalence``).
+"""The Arrow-batch boundary: ``kernels.extract_batch`` keeps row order
+and url alignment, emits the full column set (also for an empty batch)
+and carries ``oracle.extract_document``'s record for every row
+(FIXTURES.md §5 ``batch_equivalence``).
 """
 
 import pandas as pd

@@ -81,6 +81,42 @@ def test_html_link_dense_block_dropped():
     assert text == "real content stays here now"
 
 
+@pytest.mark.parametrize("doc,kinds,outlinks,anchors", [
+    # stray closers before any opener: depths clamp at 0, so the later
+    # <nav> still marks boilerplate and the later anchor still counts
+    # as link text (a -1 depth would leave both at 0)
+    (b"</nav></a><nav><p>menu entry words</p></nav>"
+     b"<div><a href='/x'>all linked words</a></div><p>body text</p>",
+     [("boilerplate", "menu entry words"),
+      ("boilerplate", "all linked words"), ("main", "body text")],
+     ["/x"], ["all linked words"]),
+    # link density exactly LINK_DENSITY_MAX (7 of 20 chars) stays main
+    (b"<p><a href='/l'>abcdefg</a> hijklmnopqrs</p>",
+     [("main", "abcdefg hijklmnopqrs")], ["/l"], ["abcdefg"]),
+    # whitespace- and entity-only blocks are dropped
+    (b"<p> \n\t </p><p>&nbsp;&#32;</p><li>&#x20;</li><p>kept</p>",
+     [("main", "kept")], [], []),
+    # an unclosed anchor collects text to the end of the document
+    (b"<p>plain words before the <a href='/u'>open anchor</p> <p>more text",
+     [("main", "plain words before the open anchor"),
+      ("boilerplate", "more text")],
+     ["/u"], ["open anchor more text"]),
+    # tag names are case-insensitive
+    (b"<H2>Upper Title</H2><P>body <A HREF='/up'>x</A> words here</P>"
+     b"<NAV>menu</NAV><LI>item</LI>",
+     [("heading", "Upper Title"), ("main", "body x words here"),
+      ("boilerplate", "menu"), ("list_item", "item")],
+     ["/up"], ["x"]),
+])
+def test_html_block_edge_cases(doc, kinds, outlinks, anchors):
+    text, spans, got_links, got_anchors, _ = oracle.extract_html_full(doc)
+    assert [(s["kind"], s["text"]) for s in spans] == kinds
+    assert [s["block"] for s in spans] == list(range(len(kinds)))
+    assert text == "\n".join(t for k, t in kinds if k != "boilerplate")
+    assert got_links == outlinks
+    assert got_anchors == anchors
+
+
 # ---------------------------------------------------------------------------
 # PDF
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
-"""Hypothesis property tests: the vectorized kernel equals the oracle on
-*arbitrary* byte inputs (not just generator output), and core kernels
-hold their invariants under adversarial structure."""
+"""Hypothesis property tests: the batch boundary carries the oracle's
+record on *arbitrary* byte inputs (not just generator output), and core
+kernels hold their invariants under adversarial structure."""
 
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
