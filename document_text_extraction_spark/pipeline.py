@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import kernels
+from . import kernels, shipping
 from .oracle import PARSER_VERSION
 
 SPAN_TYPE = T.StructType([
@@ -143,6 +143,7 @@ def _extract_iter(batches: Iterator[pd.DataFrame],
     carries a ``part_rollup`` struct summing that batch's counters
     (docs/bytes/failures/elapsed for this task partition) — the payload
     the resumable runner's ``observe`` collects during the write."""
+    shipping.drop_zip_importers()  # spares the next task a re-read
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else -1
     for b in batches:
@@ -204,14 +205,30 @@ def bucket_col(n_buckets: int) -> F.Column:
 def bucket_byte_stats(pages: DataFrame, n_buckets: int) -> dict[int, int]:
     """ONE cheap pre-aggregation: payload bytes per bucket. Feeds both
     the salting plan and the per-slice shuffle sizing in the resumable
-    runner (one corpus scan, two consumers)."""
-    stats = (
-        pages.select(bucket_col(n_buckets).alias("b"),
-                     F.length("html").alias("sz"))
-        .groupBy("b").agg(F.sum("sz").alias("bytes"))
-        .collect()
-    )
-    return {r["b"]: (r["bytes"] or 0) for r in stats}
+    runner (one corpus scan, two consumers).
+
+    If ``pages`` carries a stored ``part_bucket`` column, the same
+    aggregation groups by (recomputed bucket, stored bucket) and so
+    checks every row's stored bucket: any disagreement raises a
+    ``ValueError``."""
+    keys = [bucket_col(n_buckets).alias("b")]
+    stored = "part_bucket" in pages.columns
+    if stored:
+        keys.append(F.col("part_bucket").alias("s"))
+    rows = pages.groupBy(*keys).agg(
+        F.sum(F.length("html")).alias("bytes"),
+        F.count(F.lit(1)).alias("n")).collect()
+    bad = [r for r in rows if r["s"] != r["b"]] if stored else []
+    if bad:
+        raise ValueError(
+            f"input's part_bucket layout disagrees with n_buckets="
+            f"{n_buckets} on {sum(r['n'] for r in bad)} rows — "
+            "re-materialize with prepare_bucketed_input(..., n_buckets="
+            f"{n_buckets}) or pass the layout's bucket count")
+    stats: dict[int, int] = {}
+    for r in rows:
+        stats[r["b"]] = stats.get(r["b"], 0) + (r["bytes"] or 0)
+    return stats
 
 
 def plan_salting(pages: DataFrame, n_buckets: int,
@@ -500,51 +517,20 @@ def run_extraction(
         for s in range(0, n_buckets, slice_buckets)
     ]
     # idempotent-resume fast path: a fully-committed run must be a
-    # metadata no-op — without this check the layout probe and salting
-    # pre-pass below would re-scan the corpus (twice, at 100 TB) just
-    # to skip every slice
+    # metadata no-op — without this check the stats pre-pass below
+    # would re-scan the corpus (at 100 TB) just to skip every slice
     if all(manifest["slices"].get(str(si), {}).get("committed")
            for si in range(len(slices))):
         return manifest
 
-    if "part_bucket" in pages.columns:
-        # the stored bucket layout MUST match this run's n_buckets:
-        # slices trust the partition column for pruning, so a table
-        # bucketed with a different modulus M would silently drop (or
-        # misfile) rows. Two checks, both cheap: (1) the partition
-        # VALUES must fit 0..n_buckets-1 (catches M > N outright);
-        # (2) a row probe inside the HIGHEST partition — for any M ≠ N
-        # that partition's recomputed buckets disagree for most rows
-        # (for M a multiple of N a naive limit() probe can land
-        # entirely in low partitions where stored == recomputed and
-        # pass wrongly; the max partition can't).
-        vals = [r[0] for r in
-                pages.select("part_bucket").distinct().collect()]
-        if vals:
-            if max(vals) >= n_buckets or min(vals) < 0:
-                raise ValueError(
-                    f"input's part_bucket values span {min(vals)}.."
-                    f"{max(vals)} but the run uses n_buckets="
-                    f"{n_buckets} — re-materialize with "
-                    "prepare_bucketed_input(..., n_buckets="
-                    f"{n_buckets}) or pass the layout's bucket count")
-            probe_v = max(vals)
-            bad = (
-                pages.filter(F.col("part_bucket") == probe_v).limit(256)
-                .filter(F.col("part_bucket") != bucket_col(n_buckets))
-                .count()
-            )
-            if bad:
-                raise ValueError(
-                    f"input's part_bucket layout disagrees with "
-                    f"n_buckets={n_buckets} on {bad}/256 rows probed "
-                    f"in partition {probe_v} — re-materialize with "
-                    "prepare_bucketed_input(..., n_buckets="
-                    f"{n_buckets}) or pass the layout's bucket count")
-
     # ONE stats pre-pass for the whole run (cheap groupBy over sizes);
     # it feeds BOTH the salting plan and per-slice shuffle sizing, so
-    # every slice's plan derives from the same single corpus scan.
+    # every slice's plan derives from the same single corpus scan. On a
+    # bucketed input it also checks the stored layout on EVERY row:
+    # slices trust part_bucket for partition pruning, so a table
+    # bucketed with another modulus, or a row filed under the wrong
+    # bucket, would silently be dropped, misfiled or wiped by a slice's
+    # redo. A mismatch raises ValueError before any slice runs.
     stats = bucket_byte_stats(pages, n_buckets)
     # the salt grain (bytes of payload per placement sub-key) is a
     # deployment knob — the 8MB default targets ~2 core-seconds per

@@ -6,9 +6,10 @@ non-dirty re-verifications."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.test_registry_rotation import (  # noqa: E402
     _RUNS_EXTRACTION,

@@ -16,10 +16,11 @@ per-class divergence table (the LIMITS.md §2 numbers).
 from __future__ import annotations
 
 import random
+import os
 import sys
 from html.parser import HTMLParser
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from document_text_extraction_spark import oracle  # noqa: E402
 

@@ -87,6 +87,27 @@ def test_entry_imports_package_from_its_own_checkout():
     assert os.path.abspath(pkg_file).startswith(entry_root + os.sep)
 
 
+def test_no_script_hardcodes_the_checkout_path():
+    """Scripts and tests find the package and run subprocesses from
+    their own checkout: no ``jobs/*.py`` or ``tests/*.py`` file names the
+    checkout's absolute path, or puts any absolute literal on
+    ``sys.path`` or in a subprocess ``cwd``."""
+    import glob
+    import re
+    root = os.path.dirname(os.path.abspath(entry_mod.__file__))
+    literal = re.compile(rf"""["']{re.escape(root)}["'/]""")
+    fixed = re.compile(
+        r"""(?:sys\.path\.(?:insert|append)\([^)]*|cwd\s*=\s*)["']/""")
+    bad = []
+    for sub in ("jobs", "tests"):
+        for path in sorted(glob.glob(os.path.join(root, sub, "*.py"))):
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            if literal.search(src) or fixed.search(src):
+                bad.append(os.path.relpath(path, root))
+    assert not bad, bad
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -110,7 +110,7 @@ def test_run_extract_cli(tmp_path):
         [sys.executable, "jobs/run_extract.py", "--synth", "200",
          "--output", out_dir, "--buckets", "8", "--slice-buckets", "4"],
         capture_output=True, text=True, timeout=420, env=env,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert p.returncode == 0, p.stderr[-2000:]
     summary = json.loads(p.stdout.strip().splitlines()[-1])

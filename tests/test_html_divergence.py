@@ -5,9 +5,10 @@ pathological-markup class, this fails with the class name."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jobs.html_divergence import CLASSES, measure  # noqa: E402
 

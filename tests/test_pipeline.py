@@ -166,6 +166,32 @@ def test_run_extraction_rejects_mismatched_bucket_layout(spark, pages,
                                 slice_buckets=8, salt=False)
 
 
+def test_run_extraction_rejects_misfiled_rows(spark, pages, tmp_path):
+    """A bucketed input with the right modulus but a few rows of a LOW
+    partition filed under another slice's bucket: a probe of the highest
+    partition sees nothing wrong, and the slices would then lose those
+    rows or crash renaming their output over a committed bucket.
+    run_extraction checks every row, so it refuses the input."""
+    stored = spark.read.parquet(pipeline.prepare_bucketed_input(
+        pages, str(tmp_path / "b8"), n_buckets=8))
+    parts = sorted(r[0] for r in
+                   stored.select("part_bucket").distinct().collect())
+    low, other = parts[0], parts[-2]
+    assert low // 2 != other // 2  # different slices at slice_buckets=2
+    urls = [r[0] for r in stored.filter(F.col("part_bucket") == low)
+            .select("url").orderBy("url").limit(3).collect()]
+    assert len(urls) == 3
+    misfiled = str(tmp_path / "misfiled")
+    (stored.withColumn("part_bucket", F.when(
+        F.col("url").isin(urls), F.lit(other)).otherwise(
+        F.col("part_bucket")))
+     .write.partitionBy("part_bucket").parquet(misfiled))
+    with pytest.raises(ValueError, match="part_bucket"):
+        pipeline.run_extraction(spark, spark.read.parquet(misfiled),
+                                str(tmp_path / "o"), n_buckets=8,
+                                slice_buckets=2, salt=False)
+
+
 def test_metrics_reconcile(spark, pages, tmp_path):
     out_dir = str(tmp_path / "m")
     pipeline.run_extraction(spark, pages, out_dir, n_buckets=8,

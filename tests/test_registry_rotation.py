@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import ast
 import inspect
+import os
 import re
 import subprocess
 
@@ -42,6 +43,7 @@ from document_text_extraction_spark import queries as Q
 
 WINDOW = 50
 PKG = "document_text_extraction_spark"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CORE_EXTRACTION = {"oracle", "kernels", "corpus", "pipeline",
                    "web_pages"}
 _RUNS_EXTRACTION = re.compile(
@@ -50,7 +52,7 @@ _RUNS_EXTRACTION = re.compile(
 
 def _git(*args: str) -> str:
     return subprocess.run(["git", *args], capture_output=True, text=True,
-                          cwd="/root/repo", check=True).stdout
+                          cwd=ROOT, check=True).stdout
 
 
 def _base_commit() -> str | None:

@@ -1,0 +1,99 @@
+"""The executors' Python environment: ``shipping.drop_zip_importers``
+empties the importer cache of zip archives without breaking imports
+from them, and the extraction task body calls it (LIMITS.md §8)."""
+
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+import pytest
+
+from document_text_extraction_spark import corpus, pipeline, shipping
+
+
+def _zip_importers() -> list[str]:
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+@pytest.fixture
+def zip_package(tmp_path):
+    """A zip holding a two-module package, first on ``sys.path``."""
+    name = "dte_zip_probe_pkg"
+    path = str(tmp_path / "probe.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(f"{name}/__init__.py", "")
+        z.writestr(f"{name}/first.py", "VALUE = 1\n")
+        z.writestr(f"{name}/second.py", "VALUE = 2\n")
+    sys.path.insert(0, path)
+    try:
+        yield name, path
+    finally:
+        sys.path.remove(path)
+        for mod in [m for m in sys.modules if m.split(".")[0] == name]:
+            del sys.modules[mod]
+        for p in [p for p in sys.path_importer_cache
+                  if p.startswith(path)]:
+            del sys.path_importer_cache[p]
+        zipimport._zip_directory_cache.pop(path, None)
+
+
+def test_drop_zip_importers_keeps_zip_imports_working(zip_package,
+                                                      monkeypatch):
+    name, path = zip_package
+    first = importlib.import_module(f"{name}.first")
+    assert first.VALUE == 1
+    assert any(p.startswith(path) for p in _zip_importers())
+
+    shipping.drop_zip_importers()
+    assert _zip_importers() == []
+
+    # neither the worker's per-task invalidate_caches() nor a later
+    # import reads the archive directory again
+    reads: list[str] = []
+
+    def no_reread(archive):
+        reads.append(archive)
+        raise AssertionError(f"re-read {archive}")
+
+    monkeypatch.setattr(zipimport, "_read_directory", no_reread)
+    importlib.invalidate_caches()
+    second = importlib.import_module(f"{name}.second")
+    assert second.VALUE == 2
+    assert isinstance(second.__loader__, zipimport.zipimporter)
+    assert second.__file__.startswith(path)
+    assert reads == []
+
+
+def _one_batch() -> pd.DataFrame:
+    rows = list(corpus.synth_rows(40))
+    return pd.DataFrame({
+        "url": [r["url"] for r in rows],
+        "html": [r["html"] for r in rows],
+        "part_bucket": [i % 8 for i in range(len(rows))],
+    })
+
+
+def _stable(frame: pd.DataFrame) -> pd.DataFrame:
+    # elapsed_ms is a timing, the only value that differs run to run
+    out = frame.copy()
+    out["lineage"] = [{k: v for k, v in d.items() if k != "elapsed_ms"}
+                      for d in out["lineage"]]
+    return out
+
+
+def test_extract_iter_drops_zip_importers(zip_package, monkeypatch):
+    _name, path = zip_package
+    batch = _one_batch()
+    with monkeypatch.context() as m:
+        m.setattr(shipping, "drop_zip_importers", lambda: None)
+        before = list(pipeline._extract_iter(iter([batch.copy()])))
+    seeded = path + "/seeded"
+    sys.path_importer_cache[seeded] = zipimport.zipimporter(path)
+    after = list(pipeline._extract_iter(iter([batch.copy()])))
+    assert seeded not in sys.path_importer_cache
+    assert _zip_importers() == []
+    assert len(before) == len(after) == 1
+    pd.testing.assert_frame_equal(_stable(before[0]), _stable(after[0]))
