@@ -3,9 +3,8 @@
 ``oracle.extract_fields`` is the per-document form used inside
 extraction; these expressions are the *dataset-level* form for SQL
 analytics over already-extracted text — they never leave the JVM, so no
-Python cost at all. Regex semantics follow the reference
-(``/root/reference/new_approaches/final.py:199-222``,
-``approach4_v1.py:44-109``).
+Python cost at all. Regex semantics follow the reference extractor's
+field families.
 """
 
 from __future__ import annotations

@@ -1,28 +1,24 @@
 """Pure-Python single-document reference extractor (the golden source).
 
-Role: the analogue of the reference repo's committed golden outputs
-(``/root/reference/extracted_regions_final.txt``,
-``grid_analysis_v4_results.csv`` …) — every Spark execution path must match
-this module **byte-identically per url** at every scale and parallelism
+Role: the analogue of the reference extractor's committed golden
+outputs — every Spark execution path must match this module
+**byte-identically per url** at every scale and parallelism
 (SURVEY.md §5).  It is the only implementation of the extraction map:
 ``kernels.extract_batch`` calls :func:`extract_document` once per
 document inside ``mapInPandas``.
 
 Semantics kept from the reference (the "what", SURVEY.md §7.1):
 
-* content routing by magic-byte sniffing (suffix dispatch analogue,
-  ``/root/reference/approach4_v1.py:188-193``);
+* content routing by magic-byte sniffing (the analogue of suffix
+  dispatch);
 * layout pipeline: block detection → column boundaries from coordinate
-  gaps (>40pt, ``/root/reference/new_approaches/final.py:44-73``) →
-  per-column reading-order sort (``final.py:96-98``) → span concatenation
-  (``grid_detector_v2.py:336-349``);
+  gaps (>40pt) → per-column reading-order sort → span concatenation;
 * boilerplate vs main content via density scoring — the web-native form of
-  "histogram valley = separator" (``grid_detector_v1.py:24-85``): per-block
-  link-density (anchor chars / total chars) with boilerplate-ancestor
-  containers, Readability/Boilerpipe family;
-* regex field families (``final.py:199-222``, ``approach4_v1.py:44-83``);
-* error rows, never exceptions escaping per-document work
-  (``batch_multi_column.py:573-592``).
+  "histogram valley = separator": per-block link-density (anchor chars /
+  total chars) with boilerplate-ancestor containers, Readability/
+  Boilerpipe family;
+* regex field families;
+* error rows, never exceptions escaping per-document work.
 """
 
 from __future__ import annotations
@@ -422,6 +418,9 @@ def extract_html_full(data: bytes) -> tuple[str, list[dict],
                 pieces = []
                 link_pieces = []
                 any_boiler = False
+            # a block boundary inside an open anchor separates words
+            for ai, _ in astack:
+                anchor_pieces[ai].append(" ")
             if not closing and name in heading_tags:
                 base_kind = "heading"
             elif not closing and name == "li":
@@ -570,8 +569,7 @@ def _apply_predictor(data: bytes, parm) -> bytes:
     differencing, 10–15 = PNG row filters (the per-row filter-type byte
     decides — all PNG values decode identically). Real-world files use
     these mostly on xref/object streams, occasionally on content
-    streams; the reference inherits them from MuPDF
-    (``/root/reference/approach4_v1.py:21-31``)."""
+    streams; the reference inherits them from MuPDF."""
     if not parm:
         return data
     pred = _parm_int(parm, b"Predictor", 1)
@@ -745,8 +743,7 @@ def _apply_stream_filters(data: bytes, head: bytes,
     encryption (Crypt) and raise a counted ``unsupported_filter``
     failure, never silently-corrupt output — a predictor declared on a
     filter that takes none is likewise refused, not ignored. The
-    reference inherits the full set from MuPDF/pdfplumber
-    (``/root/reference/approach4_v1.py:21-31``)."""
+    reference inherits the full set from MuPDF/pdfplumber."""
     fm = _FILTER_ENTRY_RE.search(head)
     if fm is None:
         return data
@@ -1558,7 +1555,7 @@ def _tokenize_content(buf: bytes) -> list:
     Inline images (``BI … ID <binary> EI``) are skipped wholesale so
     their unframed sample bytes cannot desync the scan — real scanned-
     page hybrids carry text between images (the reference gets this
-    from MuPDF, ``/root/reference/approach4_v1.py:21-31``).
+    from MuPDF).
 
     Hot loop uses int byte comparisons (indexing bytes yields int;
     slicing per char would allocate)."""
@@ -1682,11 +1679,11 @@ def _interpret_page(content: bytes, page: int,
     text-line matrices (Tm/Tlm) through ``BT Td TD Tm T* ' "`` — show
     coordinates are the DEVICE-space origin of ``Tm × CTM``, so
     rotated/scaled content sorts into the same reading order a raster
-    renderer would produce (reference behavior via MuPDF,
-    ``/root/reference/approach4_v1.py:21-31``). ``fonts`` maps /Name →
-    parsed ToUnicode CMap (or None); ``Tf`` switches the active map and
-    show strings decode through it (non-latin text). ``xobjects`` maps
-    /Name → form-XObject entries; ``Do`` interprets the form's content
+    renderer would produce (reference behavior via MuPDF). ``fonts``
+    maps /Name → parsed ToUnicode CMap (or None); ``Tf`` switches the
+    active map and show strings decode through it (non-latin text).
+    ``xobjects`` maps /Name → form-XObject entries; ``Do`` interprets
+    the form's content
     recursively (its own fonts, falling back to the page's;
     depth-capped) under ``form /Matrix × CTM`` so form-carried text
     lands in the same coordinate-sorted reading order."""
@@ -1799,7 +1796,7 @@ def _interpret_page(content: bytes, page: int,
 # instead of literal space glyphs; below this threshold the gap is a
 # word break (~0.12 em — space glyphs are ~0.25 em, intra-word kerns
 # are tens of units). MuPDF applies the same heuristic for the
-# reference (``/root/reference/approach4_v1.py:21-31``).
+# reference.
 TJ_WORD_GAP = -120.0
 
 

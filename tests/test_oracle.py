@@ -107,6 +107,16 @@ def test_html_link_dense_block_dropped():
      [("heading", "Upper Title"), ("main", "body x words here"),
       ("boilerplate", "menu"), ("list_item", "item")],
      ["/up"], ["x"]),
+    # a block boundary inside an anchor separates the anchor's words
+    (b"<li><a href='/b'>News<br>Today</a></li>",
+     [("boilerplate", "News"), ("boilerplate", "Today")],
+     ["/b"], ["News Today"]),
+    (b"<a href='/c'><h3>Title</h3><p>Summary</p></a>",
+     [("boilerplate", "Title"), ("boilerplate", "Summary")],
+     ["/c"], ["Title Summary"]),
+    (b"<p>x <a href='/u'>open anchor</p><p>more text",
+     [("boilerplate", "x open anchor"), ("boilerplate", "more text")],
+     ["/u"], ["open anchor more text"]),
 ])
 def test_html_block_edge_cases(doc, kinds, outlinks, anchors):
     text, spans, got_links, got_anchors, _ = oracle.extract_html_full(doc)

@@ -4,9 +4,10 @@ plans Catalyst produces (column pruning, single shuffle, no cartesians).
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from document_text_extraction_spark import pipeline
+from document_text_extraction_spark import pipeline, queries
 from document_text_extraction_spark.plans import assert_pushdown, plan_report
 from document_text_extraction_spark.queries import (
     q_curate_corpus,
@@ -239,3 +240,117 @@ def test_session_caps_codegen_at_hotspot_jit_limit(spark):
     spark.sql.codegen.hugeMethodLimit at the HotSpot threshold —
     measured 153s -> 7.6s first-run on the minhash signature stage."""
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
+
+
+# ---------------------------------------------------------------------------
+# Round-6 plan claims (OPTIMIZATION_r06.md). Each row is the operator fact
+# a round-6 restructure produced, checked on today's plan. Facts only: a
+# node count that moves with scale (exchanges, broadcasts, the input
+# spread) is no claim. line_dedup and curate_corpus have their own tests.
+# ---------------------------------------------------------------------------
+
+SF = "/root/testdata/sf0.001"
+
+
+def _count(plan: str, op: str) -> int:
+    """Nodes of ``op`` in a formatted plan (detail headers only: the
+    tree prints every node a second time)."""
+    return len(re.findall(rf"^\(\d+\) {op}\b", plan, re.M))
+
+
+def _generators(plan: str) -> list[tuple[str, bool]]:
+    """(arguments, outer) of every Generate node, from its Arguments
+    ``gen(expr), [child output], outer, [generator output]``. The
+    arguments can span lines (a split pattern holding a newline), so
+    they run to the blank line that ends the node's detail block."""
+    out = []
+    for args in re.findall(r"^\(\d+\) Generate\b.*?\nArguments: (.*?)\n\n",
+                           plan, re.M | re.S):
+        outer = re.search(r", (true|false), \[[^\]]*\]$", args)
+        out.append((args, outer.group(1) == "true"))
+    return out
+
+
+def _outer_explodes(plan: str, call: str = "explode(") -> bool:
+    """At least one Generate whose arguments start with ``call``, and
+    every one is the outer form (no inferred ``size(arr) > 0`` filter
+    re-evaluating the generated array)."""
+    outers = [o for a, o in _generators(plan) if a.startswith(call)]
+    return bool(outers) and all(outers)
+
+
+R06_PLAN_CLAIMS = {
+    "ann_ivf_trained": (
+        "the probe's top-k is TakeOrderedAndProject, not a global sort",
+        lambda p: _count(p, "TakeOrderedAndProject") == 1),
+    "bm25_topk": (
+        "the top-k is TakeOrderedAndProject, not a global sort",
+        lambda p: _count(p, "TakeOrderedAndProject") == 1),
+    "cdx_index": (
+        "the page generator runs as a MapInPandas kernel",
+        lambda p: _count(p, "MapInPandas") >= 1),
+    "exact_substring_spans": (
+        "grams explode with posexplode_outer, keyed by binary md5",
+        lambda p: (_outer_explodes(p, "posexplode(")
+                   and "unhex(md5(" in p)),
+    "kmv_distinct": (
+        "only the k minimum hashes per sketch pass the window "
+        "(WindowGroupLimit rank pushdown)",
+        lambda p: _count(p, "WindowGroupLimit") >= 1),
+    "media_phash": (
+        "decode and hash run as MapInPandas; the range-partitioned "
+        "spread stays reverted",
+        lambda p: (_count(p, "MapInPandas") >= 1
+                   and "RangePartitioning" not in p)),
+    "minhash_neardup": (
+        "the shingle explodes (signature and verify sides) use the "
+        "outer form",
+        lambda p: _outer_explodes(p, "explode(shingles")),
+    "ngram_jaccard": (
+        "at most 2 Generate nodes, both outer: the window-frequency "
+        "explode is shared by both candidate sides, and the sizes "
+        "groupBy and the two full-explode verify joins are gone",
+        lambda p: (_count(p, "Generate") <= 2 and _outer_explodes(p))),
+    "running_value": (
+        "one Window node: the running sum is a single window pass",
+        lambda p: _count(p, "Window") == 1),
+    "semdedup": (
+        "one FlatMapGroupsInPandas per cluster scores the pairs; the "
+        "only joins are the LEFT ANTI drops",
+        lambda p: (_count(p, "FlatMapGroupsInPandas") >= 1
+                   and set(re.findall(r"Join type: (\w+)", p))
+                   <= {"LeftAnti"})),
+    "semdedup_scaled": (
+        "clusters are assigned by a MapInPandas kernel (no codebook "
+        "literal) and scored by FlatMapGroupsInPandas",
+        lambda p: (_count(p, "FlatMapGroupsInPandas") >= 1
+                   and _count(p, "MapInPandas") >= 1
+                   and "zip_with" not in p)),
+    "simhash_neardup": (
+        "SimHash is one MapInPandas pass: no md5 token explode, no "
+        "60-column aggregate, at most 2 Generate nodes (the bands)",
+        lambda p: (_count(p, "MapInPandas") >= 1 and "md5(" not in p
+                   and _count(p, "Generate") <= 2)),
+    "template_scrub": (
+        "template lines join back by an equi LEFT OUTER join",
+        lambda p: re.search(
+            r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) "
+            r"LeftOuter", p) is not None),
+    "winnow_overlap": (
+        "fingerprints come from a MapInPandas md5 kernel: no md5 "
+        "expression tree in the plan",
+        lambda p: _count(p, "MapInPandas") >= 1 and "md5(" not in p),
+}
+
+
+@pytest.mark.parametrize("name", sorted(R06_PLAN_CLAIMS))
+def test_r06_plan_claims(spark, name):
+    """Each round-6 claim holds on today's plan, and so does the round's
+    registry audit: no CartesianProduct, no row-at-a-time Python
+    (BatchEvalPython) and no nested-loop join."""
+    claim, holds = R06_PLAN_CLAIMS[name]
+    plan = plan_report(getattr(queries, f"q_{name}")(spark, SF))["plan"]
+    for op in ("CartesianProduct", "BatchEvalPython",
+               "BroadcastNestedLoopJoin"):
+        assert op not in plan, f"{name}: plan has {op}\n{plan}"
+    assert holds(plan), f"{name}: {claim}\n{plan}"
