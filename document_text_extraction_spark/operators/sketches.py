@@ -55,9 +55,10 @@ def kmv_sketch(df: DataFrame, key_cols: list[str], value_col: str,
                k: int = 64,
                skew_threshold: int | None = None) -> DataFrame:
     """Per-key KMV sketch: (keys..., kmv_hashes array<long> ascending,
-    n_distinct_est). One distinct-collapse groupBy + one skew-safe
-    top-k ranking; the output is one bounded row per key — the
-    cube-friendly shape."""
+    kmv_k, n_distinct_est). One distinct-collapse groupBy + one
+    skew-safe top-k ranking; the output is one bounded row per key —
+    the cube-friendly shape. ``kmv_k`` is the build width, which
+    :func:`kmv_merge` checks."""
     dist = (df.select(*key_cols,
                       md5_token_hash(F.col(value_col)).alias("__h"))
             .groupBy(*key_cols, "__h").agg(F.lit(1).alias("__one"))
@@ -69,6 +70,7 @@ def kmv_sketch(df: DataFrame, key_cols: list[str], value_col: str,
             .agg(F.array_sort(F.collect_list("__h"))
                  .alias("kmv_hashes"))
             .select(*key_cols, "kmv_hashes",
+                    F.lit(k).alias("kmv_k"),
                     _estimate(F.size("kmv_hashes"),
                               F.element_at("kmv_hashes", k), k)
                     .alias("n_distinct_est")))
@@ -84,9 +86,19 @@ def kmv_merge(sketches: DataFrame, key_cols: list[str],
     ``rollup.hypertable_rollup`` (coarse levels derive from fine).
 
     Per input row the explode emits <= k hashes, and per output key at
-    most (input sketches x k) — bounded, shuffle-light."""
+    most (input sketches x k) — bounded, shuffle-light.
+
+    ``k`` may not exceed any input row's ``kmv_k``: the bottom-64 sets
+    of the parts do not hold the bottom-128 of their union, and a merged
+    sketch short of ``k`` hashes would take the exact-count branch. Such
+    a row fails the query when it is read."""
+    too_wide = F.raise_error(F.concat(
+        F.lit(f"kmv_merge at k={k} is wider than a sketch built with "
+              "kmv_k="), F.col("kmv_k").cast("string")))
+    hashes = F.when(F.col("kmv_k") >= k, F.col(hashes_col)).otherwise(
+        too_wide)
     exploded = (sketches.select(*key_cols,
-                                F.explode(hashes_col).alias("__h"))
+                                F.explode(hashes).alias("__h"))
                 .groupBy(*key_cols, "__h").agg(F.lit(1).alias("__one"))
                 .drop("__one"))
     ranked = ranked_in_key(exploded, key_cols, "__h", max_rank=k)
@@ -95,6 +107,7 @@ def kmv_merge(sketches: DataFrame, key_cols: list[str],
             .agg(F.array_sort(F.collect_list("__h"))
                  .alias(hashes_col))
             .select(*key_cols, hashes_col,
+                    F.lit(k).alias("kmv_k"),
                     _estimate(F.size(hashes_col),
                               F.element_at(hashes_col, k), k)
                     .alias("n_distinct_est")))

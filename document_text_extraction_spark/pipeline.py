@@ -35,7 +35,6 @@ import json
 import os
 import shutil
 import tempfile
-import threading
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor, as_completed
 
@@ -127,10 +126,15 @@ OUTPUT_SCHEMA_ROLLUP = T.StructType(
 
 MAX_SALT = 1024  # upper bound on per-bucket split factor
 DEFAULT_BUCKETS = 256
-# target shuffle-placement grain: the extraction map costs ~0.25 core-s
-# per MB, so 8MB ≈ 2 core-seconds per placement key — fine enough that
-# wave packing stays balanced at any executor count
-DEFAULT_SALT_THRESHOLD_BYTES = 8 << 20
+# slices in flight at once: while one slice's last tasks drain, the
+# next one's fill the idle cores
+DEFAULT_PARALLEL_SLICES = 2
+# bounds of the salt grain (:func:`salt_grain_bytes`). The extraction
+# map costs ~0.25 core-s per MB: the floor (~0.06 core-s) stays well
+# above a task's fixed cost, and the ceiling (~2 core-s) keeps a large
+# corpus's tasks short enough that stragglers and retries stay cheap
+MIN_SALT_GRAIN_BYTES = 256 << 10
+MAX_SALT_GRAIN_BYTES = 8 << 20
 
 _HOST_PATTERN = r"https?://([^/]+)"
 
@@ -231,26 +235,46 @@ def bucket_byte_stats(pages: DataFrame, n_buckets: int) -> dict[int, int]:
     return stats
 
 
+def salt_grain_bytes(spark: SparkSession, total_bytes: int,
+                     live_slices: int = 1) -> int:
+    """Salt grain: the payload bytes one shuffle-placement key should
+    carry, derived from the corpus and the cluster, not fixed.
+
+    ``total_bytes`` spread over ``live_slices`` slices (the slices that
+    hold any bytes) gives two grains per core of ``defaultParallelism``
+    in an average slice. A bucket above one grain is then split in
+    proportion to its bytes, as Scarlett (EuroSys 2011) sizes splits to
+    their share, so a hot bucket cannot leave a slice's last wave to
+    one core. :data:`MIN_SALT_GRAIN_BYTES` keeps a small corpus from
+    splitting into tasks that cost more to schedule than to run, and
+    :data:`MAX_SALT_GRAIN_BYTES` keeps a large one from growing tasks
+    without bound.
+    """
+    cores = spark.sparkContext.defaultParallelism
+    return min(MAX_SALT_GRAIN_BYTES, max(
+        MIN_SALT_GRAIN_BYTES,
+        total_bytes // (max(1, live_slices) * cores * 2)))
+
+
 def plan_salting(pages: DataFrame, n_buckets: int,
                  threshold_bytes: int | None = None,
                  stats: dict[int, int] | None = None) -> dict[int, int]:
     """Cheap pre-aggregation → per-bucket salt factors.
 
-    A bucket whose payload mass exceeds ``threshold_bytes`` (default
-    8MB ≈ 2 core-seconds of extraction CPU) is split into
-    ``ceil(mass/threshold)`` placement sub-keys, capped at MAX_SALT.
-    Host-bucketing makes this essential: a Zipf-hot host is one bucket
-    (27% of bytes in the synthetic corpus) and without the split it
-    serializes the whole job. Reference analogue: byte skew is detected
-    exactly like the reference's per-doc char counters
-    (``grid_detector_v4.py:203-207``) but as one JVM-side groupBy.
-    Pass precomputed ``stats`` (:func:`bucket_byte_stats`) to skip the
-    scan.
+    A bucket whose payload mass exceeds ``threshold_bytes`` is split
+    into ``ceil(mass/threshold)`` placement sub-keys, capped at
+    MAX_SALT. The default threshold is :func:`salt_grain_bytes` over
+    the whole corpus as one slice. Host-bucketing makes this
+    essential: a Zipf-hot host is one bucket (27% of bytes in the
+    synthetic corpus) and without the split it serializes the whole
+    job. Pass precomputed ``stats`` (:func:`bucket_byte_stats`) to skip
+    the scan.
     """
     sizes = stats if stats is not None else bucket_byte_stats(
         pages, n_buckets)
     if threshold_bytes is None:
-        threshold_bytes = DEFAULT_SALT_THRESHOLD_BYTES
+        threshold_bytes = salt_grain_bytes(pages.sparkSession,
+                                           sum(sizes.values()))
     plan = {}
     for b, sz in sizes.items():
         if sz > threshold_bytes:
@@ -470,7 +494,7 @@ def run_extraction(
     resume: bool = True,
     salt: bool = True,
     max_slices: int | None = None,
-    parallel_slices: int = 1,
+    parallel_slices: int = DEFAULT_PARALLEL_SLICES,
     salt_threshold_bytes: int | None = None,
 ) -> dict:
     """Execute extraction slice-by-slice with commit-after-each-slice.
@@ -481,12 +505,23 @@ def run_extraction(
 
     ``parallel_slices``: slices are the COMMIT unit, not a concurrency
     unit — each writes a disjoint set of ``part_bucket`` dirs via a
-    private staging dir + rename, and commits its manifest entry under
-    a lock, so N slices can execute concurrently with identical
-    resume/idempotency semantics. On a cluster this is the
-    double-buffering that hides per-wave scheduling + commit latency
-    (wave k+1 runs while wave k commits); sequential (the default) is
-    the most conservative checkpoint cadence.
+    private staging dir + rename, and its manifest entry is committed
+    as it completes, so N slices can execute concurrently with
+    identical resume/idempotency semantics. The default keeps two
+    slices in flight: the double-buffering that hides each slice's
+    tail wave and commit (slice k+1 runs while slice k drains and
+    commits). ``parallel_slices=1`` runs them one at a time, the most
+    conservative checkpoint cadence. Pending slices start heaviest
+    first (by measured bytes), so the longest slice never starts
+    last; ``max_slices`` still picks the lowest-indexed pending slices.
+    When a slice fails, or the run is interrupted, no further slice
+    starts; the call waits for the slices already running (so a Ctrl-C
+    returns only once they finish), commits those that succeeded, and
+    re-raises.
+
+    ``salt_threshold_bytes`` overrides the salt grain, which by default
+    is :func:`salt_grain_bytes` over the measured bytes and the slices
+    that hold them.
     """
     os.makedirs(out_dir, exist_ok=True)
     data_dir = os.path.join(out_dir, "data")
@@ -532,12 +567,13 @@ def run_extraction(
     # bucket, would silently be dropped, misfiled or wiped by a slice's
     # redo. A mismatch raises ValueError before any slice runs.
     stats = bucket_byte_stats(pages, n_buckets)
-    # the salt grain (bytes of payload per placement sub-key) is a
-    # deployment knob — the 8MB default targets ~2 core-seconds per
-    # task of this extraction kernel; a heavier per-byte kernel or a
-    # smaller cluster wants a different grain
-    grain = (DEFAULT_SALT_THRESHOLD_BYTES if salt_threshold_bytes is None
-             else salt_threshold_bytes)
+
+    def _slice_bytes(buckets: list[int]) -> int:
+        return sum(stats.get(b, 0) for b in buckets)
+
+    grain = salt_threshold_bytes or salt_grain_bytes(
+        spark, sum(stats.values()),
+        sum(1 for b in slices if _slice_bytes(b)))
     salt_plan = plan_salting(pages, n_buckets, threshold_bytes=grain,
                              stats=stats) if salt else {}
     # per-slice shuffle grain: a slice covers only its buckets' bytes,
@@ -551,14 +587,14 @@ def run_extraction(
     # between them (byte-sizing alone measured 9 tasks/slice × 2 waves
     # = 18 in-flight on 32 cores: steady 14.3 s at sf0.1 from pure
     # core starvation). A production slice sized as one cluster wave
-    # hits the 4·base clamp and fans out fully either way.
+    # has its grain at MAX_SALT_GRAIN_BYTES, hits the 4·base clamp and
+    # fans out fully either way.
     base = int(pages.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"))
     floor = max(8, base // max(1, parallel_slices))
 
     def _slice_partitions(buckets: list[int]) -> int:
-        sz = sum(stats.get(b, 0) for b in buckets)
-        want = -(-sz // grain) or 1
+        want = -(-_slice_bytes(buckets) // grain) or 1
         return max(floor, min(4 * base, want))
 
     os.makedirs(data_dir, exist_ok=True)
@@ -623,23 +659,33 @@ def run_extraction(
             if not manifest["slices"].get(str(si), {}).get("committed")]
     if max_slices is not None:
         todo = todo[:max_slices]
-    if parallel_slices <= 1 or len(todo) <= 1:
-        for si, buckets in todo:
-            manifest["slices"][str(si)] = _execute_slice(si, buckets)
-            manifest.setdefault("commit_log", []).append(str(si))
+    # longest first: the pool starts slices in submission order, so the
+    # heaviest slice's tail overlaps the lighter ones instead of ending
+    # the run alone (the sort is stable: equal slices keep index order)
+    todo.sort(key=lambda t: -_slice_bytes(t[1]))
+    # commits happen on this thread, one at a time, as slices complete
+    with ThreadPoolExecutor(max_workers=max(1, parallel_slices)) as exe:
+        # the slices not yet committed (as_completed iterates a copy)
+        futs = {exe.submit(_execute_slice, si, b): si for si, b in todo}
+
+        def _commit(fut) -> None:
+            si = str(futs.pop(fut))
+            manifest["slices"][si] = fut.result()
+            manifest.setdefault("commit_log", []).append(si)
             _commit_manifest(out_dir, run_id, manifest)
-    else:
-        lock = threading.Lock()
-        with ThreadPoolExecutor(max_workers=parallel_slices) as exe:
-            futs = {exe.submit(_execute_slice, si, b): si
-                    for si, b in todo}
+
+        try:
             for fut in as_completed(futs):
-                entry = fut.result()
-                with lock:
-                    manifest["slices"][str(futs[fut])] = entry
-                    manifest.setdefault("commit_log", []).append(
-                        str(futs[fut]))
-                    _commit_manifest(out_dir, run_id, manifest)
+                _commit(fut)
+        except BaseException:
+            # a failed slice (or an interrupt) ends the run: start no
+            # further slice, wait for the running ones, and commit those
+            # that succeeded, since their buckets are already in data/
+            exe.shutdown(cancel_futures=True)
+            for fut in list(futs):
+                if not fut.cancelled() and fut.exception() is None:
+                    _commit(fut)
+            raise
     return manifest
 
 

@@ -8,8 +8,45 @@ cluster scale (AQE on, Arrow on, shuffle partitions sized to cores).
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+# defaultJavaOptions, not extraJavaOptions: callers set their own
+# extraJavaOptions, which would replace a value set here; the JVM gets
+# both
+_DEFAULT_JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
+_LOCAL_JIT_CAP = "-XX:TieredStopAtLevel=1"
+
+
+def _local_driver_java_options(caller_value: str | None) -> str:
+    """The local JIT cap followed by the caller's defaultJavaOptions,
+    or else by spark-defaults.conf's: spark-submit lets a value set
+    here replace the file's, so the file's value is read and kept.
+    A later option wins, so a caller's own ``-XX:TieredStopAtLevel``
+    overrides the cap."""
+    if caller_value is None:
+        caller_value = _spark_defaults().get(_DEFAULT_JAVA_OPTIONS)
+    return " ".join(filter(None, [_LOCAL_JIT_CAP, caller_value]))
+
+
+def _spark_defaults() -> dict[str, str]:
+    """The properties in the spark-defaults.conf that spark-submit
+    reads (``key value`` or ``key=value`` lines, ``#`` comments)."""
+    conf_dir = (os.environ.get("SPARK_CONF_DIR")
+                or os.path.join(_find_spark_home(), "conf"))
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return {}
+    props = {}
+    for line in lines:
+        m = re.match(r"\s*([^\s=:#!][^\s=:]*)\s*[=:\s]\s*(.*)", line)
+        if m:
+            props[m.group(1)] = m.group(2).strip()
+    return props
 
 
 def get_spark(
@@ -55,6 +92,20 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
+    if master.startswith("local"):
+        # In local mode the driver JVM is also the only executor, and
+        # HotSpot's C2 compiler threads take cores from the Python
+        # tasks. On 4 cores one run of the crawl benchmark (session
+        # start to stop, 25k pages) spent 44 s of JIT compile time
+        # (summed over compiler threads) and 61 JVM core-s; stopping
+        # tiered compilation at C1 cut that to 7 s and 35 core-s and
+        # the extraction job ran faster. Keeping one C2 thread
+        # (-XX:CICompilerCount=2) still compiled for 28-33 s and gained
+        # little. JVM-bound query suites lose some speed to C1 code
+        # (dedup benchmark: about -10 %). A cluster's executors are
+        # separate JVMs and keep C2.
+        b = b.config(_DEFAULT_JAVA_OPTIONS, _local_driver_java_options(
+            (extra_conf or {}).get(_DEFAULT_JAVA_OPTIONS)))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -27,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from document_text_extraction_spark import pipeline
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="parquet dir of web_pages table")
     ap.add_argument("--warc-input",
@@ -45,10 +47,12 @@ def main() -> None:
     ap.add_argument("--slice-buckets", type=int, default=32)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--no-salt", action="store_true")
-    ap.add_argument("--parallel-slices", type=int, default=1,
+    ap.add_argument("--parallel-slices", type=int,
+                    default=pipeline.DEFAULT_PARALLEL_SLICES,
                     help="overlap N slice waves (each still commits "
                          "atomically); 2 = double-buffering that hides "
-                         "per-wave scheduling + commit latency")
+                         "per-wave scheduling + commit latency; "
+                         "1 = one slice at a time (default: %(default)s)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -58,7 +62,6 @@ def main() -> None:
     else:
         from document_text_extraction_spark.session import get_spark
         spark = get_spark("dte-extract")
-    from document_text_extraction_spark import pipeline
     from document_text_extraction_spark.shipping import (
         ensure_package_shipped,
     )

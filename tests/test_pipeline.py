@@ -1,6 +1,9 @@
 """End-to-end Spark pipeline tests (FIXTURES.md §5: partition_invariance,
 resume, metrics reconciliation) on local[8]."""
 
+import itertools
+import threading
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -233,6 +236,83 @@ def test_plan_salting_detects_hot_buckets(spark):
     assert all(1 < f <= pipeline.MAX_SALT for f in plan.values())
 
 
+def test_salt_grain_derives_from_bytes_and_cores(spark):
+    """The default salt grain comes from the corpus bytes and the
+    session's cores, so on local[8] a 3 MB hot bucket of a 5 MB corpus
+    is split, where a fixed 8 MB grain would leave it whole."""
+    assert spark.sparkContext.defaultParallelism == 8
+    rows = ([{"url": f"http://hot.example/{i}", "html": "x" * 100_000}
+             for i in range(30)]
+            + [{"url": f"http://site{i}.example/", "html": "y" * 10_000}
+               for i in range(200)])
+    df = spark.createDataFrame(pd.DataFrame(rows))
+    stats = pipeline.bucket_byte_stats(df, 8)
+    total = sum(stats.values())
+    grain = pipeline.salt_grain_bytes(spark, total)
+    assert grain == total // (8 * 2) > pipeline.MIN_SALT_GRAIN_BYTES
+    hot = max(stats, key=stats.get)
+    assert grain < stats[hot] < 8 << 20
+    plan = pipeline.plan_salting(df, n_buckets=8)
+    assert plan[hot] == -(-stats[hot] // grain) > 1
+    assert all(stats[b] > grain for b in plan)
+
+
+def test_slices_run_heaviest_first(spark, pages, tmp_path):
+    """Pending slices start in descending byte order, so the heaviest
+    slice's tail never ends the run alone; with one slice in flight the
+    commit log shows that order."""
+    m = pipeline.run_extraction(spark, pages, str(tmp_path / "order"),
+                                n_buckets=8, slice_buckets=2, salt=False,
+                                parallel_slices=1)
+    stats = pipeline.bucket_byte_stats(pages, 8)
+    weight = {str(si): stats.get(2 * si, 0) + stats.get(2 * si + 1, 0)
+              for si in range(4)}
+    by_bytes = sorted(weight, key=lambda si: -weight[si])
+    assert by_bytes != sorted(weight), "fixture slices already in order"
+    assert m["commit_log"] == by_bytes
+
+
+def test_failed_slice_commits_the_slices_that_finished(
+        spark, pages, tmp_path, monkeypatch):
+    """When one slice fails, the slices already running finish and are
+    committed before the error surfaces: no bucket dir lands in data/
+    without a manifest entry, and a resume redoes only the rest."""
+    real = pipeline.slice_extract_df
+    order = itertools.count()
+    calls = {}
+    other_started = threading.Event()
+
+    def first_call_fails(*args, **kwargs):
+        n = next(order)
+        calls[n] = args[3]
+        if n == 0:
+            # fail while another slice is running, not before it starts
+            other_started.wait(60)
+            raise RuntimeError("planted slice failure")
+        other_started.set()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "slice_extract_df", first_call_fails)
+    out = str(tmp_path / "fail")
+    with pytest.raises(RuntimeError, match="planted"):
+        pipeline.run_extraction(spark, pages, out, n_buckets=8,
+                                slice_buckets=2, salt=False,
+                                parallel_slices=2)
+    m = pipeline._load_manifest(out, "run1")
+    committed = {b for s in m["slices"].values() if s.get("committed")
+                 for b in s["buckets"]}
+    import os as _os
+    landed = {int(d.split("=")[1])
+              for d in _os.listdir(_os.path.join(out, "data"))}
+    assert committed and landed <= committed
+    assert not committed & set(calls[0])
+    monkeypatch.setattr(pipeline, "slice_extract_df", real)
+    m2 = pipeline.run_extraction(spark, pages, out, n_buckets=8,
+                                 slice_buckets=2, salt=False)
+    assert sum(s["docs"] for s in m2["slices"].values()) == N_DOCS
+    assert spark.read.parquet(out + "/data").count() == N_DOCS
+
+
 def test_resume_wipes_partial_slice_garbage(spark, pages, tmp_path):
     """A crash mid-slice leaves partial files with no manifest entry;
     the rerun must wipe and redo them, never double-count."""
@@ -261,7 +341,7 @@ def test_parallel_slices_match_sequential(spark, pages, tmp_path):
     seq_dir = str(tmp_path / "seq")
     par_dir = str(tmp_path / "par")
     pipeline.run_extraction(spark, pages, seq_dir, n_buckets=8,
-                            slice_buckets=2, salt=False)
+                            slice_buckets=2, salt=False, parallel_slices=1)
     m1 = pipeline.run_extraction(spark, pages, par_dir, n_buckets=8,
                                  slice_buckets=2, salt=False,
                                  max_slices=2, parallel_slices=4)

@@ -2,7 +2,10 @@
 empties the importer cache of zip archives without breaking imports
 from them, and the extraction task body calls it (LIMITS.md §8)."""
 
+import hashlib
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -97,3 +100,45 @@ def test_extract_iter_drops_zip_importers(zip_package, monkeypatch):
     assert _zip_importers() == []
     assert len(before) == len(after) == 1
     pd.testing.assert_frame_equal(_stable(before[0]), _stable(after[0]))
+
+
+_SHIP_IN_FRESH_DRIVER = """
+import sys, types
+sys.path.insert(0, sys.argv[1])
+from document_text_extraction_spark import shipping
+shipped = []
+session = types.SimpleNamespace(
+    sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
+shipping.ensure_package_shipped(session)
+print(shipped[0])
+"""
+
+
+@pytest.mark.parametrize("planted", [None, b"PK\x03\x04 stale"],
+                         ids=["empty", "stale_file"])
+def test_drivers_share_one_package_zip(tmp_path, planted):
+    """Two driver processes that ship the same sources leave one zip in
+    the temp dir between them, not one each, and it holds the package.
+    A file already under that name with other bytes is replaced, never
+    shipped."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ref = shipping.build_package_zip(str(tmp_path / "ref.zip"))
+    with open(ref, "rb") as f:
+        want = f.read()
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    if planted is not None:
+        digest = hashlib.sha256(want).hexdigest()[:16]
+        (tmp / f"document_text_extraction_spark-{digest}.zip").write_bytes(
+            planted)
+    env = dict(os.environ, TMPDIR=str(tmp))
+    shipped = [subprocess.run(
+        [sys.executable, "-c", _SHIP_IN_FRESH_DRIVER, root], env=env,
+        capture_output=True, text=True, check=True).stdout.strip()
+        for _ in range(2)]
+    zips = sorted(tmp.glob("document_text_extraction_spark-*.zip"))
+    assert [str(z) for z in zips] == shipped[:1] == shipped[1:]
+    assert zips[0].read_bytes() == want
+    with zipfile.ZipFile(zips[0]) as z:
+        assert "document_text_extraction_spark/pipeline.py" in z.namelist()
+    assert os.listdir(tmp) == [zips[0].name]

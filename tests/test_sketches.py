@@ -49,6 +49,20 @@ def test_merge_equals_direct(spark):
     assert merged.n_distinct_est == direct.n_distinct_est
 
 
+def test_merge_wider_than_build_width_raises(spark):
+    """Each sketch row carries its build width; a merge at a larger k
+    would report a bottom-k it never saw, so it fails instead."""
+    rows = [(f"v{i}", "g", f"day{i % 5}") for i in range(3000)]
+    df = spark.createDataFrame(rows, "v string, g string, d string")
+    per_day = sk.kmv_sketch(df, ["g", "d"], "v", k=64)
+    assert {r.kmv_k for r in per_day.collect()} == {64}
+    narrower = sk.kmv_merge(per_day, ["g"], k=32).collect()[0]
+    assert narrower.kmv_k == 32 and len(narrower.kmv_hashes) == 32
+    with pytest.raises(Exception, match="wider than a sketch built with "
+                                        "kmv_k=64"):
+        sk.kmv_merge(per_day, ["g"], k=128).collect()
+
+
 def test_banded_skew_path_parity(spark, vals):
     """The skew-safe ranked_in_key path (hot keys banded by hash value)
     must produce the identical sketch."""
