@@ -12,9 +12,7 @@ from .fields import (  # noqa: F401
 from .textstats import (  # noqa: F401
     avg_token_len_col,
     bpe_token_estimate_col,
-    fingerprint_col,
     lang_id_col,
-    md5_fingerprint_col,
     quality_score_col,
     stopword_ratio_col,
     token_count_col,

@@ -145,18 +145,6 @@ def bigrams_col(text: Column) -> Column:
     )
 
 
-def fingerprint_col(text: Column) -> Column:
-    """Exact-dup fingerprint: 64-bit hash of the raw text (O30 analogue —
-    dataset-level distinct key)."""
-    return F.xxhash64(text)
-
-
-def md5_fingerprint_col(text: Column) -> Column:
-    """Portable fingerprint (md5 hex) — identical function exists in
-    DuckDB, so this one is oracle-checkable."""
-    return F.md5(F.encode(text, "UTF-8"))
-
-
 def contains_terms_col(text: Column, terms: list[str]) -> Column:
     """True iff any whitespace token of ``text`` matches the literal
     term list case-insensitively — the C4 "bad words" gate (Raffel et

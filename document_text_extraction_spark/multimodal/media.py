@@ -638,7 +638,7 @@ def ahash_images(media: DataFrame,
                  partitions: int | None = None) -> DataFrame:
     """Perceptual hash (aHash) per image as an Arrow-batched map — the
     image-side fingerprint feeding near-dup detection, same role as
-    ``dedup.fingerprint_col`` for text. Decode is REAL for PNG and
+    ``dedup.content_fingerprint_col`` for text. Decode is REAL for PNG and
     baseline JPEG (deterministic fake only for video frames);
     downsample, grayscale, threshold, bit-pack are pure numpy."""
     def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tempdirs import scratch_dir
+
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
@@ -52,13 +54,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     ``work_dir`` holds the per-round label checkpoints (two alternating
     subdirs) and backs the RETURNED DataFrame — it must outlive any use
-    of the result. Defaults to a fresh temp dir (fine in local mode; on
-    a cluster pass a path every executor can read)."""
-    import tempfile
-
+    of the result. Defaults to a fresh temp dir removed at interpreter
+    exit (fine in local mode; on a cluster pass a path every executor
+    can read)."""
     spark = pairs.sparkSession
     if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="dte_cc_")
+        work_dir = scratch_dir("dte_cc_")
     sym = (
         pairs.select(F.col(id_a).alias("node"), F.col(id_b).alias("nbr"))
         .unionAll(

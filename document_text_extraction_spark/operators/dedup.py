@@ -1,13 +1,16 @@
 """Dataset-level deduplication operators for training-data pipelines.
 
-All shuffle-conscious and JVM-side (no Python UDFs):
+Shuffle-conscious, one implementation per algorithm:
 
 * exact: one groupBy on an md5 fingerprint (map-side partial agg);
-* MinHash+LSH: shingle → per-hash min (array expressions, no explode for
-  the signature) → band hashes → **one** exploded band join finds
-  candidates → exact-Jaccard verification joins only the candidates;
-* SimHash: token explode → per-bit majority agg → band buckets on bit
-  ranges (Hamming-adjacent candidates without a cross join);
+* MinHash+LSH: shingle explode → per-seed min aggregates → band hashes
+  → **one** exploded band join finds candidates → exact-Jaccard
+  verification joins only the candidates;
+* SimHash: per-document token bit votes in an Arrow-batch kernel (no
+  shuffle) → band buckets on bit ranges (Hamming-adjacent candidates
+  without a cross join);
+* winnowing: char k-gram hashes and window minima in an Arrow-batch
+  kernel (map-only) → fingerprint equi-join for overlap pairs;
 * n-gram Jaccard: exploded-shingle equi-join restricted to candidate
   pairs (a < b) with group counts — the classic
   inter/union formulation.
@@ -16,10 +19,6 @@ Scale notes (100 TB): every operator here is a hash-shuffle on a bounded
 key (fingerprint, band hash, shingle) — no cross joins anywhere; AQE skew
 handling applies to the band join; shingle explosion is the dominant
 cost and is O(tokens) per doc.
-
-Reference analogue: the per-list ``list(set(...))`` dedup (O30,
-``/root/reference/new_approaches/final.py:431-435``) generalized to
-corpus scale.
 """
 
 from __future__ import annotations
@@ -143,17 +142,18 @@ def _explode_nonnull(df: DataFrame, arr_col: str, out_col: str,
     non-codegen Filter — measured at sf1.0 on the shingle array:
     0.9 s (outer form) vs 12.9 s (plain explode) for the identical
     result. The outer form infers nothing; fingerprint-less rows yield
-    one null that a cheap attribute filter drops. (Same hazard class
-    as the winnow note below — now applied to every expensive explode
-    in this module.)"""
+    one null that a cheap attribute filter drops. Every explode of a
+    generated array in this module takes this form."""
     return (df.select(*keep, F.explode_outer(arr_col).alias(out_col))
             .filter(F.col(out_col).isNotNull()))
 
 
-def minhash_signature_df(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", k: int = 3,
-                         num_hashes: int = 32) -> DataFrame:
-    """MinHash signatures via explode + per-seed min aggregates.
+def _shingle_mins(df: DataFrame, id_col: str, text_col: str, k: int,
+                  num_hashes: int) -> tuple[DataFrame, DataFrame]:
+    """``(base, mins)``: ``base`` is ``(id, shingles)`` (distinct word
+    k-grams) and ``mins`` is ``(id, h0 … h{num_hashes-1})``, the
+    per-seed MinHash values — the one signature computation behind
+    :func:`minhash_signature_df` and :func:`minhash_near_duplicates`.
 
     Two formulations were measured: (a) array expressions
     ``array_min(transform(shingles, s -> xxhash64(s, seed)))`` x32 —
@@ -174,11 +174,19 @@ def minhash_signature_df(df: DataFrame, id_col: str = "doc_id",
         F.min(F.xxhash64("s", F.lit(h))).alias(f"h{h}")
         for h in range(num_hashes)
     ])
-    sig = mins.select(
+    return base, mins
+
+
+def minhash_signature_df(df: DataFrame, id_col: str = "doc_id",
+                         text_col: str = "text", k: int = 3,
+                         num_hashes: int = 32) -> DataFrame:
+    """MinHash signatures ``(id, sig array<long>)``; a document without
+    shingles (NULL text) has no row."""
+    _, mins = _shingle_mins(df, id_col, text_col, k, num_hashes)
+    return mins.select(
         F.col(id_col),
         F.array(*[F.col(f"h{h}") for h in range(num_hashes)]).alias("sig"),
     )
-    return base.join(sig, id_col)
 
 
 def minhash_near_duplicates(
@@ -191,13 +199,7 @@ def minhash_near_duplicates(
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
     rows = num_hashes // bands
-    sh_arr = F.array_distinct(shingles_col(F.col(text_col), k))
-    base = df.select(F.col(id_col), sh_arr.alias("shingles"))
-    exploded = _explode_nonnull(base, "shingles", "s", [id_col])
-    sig = exploded.groupBy(id_col).agg(*[
-        F.min(F.xxhash64("s", F.lit(h))).alias(f"h{h}")
-        for h in range(num_hashes)
-    ])
+    base, sig = _shingle_mins(df, id_col, text_col, k, num_hashes)
     # band join carries ONLY (id, band, bh): candidate pairs are deduped
     # as bare id pairs before the (heavy) shingle arrays are joined back
     # once — shuffling shingles through the 8x band multiplicity was the
@@ -234,12 +236,11 @@ def minhash_near_duplicates(
     )
     # shingle arrays re-derived from the input (map-only, no shuffle) —
     # joined back only for the candidate ids
-    sh = base
     cand = (
-        cand.join(sh.select(F.col(id_col).alias("id_a"),
-                            F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"),
-                        F.col("shingles").alias("sh_b")), "id_b")
+        cand.join(base.select(F.col(id_col).alias("id_a"),
+                              F.col("shingles").alias("sh_a")), "id_a")
+        .join(base.select(F.col(id_col).alias("id_b"),
+                          F.col("shingles").alias("sh_b")), "id_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
@@ -354,45 +355,30 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def char_kgram_hashes_col(text: Column, k: int = 8,
-                          token_hash=None) -> Column:
-    """Hashes of every character k-gram of ``text`` (position order).
+def winnow_fingerprints_df(df: DataFrame, id_col: str = "doc_id",
+                           text_col: str = "text", k: int = 8,
+                           w: int = 4) -> DataFrame:
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
+    SIGMOD'03 — the MOSS scheme): hash every char k-gram, slide a
+    window of ``w`` consecutive hashes, keep each window's minimum,
+    dedup. Guarantees any shared substring of length >= k + w - 1
+    yields a shared fingerprint, at ~2/(w+1) sampling density —
+    the overlap/containment detector that set-resemblance MinHash
+    does not give you (a 5% verbatim inclusion barely moves Jaccard
+    but shares its fingerprints). Returns ``(id, fps: array<long>)``,
+    sorted distinct; map-only at any scale (no shuffle).
 
-    The rolling-hash family: classic winnowing rolls a Karp-Rabin hash
-    across the document one character at a time; here every k-gram is
-    hashed independently by a JVM hash over a substring — same k-gram →
-    same hash stream, identical selection semantics, and the whole
-    column stays inside codegen (a literal rolling update would force
-    a per-row UDF). Short documents (< k chars) contribute their single
-    truncated gram."""
-    if token_hash is None:
-        def token_hash(t):
-            return F.xxhash64(t)
-    n = F.length(text)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: token_hash(F.substring(text, i, k)))
-
-
-def _winnow_fps_md5_kernel(df: DataFrame, id_col: str, text_col: str,
-                           k: int, w: int) -> DataFrame:
-    """Arrow-batch winnowing fingerprints for the md5 token hash —
-    bit-identical to the expression form (r6; differential-pinned in
-    tests/test_dedup_similarity.py).
-
-    Why: the expression form evaluates an interpreted
-    ``conv(substring(md5(substring(text,i,k)),1,15),16,10)`` tree per
-    CHARACTER position (~16 M evaluations at sf1.0, ~3 s fully
-    parallel — the dominant cost of the winnow queries). Here the
-    grams hash through C-level ``hashlib.md5`` and the window minima
-    are one vectorized ``sliding_window_view().min`` per document
-    (guide §4.2: hand whole batches to native code). Exact-equivalence
-    notes: Spark's ``substring`` counts code points, as does Python
-    ``str`` slicing; ``conv(hex,16,10).cast(long)`` over 15 hex digits
-    is ``int(hexdigest()[:15], 16)`` (60 bits, always fits, always
-    positive); ``array_sort(array_distinct(...))`` is ``np.unique``;
-    a NULL text yields ``[NULL]`` in both forms (Spark's ``greatest``
-    skips nulls, so the start sequence is [1] and the single gram hash
-    is null)."""
+    An Arrow-batch kernel: the grams hash through C-level
+    ``hashlib.md5`` (the 60-bit :func:`md5_token_hash`, so DuckDB can
+    recompute every fingerprint) and the window minima are one
+    vectorized ``sliding_window_view().min`` per document (guide §4.2:
+    hand whole batches to native code). An interpreted
+    ``conv(substring(md5(...)))`` tree per CHARACTER position was the
+    dominant winnow cost (~16 M evaluations at sf1.0). Semantics: grams
+    are code-point slices, as Spark's ``substring`` counts them; a text
+    shorter than ``k`` contributes its single truncated gram; a window
+    count below 1 clamps to one window over all grams; a NULL text
+    yields ``[NULL]`` (one null gram hash), not a NULL array."""
     import hashlib
 
     import numpy as np
@@ -413,10 +399,6 @@ def _winnow_fps_md5_kernel(df: DataFrame, id_col: str, text_col: str,
             out = []
             for t in b[text_col]:
                 if t is None:
-                    # expression-form parity: greatest(NULL, 1) = 1 in
-                    # Spark (greatest skips nulls), so a NULL text
-                    # yields ONE null gram hash -> fps = [NULL], not a
-                    # NULL array
                     out.append([None])
                     continue
                 n = len(t)
@@ -436,52 +418,11 @@ def _winnow_fps_md5_kernel(df: DataFrame, id_col: str, text_col: str,
     return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
-def winnow_fingerprints_df(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", k: int = 8,
-                           w: int = 4, token_hash=None) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS scheme): hash every char k-gram, slide a
-    window of ``w`` consecutive hashes, keep each window's minimum,
-    dedup. Guarantees any shared substring of length >= k + w - 1
-    yields a shared fingerprint, at ~2/(w+1) sampling density —
-    the overlap/containment detector that set-resemblance MinHash
-    does not give you (a 5% verbatim inclusion barely moves Jaccard
-    but shares its fingerprints). Returns ``(id, fps: array<long>)``,
-    sorted distinct; map-only at any scale (two narrow projections,
-    no shuffle).
-
-    Deliberately a DataFrame transform, not a single Column: the
-    gram-hash array must be materialized as a column ATTRIBUTE before
-    the window-min pass — nesting it as a subexpression inside the
-    per-window lambda makes Spark re-evaluate the entire hash array
-    for every window (O(grams²) hashing; measured 50× slower at
-    sf0.001).
-
-    The md5 token hash (the cross-engine-reproducible one the
-    oracle-checked queries use) dispatches to the Arrow-batch kernel
-    above — per-character interpreted md5+conv trees were the dominant
-    winnow cost; the kernel is differential-pinned bit-identical. The
-    default xxhash64 stays on the expression path (no compatible
-    Python xxh64 in the sanctioned import surface)."""
-    if token_hash is md5_token_hash:
-        return _winnow_fps_md5_kernel(df, id_col, text_col, k, w)
-    hs = char_kgram_hashes_col(F.col(text_col), k, token_hash)
-    step1 = df.select(F.col(id_col), hs.alias("__hs"))
-    n_h = F.size(F.col("__hs"))
-    starts = F.sequence(F.lit(1), F.greatest(n_h - (w - 1), F.lit(1)))
-    mins = F.transform(
-        starts, lambda i: F.array_min(F.slice(F.col("__hs"), i, w)))
-    return step1.select(
-        F.col(id_col),
-        F.array_sort(F.array_distinct(mins)).alias("fps"),
-    )
-
-
 def winnow_overlap_pairs(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", k: int = 8, w: int = 4,
                          min_shared: int = 2,
-                         max_fp_doc_freq: int | None = None,
-                         token_hash=None) -> DataFrame:
+                         max_fp_doc_freq: int | None = None
+                         ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints
     — partial-overlap / containment candidates (quote farms, mirrored
     boilerplate, spliced documents).
@@ -490,18 +431,8 @@ def winnow_overlap_pairs(df: DataFrame, id_col: str = "doc_id",
     optional hot-fingerprint cap via one frequency window (a
     fingerprint in F docs contributes F² pair rows), equi-self-join,
     pair count. Returns (id_a, id_b, shared_fps)."""
-    fpd = winnow_fingerprints_df(df, id_col, text_col, k, w, token_hash)
-    # explode_outer, NOT explode: for a plain explode Spark's
-    # InferFiltersFromGenerate synthesizes a `size(fps) > 0` predicate
-    # and pushes it below the projections — inlining the entire winnow
-    # expression tree (gram hashes re-derived inside the window-min
-    # lambda) into one per-row Filter: the O(grams²) hazard again,
-    # measured 60× slower at sf0.001. The outer form infers nothing;
-    # the null rows of fingerprint-less documents are dropped by a
-    # cheap attribute filter that cannot be pushed past the Generate.
-    fps = (fpd.select(F.col(id_col),
-                      F.explode_outer("fps").alias("fp"))
-           .filter(F.col("fp").isNotNull()))
+    fpd = winnow_fingerprints_df(df, id_col, text_col, k, w)
+    fps = _explode_nonnull(fpd, "fps", "fp", [id_col])
     if max_fp_doc_freq is not None:
         # frequency cap via ONE window over the exploded fingerprints,
         # NOT a groupBy + join-back: the fingerprint map above is the
@@ -535,30 +466,30 @@ def md5_token_hash(tok: Column) -> Column:
     """60-bit token hash from md5's first 15 hex digits.
 
     Cross-engine reproducible (DuckDB: ``('0x' || substr(md5(t),1,15))
-    ::BIGINT``) — used by the oracle-checked registry query; the default
-    xxhash64 is the cheaper production hash."""
+    ::BIGINT``). The column form of the hash the SimHash and winnowing
+    kernels compute per token in Python
+    (``int(md5(tok).hexdigest()[:15], 16)``) — always positive, always
+    fits a long."""
     return F.conv(F.substring(F.md5(F.encode(tok, "UTF-8")), 1, 15),
                   16, 10).cast("long")
 
 
-def _simhash_md5_kernel(df: DataFrame, id_col: str, text_col: str,
-                        bits: int) -> DataFrame:
-    """Arrow-batch SimHash for the md5 token hash — bit-identical to
-    the explode + 60-aggregate expression form (r6;
-    differential-pinned in tests/test_dedup_similarity.py).
+def simhash_df(df: DataFrame, id_col: str = "doc_id",
+               text_col: str = "text",
+               bits: int = SIMHASH_BITS) -> DataFrame:
+    """Per-document SimHash ``(id, simhash)``: every space-split token
+    votes +1/-1 on each of ``bits`` bits of its :func:`md5_token_hash`
+    value; a bit is set where the vote is positive.
 
-    Why: the expression form explodes every token (one interpreted
-    md5+conv tree per token) and shuffles (id, hash) rows into a
-    ``bits``-column conditional-sum aggregate; per document the whole
-    computation is a closed function of its token list, so it runs
-    here as one numpy pass (C-level hashlib per token, vectorized bit
-    votes) with NO shuffle at all. Exact-equivalence notes: Spark's
-    ``split(text, ' ')`` is Java ``split(regex, -1)`` — trailing empty
-    strings kept, ``''`` splits to ``['']`` — matching Python
-    ``str.split(' ')``; only NULL tokens are filtered (empty tokens
-    vote like any other); a NULL text explodes to a single null row
-    and is filtered, so the document has no group row — the kernel
-    likewise emits nothing for it."""
+    An Arrow-batch kernel with NO shuffle: per document the whole
+    computation is a closed function of its token list, so it runs as
+    one numpy pass (C-level hashlib per token, vectorized bit votes)
+    instead of a token explode through a ``bits``-column aggregate.
+    Semantics (pinned by the DuckDB oracle of ``simhash_neardup``):
+    tokens are ``str.split(' ')``, Spark's ``split(text, ' ')`` —
+    trailing empty strings kept, ``''`` splits to ``['']`` — and empty
+    tokens vote like any other; a tie leaves the bit clear; a NULL text
+    has no row."""
     import hashlib
 
     import numpy as np
@@ -595,50 +526,10 @@ def _simhash_md5_kernel(df: DataFrame, id_col: str, text_col: str,
     return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
-def simhash_df(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text",
-               bits: int = SIMHASH_BITS,
-               token_hash=None) -> DataFrame:
-    """Per-document SimHash: token explode → per-bit majority vote.
-
-    The 64 per-bit sums are one groupBy with ``bits`` conditional-sum
-    aggregates (map-side combined); assembly is a sum of shifted bit
-    flags — everything whole-stage-codegen'd. ``token_hash`` swaps the
-    per-token hash (default xxhash64; :func:`md5_token_hash` for the
-    cross-engine-checkable form, which dispatches to the Arrow kernel
-    above — one shuffle-free numpy pass instead of a token explode
-    through a 60-aggregate shuffle).
-    """
-    if token_hash is md5_token_hash:
-        return _simhash_md5_kernel(df, id_col, text_col, bits)
-    if token_hash is None:
-        def token_hash(t):
-            return F.xxhash64(t)
-    toks = df.select(
-        F.col(id_col),
-        F.explode_outer(F.split(F.col(text_col), " ")).alias("tok"),
-    ).filter(F.col("tok").isNotNull()).select(
-        F.col(id_col), token_hash(F.col("tok")).alias("th"))
-    bit_votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1)) == 1,
-                   F.lit(1)).otherwise(F.lit(-1))
-        ).alias(f"b{b}")
-        for b in range(bits)
-    ]
-    votes = toks.groupBy(id_col).agg(*bit_votes)
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        acc = acc + F.when(F.col(f"b{b}") > 0,
-                           F.lit(1 << b).cast("long")).otherwise(F.lit(0))
-    return votes.select(F.col(id_col), acc.alias("simhash"))
-
-
 def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                             text_col: str = "text",
                             bands: int = 4,
-                            max_hamming: int = 3,
-                            token_hash=None) -> DataFrame:
+                            max_hamming: int = 3) -> DataFrame:
     """Candidate pairs whose SimHashes agree on >=1 of ``bands`` bit-bands
     (catches all pairs with Hamming distance < bands), verified by exact
     Hamming distance <= max_hamming. With max_hamming < bands the band
@@ -646,7 +537,7 @@ def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     every pair at Hamming <= max_hamming — an oracle-checkable set."""
     bits_per_band = SIMHASH_BITS // bands
     mask = (1 << bits_per_band) - 1
-    sh = simhash_df(df, id_col, text_col, token_hash=token_hash)
+    sh = simhash_df(df, id_col, text_col)
     banded = sh.select(
         F.col(id_col), "simhash",
         F.explode(F.array(*[

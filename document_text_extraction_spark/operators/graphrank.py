@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tempdirs import scratch_dir
+
 
 def pagerank(edges: DataFrame, iterations: int = 10,
              damping: float = 0.85,
@@ -37,11 +39,9 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     multi-counts an edge. Nodes = every distinct src or dst. ``work_dir``
     backs the per-round checkpoints AND the returned DataFrame (same
     lifecycle contract as ``connected_components``)."""
-    import tempfile
-
     spark = edges.sparkSession
     if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="dte_pr_")
+        work_dir = scratch_dir("dte_pr_")
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
                      w.alias("w"))
@@ -104,11 +104,9 @@ def hits(edges: DataFrame, iterations: int = 5,
     node-keyed equi-join + one map-side-combined sum (shuffle O(|E|)),
     the L2 norm is a driver-side scalar aggregate, and state
     checkpoints to parquet each round to cap plan growth."""
-    import tempfile
-
     spark = edges.sparkSession
     if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="dte_hits_")
+        work_dir = scratch_dir("dte_hits_")
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
                       w.alias("w"))).persist()

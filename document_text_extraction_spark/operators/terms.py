@@ -122,7 +122,8 @@ def cooccurrence_pmi(docs: DataFrame, window: int = 2, k: int = 30,
 
     * pair generation is MAP-ONLY — a ``flatten(transform(...))`` over
       each document's token array enumerates the window offsets
-      in-place (the k-gram trick of ``dedup.char_kgram_hashes_col``);
+      in-place (a ``transform`` over a ``sequence`` of start offsets,
+      as ``dedup.shingles_col`` builds word k-grams);
       no positions self-join ever touches the corpus;
     * pair counts and unigram counts are two map-side-combined
       groupBys whose key spaces are vocab-bounded; the unigram table

@@ -1890,13 +1890,6 @@ _REL_RE = re.compile(
 _REL_EXTERNAL_RE = re.compile(r'TargetMode="External"')
 
 
-def extract_docx(data: bytes) -> tuple[str, list[dict]]:
-    """Back-compat form of :func:`extract_docx_full` without the
-    hyperlink targets."""
-    text, spans, _ = extract_docx_full(data)
-    return text, spans
-
-
 def extract_docx_full(data: bytes) -> tuple[str, list[dict], list[str]]:
     """Paragraph text from word/document.xml, one block per <w:p>
     (reference: python-docx paragraphs, ``approach4_v1.py:33-42``),

@@ -948,22 +948,3 @@ def read_incremental(spark: SparkSession, out_dir: str,
     if not dirs:
         return spark.createDataFrame([], schema=OUTPUT_SCHEMA)
     return spark.read.option("basePath", data_dir).parquet(*dirs)
-
-
-def partition_metrics(spark: SparkSession, out_dir: str,
-                      run_id: str = "run1") -> DataFrame:
-    """Committed per-partition counters as a DataFrame (FIXTURES.md §3)."""
-    manifest = _load_manifest(out_dir, run_id)
-    rows = []
-    for si, s in manifest["slices"].items():
-        if not s.get("committed"):
-            continue
-        for p in s["partitions"]:
-            rows.append((
-                run_id, int(si), int(p["partition_id"]), int(p["docs"]),
-                int(p["bytes_in"] or 0), int(p["parse_failures"] or 0),
-                float(p["elapsed_ms"] or 0.0),
-            ))
-    schema = ("run_id string, slice int, partition_id int, docs long, "
-              "bytes_in long, parse_failures long, elapsed_ms double")
-    return spark.createDataFrame(rows, schema=schema)

@@ -32,26 +32,11 @@ from .operators import (blocklist, components, contamination, dedup,
 from .operators.sections import sections_df
 from .operators.sessionize import mode_by, running_sum, user_session_counts
 from .sources import web_pages_from_documents
+from .tempdirs import scratch_dir
 
 # ---------------------------------------------------------------------------
 # shared fragments
 # ---------------------------------------------------------------------------
-
-def _scratch_dir(prefix: str) -> str:
-    """mkdtemp + registered end-of-process cleanup (ADVICE r4): the
-    registry queries that materialize real writes (streaming stores,
-    z-ordered layouts, output partitions) keep their directories alive
-    for the harness to read the returned lazy DataFrame, then this
-    atexit hook removes them — repeated bench/correctness runs no
-    longer accumulate /tmp garbage."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
 
 CHUNK_SQL = (
     r"regexp_replace(text, '((?:\S+ ){9}\S+) ', '\1' || chr(10), 'g')"
@@ -424,7 +409,7 @@ def q_streaming_extract_roundtrip(spark, sf_dir):
     chunking the batch roundtrips use (streaming/stream.py)."""
     import shutil
     from .streaming.stream import run_stream_available_now
-    base = _scratch_dir("dte_q_stream_")
+    base = scratch_dir("dte_q_stream_")
     pages = web_pages_from_documents(spark, sf_dir)
     pages.write.mode("overwrite").parquet(f"{base}/in")
     run_stream_available_now(spark, f"{base}/in", f"{base}/out",
@@ -459,7 +444,7 @@ def q_wet_roundtrip(spark, sf_dir):
     rows (parse failures have nothing to publish)."""
     import shutil
     from .sinks import wet_text_df, write_wet
-    base = _scratch_dir("dte_q_wet_")
+    base = scratch_dir("dte_q_wet_")
     out = _extracted(spark, sf_dir)
     # publish only ok rows — a parse_failure's empty text is a counted
     # failure, not corpus content (the sink itself stays generic)
@@ -1864,10 +1849,9 @@ def q_winnow_fingerprints(spark, sf_dir):
     char-8-gram hashes → min of each 4-hash window → sorted distinct
     set. Every 5th document, full fingerprint set serialized — the
     oracle recomputes the identical selection in DuckDB via the
-    cross-engine md5-60bit gram hash (production default: xxhash64)."""
+    cross-engine md5-60bit gram hash."""
     d = _spread(_docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0))
-    fpd = dedup.winnow_fingerprints_df(
-        d, token_hash=dedup.md5_token_hash)
+    fpd = dedup.winnow_fingerprints_df(d)
     return fpd.select(
         "doc_id",
         F.size("fps").cast("long").alias("n_fp"),
@@ -1901,9 +1885,7 @@ def q_winnow_overlap(spark, sf_dir):
                  F.lit(" spliced outro")).alias("text"),
     )
     wd = _spread(d.unionAll(spliced))
-    return dedup.winnow_overlap_pairs(
-        wd, min_shared=2, max_fp_doc_freq=6,
-        token_hash=dedup.md5_token_hash)
+    return dedup.winnow_overlap_pairs(wd, min_shared=2, max_fp_doc_freq=6)
 
 
 SQL_WINNOW_OVERLAP = (
@@ -1967,12 +1949,11 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     window. Final output == the batch operator == SQL_INCREMENTAL_DEDUP.
     """
     import shutil
-    import tempfile
     from .streaming.stream import (
         run_incremental_dedup_stream,
         seed_fingerprint_store,
     )
-    base = tempfile.mkdtemp(prefix="dte_q_sdedup_")
+    base = scratch_dir("dte_q_sdedup_")
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     seed_fingerprint_store(docs, f"{base}/fps")
     recap, newer, inner_dup = _planted_increment(docs)
@@ -1985,7 +1966,7 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     # stream finished: input/checkpoint are dead weight. {base}/out
     # BACKS the returned DataFrame (parquet reads are lazy — the files
     # are read at collection time), so out/ and fps/ must outlive the
-    # caller's use of the result and are intentionally left in place.
+    # caller's use of the result; atexit removes them with base.
     shutil.rmtree(f"{base}/in", ignore_errors=True)
     shutil.rmtree(f"{base}/ck", ignore_errors=True)
     return spark.read.parquet(f"{base}/out").select("doc_id", "text")
@@ -2030,7 +2011,7 @@ def q_streaming_neardup_dedup(spark, sf_dir):
         run_neardup_dedup_stream,
         seed_band_store_table,
     )
-    base = _scratch_dir("dte_q_sneardup_")
+    base = scratch_dir("dte_q_sneardup_")
     tbl = "neardup_store_" + os.path.basename(base).rsplit("_", 1)[-1]
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     seed_band_store_table(docs, tbl, n_buckets=8,
@@ -2045,14 +2026,14 @@ def q_streaming_neardup_dedup(spark, sf_dir):
     recap.unionAll(fresh).unionAll(inner).write.mode(
         "overwrite").parquet(f"{base}/in")
     run_neardup_dedup_stream(
-        spark, f"{base}/in", None, f"{base}/out", f"{base}/ck",
-        store_table=tbl, store_buckets=8, store_path=f"{base}/store")
+        spark, f"{base}/in", tbl, f"{base}/out", f"{base}/ck",
+        store_buckets=8, store_path=f"{base}/store")
     late = docs.filter(F.col("doc_id") % 9 == 1).select(
         (F.col("doc_id") + 500000).alias("doc_id"), rev.alias("text"))
     late.write.mode("append").parquet(f"{base}/in")
     run_neardup_dedup_stream(
-        spark, f"{base}/in", None, f"{base}/out", f"{base}/ck",
-        store_table=tbl, store_buckets=8, store_path=f"{base}/store")
+        spark, f"{base}/in", tbl, f"{base}/out", f"{base}/ck",
+        store_buckets=8, store_path=f"{base}/store")
     # out/ BACKS the returned (lazy) DataFrame and must outlive it;
     # the store is an EXTERNAL table under the scratch dir (no
     # warehouse-dir dependency) — drop the catalog entry, atexit
@@ -2139,10 +2120,8 @@ def q_simhash_neardup(spark, sf_dir):
     max_hamming=3 the band pre-filter is complete (pigeonhole), so the
     output is exactly every pair at Hamming<=3 — which the DuckDB
     oracle recomputes bit-for-bit using the cross-engine md5-based
-    token hash (production default stays xxhash64)."""
-    out = dedup.simhash_near_duplicates(
-        _near_docs(spark, sf_dir), token_hash=dedup.md5_token_hash
-    )
+    token hash."""
+    out = dedup.simhash_near_duplicates(_near_docs(spark, sf_dir))
     return out.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
@@ -3019,7 +2998,7 @@ def q_wat_roundtrip(spark, sf_dir):
     import shutil
     from .functions import urls as U
     from .sinks import wat_links_df, write_wat
-    base = _scratch_dir("dte_q_wat_")
+    base = scratch_dir("dte_q_wat_")
     out = _extracted(spark, sf_dir)
     ok = out.filter((F.col("lineage.route") == "html")
                     & (F.col("lineage.status") == "ok"))
@@ -4157,7 +4136,7 @@ def q_pruned_scan(spark, sf_dir):
         "event_id", "user_id", "event_type")
     z = zorder_key_col(F.col("user_id"),
                        F.shiftrightunsigned(F.col("event_id"), 6))
-    out_dir = _scratch_dir("dte_q_zscan_")
+    out_dir = scratch_dir("dte_q_zscan_")
     cluster_by_zorder(ev, z, n_files=16).write.mode(
         "overwrite").parquet(out_dir)
     manifest = stats_manifest(out_dir, ["user_id"])
@@ -4419,21 +4398,19 @@ SQL_LENGTH_QUANTILES = (
 # FRONT group, not mid-dict.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ---- FIRST 50 = the driver window (risk-first; the rotation test
-    # enforces dirty-set containment). The single-implementation change
-    # edited oracle.py/kernels.py/pipeline.py, so every query that runs
-    # the extraction map is dirty, as are the queries importing the
-    # frontier/sketches/fields/media modules whose docstrings changed:
-    # 40 dirty queries, all inside the window; the unchanged dedup and
-    # text-stat queries that held window slots moved to the tail. -----
-    "semdedup_scaled": q_semdedup_scaled,
-    "ann_ivf_trained": q_ann_ivf_trained,
+    # enforces dirty-set containment). The dirty set overflows the
+    # window (64 queries): the extraction-core edits mark every query
+    # that runs the extraction map dirty, the dedup/neardup/components/
+    # graphrank edits (and docstring-only media/terms edits) mark their
+    # consumers. Every directly edited query sits here and every slot
+    # holds a dirty query; 14 transitively dirty queries overflow past
+    # position 50 (the full 115-query sweep re-verifies them). -----
+    "streaming_neardup_dedup": q_streaming_neardup_dedup,
+    "pruned_scan": q_pruned_scan,
+    "streaming_incremental_dedup": q_streaming_incremental_dedup,
     "extract_charset_roundtrip": q_extract_charset_roundtrip,
-    "media_features": q_media_features,
     "media_phash": q_media_phash,
-    "media_sample_plan": q_media_sample_plan,
-    "semdedup": q_semdedup,
     "kmv_distinct": q_kmv_distinct,
-    "cooccurrence_pmi": q_cooccurrence_pmi,
     "winnow_fingerprints": q_winnow_fingerprints,
     "minhash_neardup": q_minhash_neardup,
     "simhash_neardup": q_simhash_neardup,
@@ -4475,8 +4452,17 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "robots_noindex": q_robots_noindex,
     "link_graph": q_link_graph,
     "status_cube": q_status_cube,
+    "host_hits": q_host_hits,
+    "host_pagerank": q_host_pagerank,
+    "dup_clusters": q_dup_clusters,
     # ---- position 51+: transitive-overflow (saturated state) and
     # long-stable greens (r2-r5 rows + pytest) -------------------------
+    "semdedup_scaled": q_semdedup_scaled,
+    "ann_ivf_trained": q_ann_ivf_trained,
+    "media_features": q_media_features,
+    "media_sample_plan": q_media_sample_plan,
+    "semdedup": q_semdedup,
+    "cooccurrence_pmi": q_cooccurrence_pmi,
     "dedup_keep_first": q_dedup_keep_first,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
@@ -4488,8 +4474,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "exact_substring_spans": q_exact_substring_spans,
     "exact_substring_dedup": q_exact_substring_dedup,
     "curate_corpus": q_curate_corpus,
-    "streaming_neardup_dedup": q_streaming_neardup_dedup,
-    "pruned_scan": q_pruned_scan,
     "bm25_topk": q_bm25_topk,
     "vocab_coverage": q_vocab_coverage,
     "zorder_locality": q_zorder_locality,
@@ -4501,20 +4485,17 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_exact": q_dedup_exact,
     "incremental_dedup": q_incremental_dedup,
     "train_shuffle_shards": q_train_shuffle_shards,
-    "host_hits": q_host_hits,
     "registrable_domains": q_registrable_domains,
     "domain_quota": q_domain_quota,
     "perplexity_buckets": q_perplexity_buckets,
     "dsir_select": q_dsir_select,
     "asof_last_signup": q_asof_last_signup,
     "range_join_windows": q_range_join_windows,
-    "dup_clusters": q_dup_clusters,
     "cluster_dedup_count": q_cluster_dedup_count,
     "canonical_text": q_canonical_text,
     "quality_scores": q_quality_scores,
     "cv_address_planted": q_cv_address_planted,
     "hypertable_rollup": q_hypertable_rollup,
-    "streaming_incremental_dedup": q_streaming_incremental_dedup,
     "topk_longest": q_topk_longest,
     "embedding_neardup": q_embedding_neardup,
     "ann_lsh_topk": q_ann_lsh_topk,
@@ -4541,7 +4522,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "train_val_split": q_train_val_split,
     "corpus_mixture_sample": q_corpus_mixture_sample,
     "chunk_windows": q_chunk_windows,
-    "host_pagerank": q_host_pagerank,
 }
 
 ORACLE_SQL: dict[str, str] = {

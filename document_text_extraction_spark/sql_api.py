@@ -33,9 +33,3 @@ def register_views(spark: SparkSession, sf_dir: str,
     pages.createOrReplaceTempView("web_pages")
     pipeline.extract_df(pages, n_buckets=n_buckets) \
         .createOrReplaceTempView("extracted")
-
-
-def register_output(spark: SparkSession, out_dir: str,
-                    view: str = "extracted_table") -> None:
-    """Register a completed run's output (written by run_extraction)."""
-    spark.read.parquet(f"{out_dir}/data").createOrReplaceTempView(view)

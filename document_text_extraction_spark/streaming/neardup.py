@@ -7,9 +7,9 @@ catches. This module keeps the admitted corpus's MinHash state in a
 BAND STORE — one row per (band, band-signature-slice) of every
 admitted doc — and each micro-batch:
 
-1. computes batch signatures (the explode+min formulation of
-   ``operators.dedup.minhash_signature_df`` — one map-side-combined
-   shuffle);
+1. computes batch signatures with
+   ``operators.dedup.minhash_signature_df`` (explode + per-seed min —
+   one map-side-combined shuffle);
 2. equi-joins its band rows against the store (shuffle keyed on the
    band value, never on text) and estimates Jaccard as the
    signature-agreement fraction;
@@ -32,26 +32,23 @@ similarity happened to be transitive). For exact copies the two
 formulations coincide (equality is transitive) — that is the case the
 registry oracle pins; the near-pair behavior is property-tested.
 
-Store-side scale note (VERDICT r4 #3 — the bucketed layout is now
-IMPLEMENTED, not just declared): with ``store_table`` set, the band
-store is a Spark BUCKETED table keyed on ``bkey = xxhash64(band,
-bval)`` (``seed_band_store_table``), so the per-batch candidate join
-never moves the store — the planner either broadcasts the (small)
-arrival side against the store scan, or, above the broadcast
-threshold, sort-merge-joins with the store scan read PRE-PARTITIONED
-(``Bucketed: true``, zero store-side Exchange; plan-asserted in
-tests/test_streaming_neardup_store.py). Only the arrival side
-shuffles, into the store's bucket count. Joining on the single
-``bkey`` column (instead of raw (band, bval)) is what lets the bucket
-spec satisfy the join's distribution requirement; a 64-bit collision
-can only ADD candidate pairs, which the signature-agreement threshold
-then filters — it cannot drop a true candidate. Store appends are
-per-batch partitions ``batch_id=<run-token>_<n>``; an at-least-once
-replay re-reads the store WITHOUT its own partition (identical
-admit/reject decisions) and appends a duplicate copy of its band
-rows, which downstream batches see only as candidate multiplicity —
-never a changed decision (rejection is set membership). The legacy
-path-based store layout remains for ``band_store`` callers.
+Store-side scale note: the band store is a Spark BUCKETED table keyed
+on ``bkey = xxhash64(band, bval)`` (``seed_band_store_table``), so the
+per-batch candidate join never moves the store — the planner either
+broadcasts the (small) arrival side against the store scan, or, above
+the broadcast threshold, sort-merge-joins with the store scan read
+PRE-PARTITIONED (``Bucketed: true``, zero store-side Exchange;
+plan-asserted in tests/test_streaming_neardup_store.py). Only the
+arrival side shuffles, into the store's bucket count. Joining on the
+single ``bkey`` column (instead of raw (band, bval)) is what lets the
+bucket spec satisfy the join's distribution requirement; a 64-bit
+collision can only ADD candidate pairs, which the signature-agreement
+threshold then filters — it cannot drop a true candidate. Store
+appends are per-batch partitions ``batch_id=<run-token>_<n>``; an
+at-least-once replay re-reads the store WITHOUT its own partition
+(identical admit/reject decisions) and appends a duplicate copy of its
+band rows, which downstream batches see only as candidate multiplicity
+— never a changed decision (rejection is set membership).
 """
 
 from __future__ import annotations
@@ -61,28 +58,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import shingles_col
+from ..operators.dedup import minhash_signature_df
 from .stream import _dedup_run_token
 
 NUM_HASHES = 16
 BANDS = 4  # rows per band = NUM_HASHES // BANDS
-
-
-def minhash_sig_df(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", k: int = 3,
-                   num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(id, sig array<long>): explode + per-seed min aggregates (the
-    measured-fast formulation from operators/dedup.py)."""
-    sh = F.array_distinct(shingles_col(F.col(text_col), k))
-    exploded = df.select(F.col(id_col), F.explode(sh).alias("s"))
-    mins = exploded.groupBy(id_col).agg(*[
-        F.min(F.xxhash64("s", F.lit(h))).alias(f"h{h}")
-        for h in range(num_hashes)
-    ])
-    return mins.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{h}") for h in range(num_hashes)])
-        .alias("sig"))
 
 
 def band_rows_df(sig_df: DataFrame, id_col: str = "doc_id",
@@ -105,9 +85,9 @@ def band_rows_df(sig_df: DataFrame, id_col: str = "doc_id",
 
 def _agreement(a, b):
     """Signature-agreement fraction — divides by the ACTUAL signature
-    length (``F.size``), not the module default, so callers passing a
-    non-default ``num_hashes`` to ``minhash_sig_df`` get correctly
-    scaled Jaccard estimates."""
+    length (``F.size``), not the module default, so signatures of a
+    non-default ``num_hashes`` get correctly scaled Jaccard
+    estimates."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
         F.lit(0), lambda acc, v: acc + v,
@@ -120,16 +100,21 @@ def _with_bkey(rows: DataFrame) -> DataFrame:
     return rows.withColumn("bkey", F.xxhash64("band", "bval"))
 
 
-def seed_band_store(docs: DataFrame, band_store: str,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> None:
-    """Materialize the admitted corpus's band rows as the store's seed
-    partition — the streaming job's initial state (legacy path-based
-    layout; the scale layout is :func:`seed_band_store_table`)."""
-    rows = band_rows_df(minhash_sig_df(docs, id_col, text_col), id_col)
-    (rows.withColumnRenamed(id_col, "src_id")
-     .write.mode("overwrite")
-     .parquet(os.path.join(band_store, "batch_id=seed0")))
+def _write_band_rows(docs: DataFrame, table: str, batch_id: str,
+                     mode: str, n_buckets: int, path: str | None,
+                     id_col: str, text_col: str) -> None:
+    """Write the band rows of ``docs`` (keyed ``src_id``) as the store
+    table's partition ``batch_id``, bucketed on ``bkey``."""
+    sig = minhash_signature_df(docs, id_col, text_col,
+                               num_hashes=NUM_HASHES)
+    w = (_with_bkey(band_rows_df(sig, id_col))
+         .withColumnRenamed(id_col, "src_id")
+         .withColumn("batch_id", F.lit(batch_id))
+         .write.mode(mode).partitionBy("batch_id")
+         .bucketBy(n_buckets, "bkey").sortBy("bkey"))
+    if path is not None:
+        w = w.option("path", path)
+    w.saveAsTable(table)
 
 
 def seed_band_store_table(docs: DataFrame, table: str,
@@ -145,14 +130,8 @@ def seed_band_store_table(docs: DataFrame, table: str,
     metadata is unchanged) — callers owning a scratch/lake directory
     pass it so the store does not depend on the session's
     warehouse dir."""
-    rows = band_rows_df(minhash_sig_df(docs, id_col, text_col), id_col)
-    w = (_with_bkey(rows).withColumnRenamed(id_col, "src_id")
-         .withColumn("batch_id", F.lit("seed0"))
-         .write.mode("overwrite").partitionBy("batch_id")
-         .bucketBy(n_buckets, "bkey").sortBy("bkey"))
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
+    _write_band_rows(docs, table, "seed0", "overwrite", n_buckets, path,
+                     id_col, text_col)
 
 
 def store_candidate_rejections(bands: DataFrame, store: DataFrame,
@@ -169,19 +148,18 @@ def store_candidate_rejections(bands: DataFrame, store: DataFrame,
 
 
 def run_neardup_dedup_stream(spark: SparkSession, input_path: str,
-                             band_store: str | None, output_path: str,
+                             store_table: str, output_path: str,
                              checkpoint_path: str,
                              threshold: float = 0.7,
                              id_col: str = "doc_id",
                              text_col: str = "text",
-                             store_table: str | None = None,
                              store_buckets: int = 32,
                              store_path: str | None = None):
-    """availableNow near-dup dedup over a parquet increment directory;
-    see module docstring for semantics, replay safety, and the two
-    store layouts (``band_store`` path vs bucketed ``store_table``)."""
-    if (band_store is None) == (store_table is None):
-        raise ValueError("exactly one of band_store / store_table")
+    """availableNow near-dup dedup over a parquet increment directory
+    against the bucketed band store ``store_table`` (seeded by
+    :func:`seed_band_store_table`; ``store_buckets`` and ``store_path``
+    must match the seed's); see module docstring for semantics and
+    replay safety."""
     schema = spark.read.parquet(input_path).schema
     inc = (spark.readStream.schema(schema).format("parquet")
            .load(input_path))
@@ -190,24 +168,14 @@ def run_neardup_dedup_stream(spark: SparkSession, input_path: str,
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         part = f"{run_token}_{batch_id}"
-        sig = minhash_sig_df(batch_df, id_col, text_col)
+        sig = minhash_signature_df(batch_df, id_col, text_col,
+                                   num_hashes=NUM_HASHES)
         bands = band_rows_df(sig, id_col)
-        if store_table is not None:
-            store = (sess.table(store_table)
-                     .filter(F.col("batch_id") != part)
-                     .select("bkey", F.col("sig").alias("sig_store")))
-            vs_store = store_candidate_rejections(
-                bands, store, threshold, id_col)
-        else:
-            store = (sess.read.parquet(band_store)
-                     .filter(F.col("batch_id") != part)
-                     .select("band", "bval",
-                             F.col("sig").alias("sig_store")))
-            vs_store = (bands.join(store, ["band", "bval"])
-                        .filter(_agreement(F.col("sig"),
-                                           F.col("sig_store"))
-                                >= threshold)
-                        .select(id_col).distinct())
+        store = (sess.table(store_table)
+                 .filter(F.col("batch_id") != part)
+                 .select("bkey", F.col("sig").alias("sig_store")))
+        vs_store = store_candidate_rejections(
+            bands, store, threshold, id_col)
         l, r = bands.alias("l"), bands.alias("r")
         vs_batch = (l.join(r, (F.col("l.band") == F.col("r.band"))
                            & (F.col("l.bval") == F.col("r.bval"))
@@ -223,20 +191,8 @@ def run_neardup_dedup_stream(spark: SparkSession, input_path: str,
         try:
             (admitted.write.mode("overwrite")
              .parquet(os.path.join(output_path, f"batch_id={part}")))
-            adm_rows = (band_rows_df(
-                minhash_sig_df(admitted, id_col, text_col), id_col)
-                .withColumnRenamed(id_col, "src_id"))
-            if store_table is not None:
-                w = (_with_bkey(adm_rows)
-                     .withColumn("batch_id", F.lit(part))
-                     .write.mode("append").partitionBy("batch_id")
-                     .bucketBy(store_buckets, "bkey").sortBy("bkey"))
-                if store_path is not None:
-                    w = w.option("path", store_path)
-                w.saveAsTable(store_table)
-            else:
-                (adm_rows.write.mode("overwrite")
-                 .parquet(os.path.join(band_store, f"batch_id={part}")))
+            _write_band_rows(admitted, store_table, part, "append",
+                             store_buckets, store_path, id_col, text_col)
         finally:
             admitted.unpersist()
 

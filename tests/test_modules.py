@@ -1,5 +1,8 @@
 """Tests for streaming, multimodal plumbing, and section segmentation."""
 
+import contextlib
+import uuid
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -721,26 +724,40 @@ def _snd_docs(spark):
     return rows
 
 
+@contextlib.contextmanager
+def _snd_store(spark, seeded, tmp_path):
+    """A bucketed band store seeded with ``seeded``, kept under
+    ``tmp_path`` (not the session's warehouse dir) and dropped on exit;
+    yields ``run(input, output, checkpoint)`` for the near-dup stream."""
+    from document_text_extraction_spark.streaming.neardup import (
+        run_neardup_dedup_stream,
+        seed_band_store_table,
+    )
+    tbl = f"snd_store_{uuid.uuid4().hex[:12]}"
+    path = str(tmp_path / "store")
+    seed_band_store_table(seeded, tbl, n_buckets=4, path=path)
+    try:
+        yield lambda in_d, out, ck: run_neardup_dedup_stream(
+            spark, in_d, tbl, out, ck, store_buckets=4, store_path=path)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
 def test_streaming_neardup_rejects_near_and_exact(spark, tmp_path):
     """Seeded doc 0; arrivals: exact copy of 0 (reject via store),
     near-copy of 0 with one word swapped (reject via store — sig
     agreement >> 0.7), a novel doc (admit), and a same-batch near-copy
     of the novel doc with a higher id (reject within batch)."""
-    from document_text_extraction_spark.streaming.neardup import (
-        run_neardup_dedup_stream,
-        seed_band_store,
-    )
     rows = dict(_snd_docs(spark))
     seeded = spark.createDataFrame([(0, rows[0])], "doc_id long, text string")
-    bs, out, ck = (str(tmp_path / d) for d in ("bs", "out", "ck"))
-    in_d = str(tmp_path / "in")
-    seed_band_store(seeded, bs)
+    out, ck, in_d = (str(tmp_path / d) for d in ("out", "ck", "in"))
     near0 = rows[0].replace("w0x7", "hostel")
     near1 = rows[1].replace("w1x10", "kilos")
     batch = [(10, rows[0]), (11, near0), (12, rows[1]), (13, near1)]
     spark.createDataFrame(batch, "doc_id long, text string") \
         .write.mode("overwrite").parquet(in_d)
-    run_neardup_dedup_stream(spark, in_d, bs, out, ck)
+    with _snd_store(spark, seeded, tmp_path) as run:
+        run(in_d, out, ck)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == {12}
 
@@ -752,31 +769,26 @@ def test_streaming_neardup_store_state_across_runs(spark, tmp_path):
     again through the store (the seed content, not the rejected doc,
     is what the store holds — admitted-only semantics, documented in
     the module docstring)."""
-    from document_text_extraction_spark.streaming.neardup import (
-        run_neardup_dedup_stream,
-        seed_band_store,
-    )
     rows = dict(_snd_docs(spark))
     seeded = spark.createDataFrame([(0, rows[0])], "doc_id long, text string")
-    bs, out, ck = (str(tmp_path / d) for d in ("bs", "out", "ck"))
-    in_d = str(tmp_path / "in")
-    seed_band_store(seeded, bs)
+    out, ck, in_d = (str(tmp_path / d) for d in ("out", "ck", "in"))
     x = rows[0].replace("w0x7", "hostel")
-    spark.createDataFrame([(20, x)], "doc_id long, text string") \
-        .write.mode("overwrite").parquet(in_d)
-    run_neardup_dedup_stream(spark, in_d, bs, out, ck)
-    assert spark.read.parquet(out).count() == 0  # X rejected vs seed
-    spark.createDataFrame([(30, x)], "doc_id long, text string") \
-        .write.mode("append").parquet(in_d)
-    run_neardup_dedup_stream(spark, in_d, bs, out, ck)
-    assert spark.read.parquet(out).count() == 0  # copy also rejected
-    # genuinely novel content still flows: pair admitted/greedy-rejected
-    novel = rows[4]
-    novel_near = novel.replace("w4x15", "papas")
-    spark.createDataFrame([(40, novel), (41, novel_near)],
-                          "doc_id long, text string") \
-        .write.mode("append").parquet(in_d)
-    run_neardup_dedup_stream(spark, in_d, bs, out, ck)
+    with _snd_store(spark, seeded, tmp_path) as run:
+        spark.createDataFrame([(20, x)], "doc_id long, text string") \
+            .write.mode("overwrite").parquet(in_d)
+        run(in_d, out, ck)
+        assert spark.read.parquet(out).count() == 0  # X rejected vs seed
+        spark.createDataFrame([(30, x)], "doc_id long, text string") \
+            .write.mode("append").parquet(in_d)
+        run(in_d, out, ck)
+        assert spark.read.parquet(out).count() == 0  # copy also rejected
+        # genuinely novel content still flows: pair admitted/greedy-rejected
+        novel = rows[4]
+        novel_near = novel.replace("w4x15", "papas")
+        spark.createDataFrame([(40, novel), (41, novel_near)],
+                              "doc_id long, text string") \
+            .write.mode("append").parquet(in_d)
+        run(in_d, out, ck)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == {40}  # 41 rejected within batch against 40
 
@@ -784,13 +796,12 @@ def test_streaming_neardup_store_state_across_runs(spark, tmp_path):
 def test_streaming_neardup_matches_greedy_bruteforce(spark, tmp_path):
     """One batch of arrivals vs a pure-python greedy using the SAME
     estimated-Jaccard rule (signature agreement via banding)."""
+    from document_text_extraction_spark.operators.dedup import (
+        minhash_signature_df,
+    )
     from document_text_extraction_spark.streaming.neardup import (
         BANDS,
         NUM_HASHES,
-        band_rows_df,
-        minhash_sig_df,
-        run_neardup_dedup_stream,
-        seed_band_store,
     )
     rows = _snd_docs(spark)
     variants = []
@@ -800,7 +811,8 @@ def test_streaming_neardup_matches_greedy_bruteforce(spark, tmp_path):
         variants.append((vid, t.replace(f"w{i}x0", "alpine"))); vid += 1
     df = spark.createDataFrame(variants, "doc_id long, text string")
     sigs = {r.doc_id: list(r.sig)
-            for r in minhash_sig_df(df).collect()}
+            for r in minhash_signature_df(
+                df, num_hashes=NUM_HASHES).collect()}
     rws = NUM_HASHES // BANDS
 
     def near(a, b):
@@ -815,12 +827,11 @@ def test_streaming_neardup_matches_greedy_bruteforce(spark, tmp_path):
     for d, _ in sorted(variants):
         if not any(d2 < d and near(d2, d) for d2, _ in variants):
             expect.add(d)
-    bs, out, ck = (str(tmp_path / d) for d in ("bs", "out", "ck"))
-    in_d = str(tmp_path / "in")
-    seed_band_store(spark.createDataFrame([], "doc_id long, text string"),
-                    bs)
+    out, ck, in_d = (str(tmp_path / d) for d in ("out", "ck", "in"))
     df.write.mode("overwrite").parquet(in_d)
-    run_neardup_dedup_stream(spark, in_d, bs, out, ck)
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    with _snd_store(spark, empty, tmp_path) as run:
+        run(in_d, out, ck)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == expect
     assert expect != {v for v, _ in variants}  # rejections happened

@@ -196,18 +196,21 @@ def test_run_extraction_rejects_misfiled_rows(spark, pages, tmp_path):
 
 
 def test_metrics_reconcile(spark, pages, tmp_path):
+    """The manifest's per-partition counters (FIXTURES.md §3) of the
+    committed slices reconcile with the input and the written data."""
     out_dir = str(tmp_path / "m")
     pipeline.run_extraction(spark, pages, out_dir, n_buckets=8,
                             slice_buckets=4, salt=False)
-    metrics = pipeline.partition_metrics(spark, out_dir)
-    agg = metrics.agg(F.sum("docs"), F.sum("parse_failures")).collect()[0]
-    assert agg[0] == N_DOCS
+    manifest = pipeline._load_manifest(out_dir, "run1")
+    parts = [p for s in manifest["slices"].values() if s["committed"]
+             for p in s["partitions"]]
+    assert parts
+    assert sum(p["docs"] for p in parts) == N_DOCS
     data = spark.read.parquet(out_dir + "/data")
     failures = data.filter(F.col("lineage.status") == "parse_failure").count()
-    assert agg[1] == failures
-    bytes_in = metrics.agg(F.sum("bytes_in")).collect()[0][0]
+    assert sum(p["parse_failures"] for p in parts) == failures
     src_bytes = pages.select(F.sum(F.length("html"))).collect()[0][0]
-    assert bytes_in == src_bytes
+    assert sum(p["bytes_in"] for p in parts) == src_bytes
 
 
 def test_web_pages_from_documents_roundtrip(spark):
@@ -489,7 +492,8 @@ def test_compact_table_binpacks_without_changing_rows(spark, pages,
         .select("url").collect()) == snap1_rows
     inc = pipeline.read_incremental(spark, out, 0, 1).count()
     assert inc == len(snap1_rows)
-    assert pipeline.partition_metrics(spark, out).count() > 0
+    assert any(s["partitions"] for s in
+               pipeline._load_manifest(out, "run1")["slices"].values())
     again = pipeline.compact_table(spark, out, target_file_mb=1024)
     assert again["buckets_compacted"] == 0
     audit = pipeline._load_manifest(out, "run1")["compactions"]

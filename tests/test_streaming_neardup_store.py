@@ -5,17 +5,15 @@ pre-partitioned on its bucket key."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
+from document_text_extraction_spark.operators.dedup import (
+    minhash_signature_df,
+)
 from document_text_extraction_spark.streaming.neardup import (
+    NUM_HASHES,
     band_rows_df,
-    minhash_sig_df,
-    run_neardup_dedup_stream,
-    seed_band_store,
     seed_band_store_table,
     store_candidate_rejections,
     _with_bkey,
@@ -36,7 +34,8 @@ def test_store_scan_carries_no_exchange(spark, docs):
     seed_band_store_table(docs, "nd_store_plan_t", n_buckets=8)
     try:
         arrivals = docs.limit(10)
-        bands = band_rows_df(minhash_sig_df(arrivals))
+        bands = band_rows_df(
+            minhash_signature_df(arrivals, num_hashes=NUM_HASHES))
         store = (spark.table("nd_store_plan_t")
                  .select("bkey", F.col("sig").alias("sig_store")))
         with_conf = spark.conf
@@ -65,53 +64,11 @@ def test_store_scan_carries_no_exchange(spark, docs):
         spark.sql("DROP TABLE IF EXISTS nd_store_plan_t")
 
 
-def test_bucketed_store_stream_matches_legacy_path(spark, docs):
-    """Differential: the table-store stream admits exactly the same
-    set as the legacy path-store stream (two availableNow runs with a
-    cross-run near-dup plant each)."""
-    def run(store_kind: str) -> set[int]:
-        base = tempfile.mkdtemp(prefix="nd_store_diff_")
-        rev = F.concat_ws(" ", F.reverse(F.split(F.col("text"), " ")))
-        recap = docs.filter(F.col("doc_id") % 5 == 0).select(
-            (F.col("doc_id") + 1000).alias("doc_id"), "text")
-        fresh = docs.filter(F.col("doc_id") % 5 == 1).select(
-            (F.col("doc_id") + 2000).alias("doc_id"), rev.alias("text"))
-        recap.unionByName(fresh).write.mode("overwrite").parquet(
-            f"{base}/in")
-        if store_kind == "table":
-            seed_band_store_table(docs, "nd_store_diff_t", n_buckets=4)
-            kw = {"store_table": "nd_store_diff_t", "store_buckets": 4}
-            bs = None
-        else:
-            seed_band_store(docs, f"{base}/bs")
-            kw = {}
-            bs = f"{base}/bs"
-        run_neardup_dedup_stream(spark, f"{base}/in", bs,
-                                 f"{base}/out", f"{base}/ck", **kw)
-        late = docs.filter(F.col("doc_id") % 5 == 1).select(
-            (F.col("doc_id") + 3000).alias("doc_id"), rev.alias("text"))
-        late.write.mode("append").parquet(f"{base}/in")
-        run_neardup_dedup_stream(spark, f"{base}/in", bs,
-                                 f"{base}/out", f"{base}/ck", **kw)
-        out = {r.doc_id for r in
-               spark.read.parquet(f"{base}/out").collect()}
-        spark.sql("DROP TABLE IF EXISTS nd_store_diff_t")
-        shutil.rmtree(base, ignore_errors=True)
-        return out
-
-    assert run("table") == run("path")
-
-
-def test_exactly_one_store_kind_required(spark, docs):
-    with pytest.raises(ValueError, match="exactly one"):
-        run_neardup_dedup_stream(spark, "/tmp/x", None, "/tmp/y",
-                                 "/tmp/z")
-
-
 def test_bkey_is_write_read_consistent(spark, docs):
     """The bucket key computed at arrival time equals the stored one
     for identical (band, bval) — same expression, same hash seed."""
-    rows = band_rows_df(minhash_sig_df(docs.limit(5)))
+    rows = band_rows_df(
+        minhash_signature_df(docs.limit(5), num_hashes=NUM_HASHES))
     a = _with_bkey(rows).select("band", "bval", "bkey")
     b = _with_bkey(rows.select("band", "bval", "sig")).select(
         "band", "bval", "bkey")
