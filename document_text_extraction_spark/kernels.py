@@ -22,8 +22,8 @@ def extract_batch(urls: pd.Series, payloads: pd.Series) -> pd.DataFrame:
     """(url, payload-bytes) batch → full extraction records.
 
     Output columns: url, status, route, reason, extracted_text, spans
-    (list of span dicts), fields (dict), sections, n_pages, n_blocks,
-    elapsed_ms — one row per input row, in input order. ``elapsed_ms``
+    (list of span dicts), fields (dict), n_pages, n_blocks, elapsed_ms
+    — one row per input row, in input order. ``elapsed_ms``
     (``lineage.elapsed_ms`` downstream) times the whole per-document
     extraction: sniff, transfer decode, parse, classify and fields.
     """
@@ -43,7 +43,6 @@ def extract_batch(urls: pd.Series, payloads: pd.Series) -> pd.DataFrame:
         "extracted_text": [r["extracted_text"] for r in records],
         "spans": [r["spans"] for r in records],
         "fields": [r["fields"] for r in records],
-        "sections": [r["sections"] for r in records],
         "n_pages": np.array([r["n_pages"] for r in records], dtype=np.int64),
         "n_blocks": np.array([r["n_blocks"] for r in records],
                              dtype=np.int64),

@@ -19,9 +19,11 @@ baseline and progressive incl. successive approximation; the phash
 registry row plants lossy-re-encoded JPEG copies that only a true
 pixel decode can pair up). WAV/PCM audio and AVI/MJPEG video decode
 for real too (``multimodal/av.py``); only compressed-audio and
-inter-frame video codecs remain the deployment hook
-(``NotImplementedError`` → documented deterministic fake; LIMITS.md
-§5).
+inter-frame video codecs remain the deployment hook (LIMITS.md §5).
+Images never fall back to a fake: an image outside the PNG and
+baseline-JPEG decoders is labelled ``unsupported_codec`` with no hash
+or pixels. Only ``av.py``'s video frames keep the deterministic pixel
+fake (``_fake_pixels``, status ``fake_decode``).
 """
 
 from __future__ import annotations
@@ -494,11 +496,11 @@ def extract_media_features(media: DataFrame,
 
 
 def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """DETERMINISTIC FAKE decode for formats whose codecs are absent in
-    this container (video frames; PNG and baseline JPEG decode for
-    real via ``_decode_pixels``): an (h, w, 3) uint8 array derived
-    from md5(payload), so the resize math downstream stays testable
-    while the video codec is swapped in at deployment."""
+    """DETERMINISTIC FAKE decode for video frames whose inter-frame
+    codec is absent here (``av.video_frame_hashes``, status
+    ``fake_decode``; images never use it): an (h, w, 3) uint8 array
+    derived from md5(payload), so the hash math downstream stays
+    testable while the video codec is swapped in at deployment."""
     seed = hashlib.md5(payload or b"").digest()
     base = np.frombuffer(seed, dtype=np.uint8)
     n = max(1, width) * max(1, height) * 3
@@ -524,26 +526,27 @@ RESIZED_SCHEMA = T.StructType([
 
 def resize_images(media: DataFrame, out_w: int = 64, out_h: int = 64,
                   partitions: int | None = None) -> DataFrame:
-    """Image resize as an Arrow-batched map: header dims → decode
-    (REAL for PNG and baseline JPEG; deterministic fake for the rest)
-    → vectorized nearest-neighbor resample → fixed-size pixel buffer
-    per row.
+    """Image resize as an Arrow-batched map: decode (PNG and baseline
+    JPEG) → vectorized nearest-neighbor resample → fixed-size pixel
+    buffer per row.
+
+    An image no decoder here covers (arithmetic-coded or 12-bit JPEG,
+    16-bit palette PNG, other containers) gets status
+    ``unsupported_codec`` and malformed bytes ``decode_error``; both
+    carry empty ``pixels``.
 
     The resample is pure numpy index arithmetic over the whole image
     (no per-pixel Python)."""
     def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = None
         for b in batches:
             out = []
-            for mid, payload, w, h in zip(
-                b["media_id"], b["payload"], b["width"], b["height"]
-            ):
-                w = int(w) if w and w > 0 else 16
-                h = int(h) if h and h > 0 else 16
+            for mid, payload in zip(b["media_id"], b["payload"]):
                 try:
                     px = _decode_pixels(bytes(payload or b""))
                 except NotImplementedError:
-                    px = _fake_pixels(bytes(payload or b""), w, h)
+                    out.append((int(mid), out_w, out_h, b"",
+                                "unsupported_codec"))
+                    continue
                 except ValueError:
                     out.append((int(mid), out_w, out_h, b"",
                                 "decode_error"))
@@ -639,20 +642,20 @@ def ahash_images(media: DataFrame,
     """Perceptual hash (aHash) per image as an Arrow-batched map — the
     image-side fingerprint feeding near-dup detection, same role as
     ``dedup.content_fingerprint_col`` for text. Decode is REAL for PNG and
-    baseline JPEG (deterministic fake only for video frames);
-    downsample, grayscale, threshold, bit-pack are pure numpy."""
+    baseline JPEG; downsample, grayscale, threshold, bit-pack are pure
+    numpy. Any other image gets a null ``ahash`` with status
+    ``unsupported_codec`` (no decoder here covers it) or
+    ``decode_error`` (malformed bytes); a null hash never matches in
+    :func:`phash_near_duplicates`' band join."""
     def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = []
-            for mid, payload, w, h in zip(
-                b["media_id"], b["payload"], b["width"], b["height"]
-            ):
-                w = int(w) if w and w > 0 else 16
-                h = int(h) if h and h > 0 else 16
+            for mid, payload in zip(b["media_id"], b["payload"]):
                 try:
                     px = _decode_pixels(bytes(payload or b""))
                 except NotImplementedError:
-                    px = _fake_pixels(bytes(payload or b""), w, h)
+                    out.append((int(mid), None, "unsupported_codec"))
+                    continue
                 except ValueError:
                     out.append((int(mid), None, "decode_error"))
                     continue

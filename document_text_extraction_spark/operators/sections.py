@@ -1,9 +1,10 @@
-"""Section segmentation over extracted spans — the dataset-level form of
-the reference's section state machine (O58, ``/root/reference/
-new_approaches/final.py:120-149`` and ``parse_cv_docling.py:91-210``).
+"""Section segmentation over extracted spans (O58) — the one section
+segmenter. The extraction table does not store sections: a caller who
+wants them derives them from the stored ``spans`` with
+``sections_df(table)``.
 
-The reference streams blocks in reading order and switches
-``current_section`` on each heading; in Spark that sequential fold is a
+A section state machine streams blocks in reading order and switches
+the current section on each heading; in Spark that sequential fold is a
 gaps-and-islands window: headings flag section starts, a running sum over
 the reading order assigns section ids, one groupBy concatenates — no
 Python, no state machine object.
@@ -14,14 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-# single source of truth for O48 keyword normalization (the per-doc
-# form in oracle.sections_from_spans shares it)
-from ..oracle import SECTION_KEYWORDS  # noqa: F401
+# O48 keyword → canonical section name (the registry's DuckDB oracle
+# for ``sections_planted`` builds its CASE from the same table)
+SECTION_KEYWORDS = {
+    "experience": "experience",
+    "education": "education",
+    "skills": "skills",
+    "projects": "projects",
+    "summary": "summary",
+}
 
 
 def normalize_section_name(col) -> F.Column:
     """O48 keyword → canonical section name; else lowercased/underscored
-    (``final.py:171-186``)."""
+    (the first matching keyword, in ``SECTION_KEYWORDS`` order, wins)."""
     low = F.lower(col)
     expr = None
     for kw, canon in SECTION_KEYWORDS.items():
@@ -32,9 +39,18 @@ def normalize_section_name(col) -> F.Column:
 
 
 def sections_df(extracted: DataFrame) -> DataFrame:
-    """(url, spans) → one row per (url, section): heading + body text.
+    """(url, spans) → one row per (url, section): section_id, heading,
+    body, n_blocks and the normalized section name.
 
-    Blocks before the first heading fall into section 0 ('_preamble').
+    ``extracted`` is any table with the extraction output's ``url`` and
+    ``spans`` columns (``pipeline.extract_df``, a ``run_extraction``
+    output read back from parquet). Only main, heading and list_item
+    spans take part. Each heading opens a section; blocks before the
+    first heading fall into section 0 ('_preamble', null heading). The
+    body joins a section's non-heading span texts in block order with
+    ``\\n``; ``n_blocks`` counts the heading too. Documents without such
+    spans (every failed document, and PDFs, whose spans are all
+    ``block``) yield no rows.
     """
     spans = extracted.select(
         "url", F.explode("spans").alias("s")

@@ -309,11 +309,10 @@ _TAG_RE = re.compile(
     # disjoint, so greedy == possessive on every input (fuzz-pinned).
     r"<(/?)([a-zA-Z][a-zA-Z0-9-]*)((?:[^>\"']++|\"[^\"]*+\"|'[^']*+')*+)>"
 )
-_WS_RE = re.compile(r"\s+")
 
 
 def _norm_ws(s: str) -> str:
-    # ≡ _WS_RE.sub(" ", s).strip(): sre \s and str.isspace() share the
+    # ≡ re.sub(r"\s+", " ", s).strip(): sre \s and str.isspace() share the
     # same Unicode whitespace table, and the C-level split/join is
     # ~3.5x faster than the regex sub
     return " ".join(s.split())
@@ -2081,58 +2080,6 @@ EMPTY_FIELDS = {
     "meta_robots": "",
 }
 
-# O48 keyword → canonical section name (shared with the dataset-level
-# operators/sections.py so the two cannot drift)
-SECTION_KEYWORDS = {
-    "experience": "experience",
-    "education": "education",
-    "skills": "skills",
-    "projects": "projects",
-    "summary": "summary",
-}
-_SECTION_CONTENT_KINDS = frozenset({"main", "heading", "list_item"})
-
-
-def normalize_section_name(name: str) -> str:
-    """O48: keyword → canonical; else lowercased/underscored
-    (``final.py:171-186``)."""
-    low = name.lower()
-    for kw, canon in SECTION_KEYWORDS.items():
-        if kw in low:
-            return canon
-    return _WS_RE.sub("_", low.strip())
-
-
-def sections_from_spans(spans: list[dict]) -> list[dict]:
-    """O58 per-document section segmentation: headings open sections,
-    blocks before the first heading form '_preamble' (O43/O64 fallback).
-    The per-document form of ``operators/sections.sections_df`` —
-    reference emits sections in its single-pass output
-    (``final.py:370-395``)."""
-    sections: list[dict] = []
-    cur = None
-    for s in spans:
-        if s["kind"] not in _SECTION_CONTENT_KINDS:
-            continue
-        if s["kind"] == "heading":
-            if cur is not None:
-                sections.append(cur)
-            cur = {"section": normalize_section_name(s["text"]),
-                   "heading": s["text"], "body": [], "n_blocks": 1}
-        else:
-            if cur is None:
-                cur = {"section": "_preamble", "heading": None,
-                       "body": [], "n_blocks": 0}
-            cur["body"].append(s["text"])
-            cur["n_blocks"] += 1
-    if cur is not None:
-        sections.append(cur)
-    return [
-        {"section": c["section"], "heading": c["heading"],
-         "body": "\n".join(c["body"]), "n_blocks": c["n_blocks"]}
-        for c in sections
-    ]
-
 
 def fail_reason(exc: Exception) -> str:
     """Stable failure-class code for ``lineage.reason``."""
@@ -2167,6 +2114,11 @@ def classify_pdf_no_text(data: bytes) -> str:
 def extract_document(data: bytes) -> dict:
     """bytes → extraction record; never raises (EP3 error-row protocol).
 
+    The record holds status, route, reason, extracted_text, spans,
+    fields, n_pages and n_blocks. Sections are not part of it: they are
+    derived from the spans at dataset level
+    (``operators.sections.sections_df``).
+
     ``reason`` is None on success, else a stable failure-class code
     (unknown_route | unsupported_filter | encrypted | bad_flate |
     bad_objstm | bad_container | bad_transfer | bad_magic | no_streams
@@ -2197,7 +2149,7 @@ def extract_document(data: bytes) -> dict:
                     "status": "parse_failure", "route": route,
                     "reason": classify_pdf_no_text(data),
                     "extracted_text": "", "spans": [],
-                    "fields": dict(EMPTY_FIELDS), "sections": [],
+                    "fields": dict(EMPTY_FIELDS),
                     "n_pages": 0, "n_blocks": 0,
                 }
         else:
@@ -2205,7 +2157,7 @@ def extract_document(data: bytes) -> dict:
                 "status": "parse_failure", "route": route,
                 "reason": "unknown_route",
                 "extracted_text": "", "spans": [],
-                "fields": dict(EMPTY_FIELDS), "sections": [],
+                "fields": dict(EMPTY_FIELDS),
                 "n_pages": 0, "n_blocks": 0,
             }
         fields = merge_link_uris(extract_fields(text, spans), link_uris)
@@ -2218,7 +2170,6 @@ def extract_document(data: bytes) -> dict:
             "status": "ok", "route": route, "reason": None,
             "extracted_text": text, "spans": spans,
             "fields": fields,
-            "sections": sections_from_spans(spans),
             "n_pages": n_pages, "n_blocks": len(spans),
         }
     except Exception as e:
@@ -2226,6 +2177,6 @@ def extract_document(data: bytes) -> dict:
             "status": "parse_failure", "route": route,
             "reason": fail_reason(e),
             "extracted_text": "", "spans": [],
-            "fields": dict(EMPTY_FIELDS), "sections": [],
+            "fields": dict(EMPTY_FIELDS),
             "n_pages": 0, "n_blocks": 0,
         }

@@ -80,13 +80,6 @@ FIELDS_TYPE = T.StructType([
     T.StructField("meta_robots", T.StringType()),
 ])
 
-SECTION_TYPE = T.StructType([
-    T.StructField("section", T.StringType()),
-    T.StructField("heading", T.StringType()),   # null for _preamble
-    T.StructField("body", T.StringType()),
-    T.StructField("n_blocks", T.IntegerType()),
-])
-
 LINEAGE_TYPE = T.StructType([
     T.StructField("status", T.StringType()),
     T.StructField("route", T.StringType()),
@@ -104,7 +97,6 @@ OUTPUT_SCHEMA = T.StructType([
     T.StructField("extracted_text", T.StringType()),
     T.StructField("spans", T.ArrayType(SPAN_TYPE)),
     T.StructField("fields", FIELDS_TYPE),
-    T.StructField("sections", T.ArrayType(SECTION_TYPE)),
     T.StructField("lineage", LINEAGE_TYPE),
     T.StructField("part_bucket", T.IntegerType()),
 ])
@@ -173,7 +165,6 @@ def _extract_iter(batches: Iterator[pd.DataFrame],
             "extracted_text": out["extracted_text"],
             "spans": out["spans"],
             "fields": out["fields"],
-            "sections": out["sections"],
             "lineage": lineage,
             "part_bucket": b["part_bucket"].to_numpy(),
         })
@@ -492,10 +483,8 @@ def run_extraction(
     n_buckets: int = DEFAULT_BUCKETS,
     slice_buckets: int = 32,
     resume: bool = True,
-    salt: bool = True,
     max_slices: int | None = None,
     parallel_slices: int = DEFAULT_PARALLEL_SLICES,
-    salt_threshold_bytes: int | None = None,
 ) -> dict:
     """Execute extraction slice-by-slice with commit-after-each-slice.
 
@@ -519,9 +508,8 @@ def run_extraction(
     returns only once they finish), commits those that succeeded, and
     re-raises.
 
-    ``salt_threshold_bytes`` overrides the salt grain, which by default
-    is :func:`salt_grain_bytes` over the measured bytes and the slices
-    that hold them.
+    The salt grain is :func:`salt_grain_bytes` over the measured bytes
+    and the slices that hold them.
     """
     os.makedirs(out_dir, exist_ok=True)
     data_dir = os.path.join(out_dir, "data")
@@ -571,11 +559,11 @@ def run_extraction(
     def _slice_bytes(buckets: list[int]) -> int:
         return sum(stats.get(b, 0) for b in buckets)
 
-    grain = salt_threshold_bytes or salt_grain_bytes(
+    grain = salt_grain_bytes(
         spark, sum(stats.values()),
         sum(1 for b in slices if _slice_bytes(b)))
     salt_plan = plan_salting(pages, n_buckets, threshold_bytes=grain,
-                             stats=stats) if salt else {}
+                             stats=stats)
     # per-slice shuffle grain: a slice covers only its buckets' bytes,
     # so sizing its shuffle by the SESSION width (the full-corpus
     # heuristic in extract_df) would schedule n_slices × 4·base mostly

@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=256)
     ap.add_argument("--slice-buckets", type=int, default=32)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-salt", action="store_true")
     ap.add_argument("--parallel-slices", type=int,
                     default=pipeline.DEFAULT_PARALLEL_SLICES,
                     help="overlap N slice waves (each still commits "
@@ -87,7 +86,7 @@ def main() -> None:
     manifest = pipeline.run_extraction(
         spark, pages, args.output, run_id=args.run_id,
         n_buckets=args.buckets, slice_buckets=args.slice_buckets,
-        resume=not args.no_resume, salt=not args.no_salt,
+        resume=not args.no_resume,
         parallel_slices=args.parallel_slices,
     )
     done = [s for s in manifest["slices"].values() if s.get("committed")]

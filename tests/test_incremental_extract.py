@@ -23,9 +23,9 @@ def _comparable(df):
     partition_id) and the reuse marker."""
     return {
         r["url"]: (r["extracted_text"], str(r["spans"]),
-                   str(r["fields"]), str(r["sections"]),
-                   r["lineage"]["status"], r["lineage"]["route"],
-                   r["lineage"]["reason"], r["lineage"]["n_pages"],
+                   str(r["fields"]), r["lineage"]["status"],
+                   r["lineage"]["route"], r["lineage"]["reason"],
+                   r["lineage"]["n_pages"],
                    r["lineage"]["n_blocks"], r["lineage"]["bytes_in"],
                    r["part_bucket"])
         for r in df.collect()

@@ -158,16 +158,29 @@ def test_ahash_images_spark_uses_decoder(spark):
 
 
 def test_corrupt_payload_yields_decode_error_status(spark):
+    """Malformed bytes end as ``decode_error``; an image no decoder here
+    covers (two identical GIFs) ends as ``unsupported_codec`` with no
+    hash or pixels, so the two never pair as near-duplicates."""
     good = M.synth_media_row(0)
     bad = (1, "image", M._PNG_SIG + b"\x00\x00\x00\x0dIHDRjunkjunkjunk0",
            "image/png", 16, 16, -1)
-    df = spark.createDataFrame([good, bad], M.MEDIA_SCHEMA)
-    got = {r.media_id: r.status
-           for r in M.ahash_images(df, partitions=1).collect()}
-    assert got == {0: "ok", 1: "decode_error"}
-    rz = {r.media_id: r.status
+    gif = b"GIF89a" + bytes(range(64))
+    gifs = [(i, "image", gif, "image/gif", 16, 16, -1) for i in (2, 3)]
+    df = spark.createDataFrame([good, bad, *gifs], M.MEDIA_SCHEMA)
+    hashes = M.ahash_images(df, partitions=1)
+    got = {r.media_id: (r.status, r.ahash) for r in hashes.collect()}
+    assert {k: v[0] for k, v in got.items()} == {
+        0: "ok", 1: "decode_error", 2: "unsupported_codec",
+        3: "unsupported_codec"}
+    assert got[2][1] is None and got[3][1] is None
+    pairs = M.phash_near_duplicates(hashes).collect()
+    assert not [p for p in pairs if {p.id_a, p.id_b} & {2, 3}]
+    rz = {r.media_id: (r.status, r.pixels)
           for r in M.resize_images(df, 8, 8, partitions=1).collect()}
-    assert rz == {0: "ok", 1: "decode_error"}
+    assert {k: v[0] for k, v in rz.items()} == {
+        0: "ok", 1: "decode_error", 2: "unsupported_codec",
+        3: "unsupported_codec"}
+    assert rz[2][1] == b"" and rz[3][1] == b""
 
 
 def test_roundtrip_property_random_images():

@@ -338,20 +338,33 @@ def test_frame_sample_plan(spark, media):
 # ---------------------------------------------------------------------------
 
 def test_sections_segmentation(spark):
+    """O43/O47/O48/O58 on the extraction output: headings in main
+    content open sections, pre-heading blocks form '_preamble' (null
+    heading), keyword headings normalize, others lowercase and
+    underscore; bodies join with newlines, n_blocks counts the
+    heading."""
     html = (
         b"<html><body><article>"
         b"<p>intro line one</p>"
-        b"<h2>Experience</h2><p>job alpha</p><p>job beta</p>"
+        b"<h2>Work Experience</h2><p>job alpha</p><p>job beta</p>"
         b"<h2>Skills</h2><ul><li>python</li><li>spark</li></ul>"
+        b"<h2>Odd Header</h2><p>tail content</p>"
         b"</article></body></html>"
     )
     pdf = pd.DataFrame({"url": ["https://x/1"], "html": [html]})
     pages = spark.createDataFrame(pdf)
     out = pipeline.extract_df(pages, n_buckets=4)
     secs = sections_df(out).toPandas().sort_values("section_id")
-    assert list(secs["section"]) == ["_preamble", "experience", "skills"]
+    assert list(secs["section_id"]) == [0, 1, 2, 3]
+    assert list(secs["section"]) == [
+        "_preamble", "experience", "skills", "odd_header"]
+    assert [h if isinstance(h, str) else None
+            for h in secs["heading"]] == [
+        None, "Work Experience", "Skills", "Odd Header"]
     assert list(secs["body"]) == [
-        "intro line one", "job alpha\njob beta", "python\nspark"]
+        "intro line one", "job alpha\njob beta", "python\nspark",
+        "tail content"]
+    assert list(secs["n_blocks"]) == [1, 3, 3, 2]
 
 
 # ---------------------------------------------------------------------------

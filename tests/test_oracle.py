@@ -785,16 +785,26 @@ def test_gzip_docx_route():
     assert rec["extracted_text"] == golden_text(words)
 
 
-def test_sections_in_single_pass_output():
-    """O58 per-document: headings in main content open sections;
-    pre-heading blocks form _preamble; keyword names normalize."""
+def test_sections_in_single_pass_output(spark):
+    """O58 per-document: the single pass stores spans, not sections;
+    ``sections_df`` over those spans opens a section at each heading in
+    main content, puts pre-heading blocks in _preamble and normalizes
+    keyword names."""
+    from pyspark.sql import types as T
+    from document_text_extraction_spark.pipeline import SPAN_TYPE
+    from document_text_extraction_spark.operators.sections import (
+        sections_df)
     doc = (b"<html><body><article><p>intro text here</p>"
            b"<h2>Work Experience</h2><p>built systems</p>"
            b"<p>shipped features</p><h2>Odd Header</h2>"
            b"<p>tail content</p></article></body></html>")
     rec = oracle.extract_document(doc)
     assert rec["status"] == "ok"
-    secs = rec["sections"]
+    assert "sections" not in rec
+    schema = T.StructType([T.StructField("url", T.StringType()),
+                           T.StructField("spans", T.ArrayType(SPAN_TYPE))])
+    table = spark.createDataFrame([("https://x/1", rec["spans"])], schema)
+    secs = sections_df(table).orderBy("section_id").collect()
     assert [s["section"] for s in secs] == [
         "_preamble", "experience", "odd_header"]
     assert secs[0]["heading"] is None

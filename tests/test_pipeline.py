@@ -28,6 +28,16 @@ def golden(text: str) -> str:
     return "\n".join(corpus.chunk_text(text))
 
 
+def test_output_schema_columns():
+    """The stored table is the paper's (url, extracted_text, spans,
+    lineage) plus typed fields and the bucket column; sections are
+    derived from spans (``operators.sections.sections_df``), not
+    stored."""
+    assert pipeline.OUTPUT_SCHEMA.fieldNames() == [
+        "url", "extracted_text", "spans", "fields", "lineage",
+        "part_bucket"]
+
+
 def test_extract_matches_oracle_all_rows(spark, pages):
     out = pipeline.extract_df(pages, n_buckets=16).select(
         "url", "extracted_text", "lineage.status", "lineage.route"
@@ -72,16 +82,16 @@ def test_run_extraction_resume_identical(spark, pages, tmp_path):
     full_dir = str(tmp_path / "full")
     part_dir = str(tmp_path / "partial")
     m1 = pipeline.run_extraction(spark, pages, full_dir, n_buckets=8,
-                                 slice_buckets=2, salt=False)
+                                 slice_buckets=2)
     assert all(s["committed"] for s in m1["slices"].values())
 
     # simulate a kill after 2 of 4 slices, then resume
     m2a = pipeline.run_extraction(spark, pages, part_dir, n_buckets=8,
-                                  slice_buckets=2, salt=False, max_slices=2)
+                                  slice_buckets=2, max_slices=2)
     assert sum(s.get("committed", False)
                for s in m2a["slices"].values()) == 2
     m2b = pipeline.run_extraction(spark, pages, part_dir, n_buckets=8,
-                                  slice_buckets=2, salt=False)
+                                  slice_buckets=2)
     assert all(s["committed"] for s in m2b["slices"].values())
 
     a = (spark.read.parquet(full_dir + "/data")
@@ -105,14 +115,14 @@ def test_run_extraction_bucketed_input_resume_identical(spark, pages,
     flat_dir = str(tmp_path / "flat_out")
     bkt_dir = str(tmp_path / "bkt_out")
     pipeline.run_extraction(spark, pages, flat_dir, n_buckets=8,
-                            slice_buckets=2, salt=False)
+                            slice_buckets=2)
     ma = pipeline.run_extraction(spark, bpages, bkt_dir, n_buckets=8,
-                                 slice_buckets=2, salt=False,
+                                 slice_buckets=2,
                                  max_slices=2)
     assert sum(s.get("committed", False)
                for s in ma["slices"].values()) == 2
     mb = pipeline.run_extraction(spark, bpages, bkt_dir, n_buckets=8,
-                                 slice_buckets=2, salt=False)
+                                 slice_buckets=2)
     assert all(s["committed"] for s in mb["slices"].values())
     a = (spark.read.parquet(flat_dir + "/data")
          .select("url", "extracted_text", "part_bucket")
@@ -130,14 +140,14 @@ def test_snapshot_time_travel(spark, pages, tmp_path):
     the full table; earlier snapshots stay stable as commits land."""
     out = str(tmp_path / "snap")
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=2, salt=False, max_slices=2)
+                            slice_buckets=2, max_slices=2)
     snaps = pipeline.snapshots(out)
     assert [s["snapshot_id"] for s in snaps] == [1, 2]
     seen_at_2 = pipeline.read_snapshot(spark, out, snapshot_id=2).count()
     assert seen_at_2 == snaps[-1]["docs"]
     # finish the run: old snapshot is unchanged, latest sees everything
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=2, salt=False)
+                            slice_buckets=2)
     assert (pipeline.read_snapshot(spark, out, snapshot_id=2).count()
             == seen_at_2)
     assert pipeline.read_snapshot(spark, out).count() == N_DOCS
@@ -157,7 +167,7 @@ def test_run_extraction_rejects_mismatched_bucket_layout(spark, pages,
     with pytest.raises(ValueError, match="part_bucket"):
         pipeline.run_extraction(spark, bpages,
                                 str(tmp_path / "o"), n_buckets=8,
-                                slice_buckets=4, salt=False)
+                                slice_buckets=4)
     # the adversarial direction: stored modulus a DIVISOR of the run's
     # (8 vs 16) keeps every stored value in range, so only the
     # max-partition row probe can catch it
@@ -166,7 +176,7 @@ def test_run_extraction_rejects_mismatched_bucket_layout(spark, pages,
     with pytest.raises(ValueError, match="part_bucket"):
         pipeline.run_extraction(spark, spark.read.parquet(bucketed8),
                                 str(tmp_path / "o2"), n_buckets=16,
-                                slice_buckets=8, salt=False)
+                                slice_buckets=8)
 
 
 def test_run_extraction_rejects_misfiled_rows(spark, pages, tmp_path):
@@ -192,7 +202,7 @@ def test_run_extraction_rejects_misfiled_rows(spark, pages, tmp_path):
     with pytest.raises(ValueError, match="part_bucket"):
         pipeline.run_extraction(spark, spark.read.parquet(misfiled),
                                 str(tmp_path / "o"), n_buckets=8,
-                                slice_buckets=2, salt=False)
+                                slice_buckets=2)
 
 
 def test_metrics_reconcile(spark, pages, tmp_path):
@@ -200,7 +210,7 @@ def test_metrics_reconcile(spark, pages, tmp_path):
     committed slices reconcile with the input and the written data."""
     out_dir = str(tmp_path / "m")
     pipeline.run_extraction(spark, pages, out_dir, n_buckets=8,
-                            slice_buckets=4, salt=False)
+                            slice_buckets=4)
     manifest = pipeline._load_manifest(out_dir, "run1")
     parts = [p for s in manifest["slices"].values() if s["committed"]
              for p in s["partitions"]]
@@ -265,7 +275,7 @@ def test_slices_run_heaviest_first(spark, pages, tmp_path):
     slice's tail never ends the run alone; with one slice in flight the
     commit log shows that order."""
     m = pipeline.run_extraction(spark, pages, str(tmp_path / "order"),
-                                n_buckets=8, slice_buckets=2, salt=False,
+                                n_buckets=8, slice_buckets=2,
                                 parallel_slices=1)
     stats = pipeline.bucket_byte_stats(pages, 8)
     weight = {str(si): stats.get(2 * si, 0) + stats.get(2 * si + 1, 0)
@@ -299,7 +309,7 @@ def test_failed_slice_commits_the_slices_that_finished(
     out = str(tmp_path / "fail")
     with pytest.raises(RuntimeError, match="planted"):
         pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                                slice_buckets=2, salt=False,
+                                slice_buckets=2,
                                 parallel_slices=2)
     m = pipeline._load_manifest(out, "run1")
     committed = {b for s in m["slices"].values() if s.get("committed")
@@ -311,7 +321,7 @@ def test_failed_slice_commits_the_slices_that_finished(
     assert not committed & set(calls[0])
     monkeypatch.setattr(pipeline, "slice_extract_df", real)
     m2 = pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                                 slice_buckets=2, salt=False)
+                                 slice_buckets=2)
     assert sum(s["docs"] for s in m2["slices"].values()) == N_DOCS
     assert spark.read.parquet(out + "/data").count() == N_DOCS
 
@@ -322,7 +332,7 @@ def test_resume_wipes_partial_slice_garbage(spark, pages, tmp_path):
     import os
     out_dir = str(tmp_path / "partial2")
     pipeline.run_extraction(spark, pages, out_dir, n_buckets=8,
-                            slice_buckets=4, salt=False, max_slices=1)
+                            slice_buckets=4, max_slices=1)
     # simulate a crash mid-slice-2: drop garbage files into its buckets
     for b in (4, 5):
         d = os.path.join(out_dir, "data", f"part_bucket={b}")
@@ -330,7 +340,7 @@ def test_resume_wipes_partial_slice_garbage(spark, pages, tmp_path):
         with open(os.path.join(d, "part-corrupt.parquet"), "wb") as f:
             f.write(b"not a parquet file")
     pipeline.run_extraction(spark, pages, out_dir, n_buckets=8,
-                            slice_buckets=4, salt=False)
+                            slice_buckets=4)
     data = spark.read.parquet(out_dir + "/data")
     assert data.count() == N_DOCS
     assert data.select("url").distinct().count() == N_DOCS
@@ -344,14 +354,14 @@ def test_parallel_slices_match_sequential(spark, pages, tmp_path):
     seq_dir = str(tmp_path / "seq")
     par_dir = str(tmp_path / "par")
     pipeline.run_extraction(spark, pages, seq_dir, n_buckets=8,
-                            slice_buckets=2, salt=False, parallel_slices=1)
+                            slice_buckets=2, parallel_slices=1)
     m1 = pipeline.run_extraction(spark, pages, par_dir, n_buckets=8,
-                                 slice_buckets=2, salt=False,
+                                 slice_buckets=2,
                                  max_slices=2, parallel_slices=4)
     assert sum(s.get("committed", False)
                for s in m1["slices"].values()) == 2
     m2 = pipeline.run_extraction(spark, pages, par_dir, n_buckets=8,
-                                 slice_buckets=2, salt=False,
+                                 slice_buckets=2,
                                  parallel_slices=4)
     a = (spark.read.parquet(seq_dir + "/data")
          .select("url", "extracted_text", "part_bucket")
@@ -373,11 +383,11 @@ def test_resume_of_complete_run_is_metadata_noop(spark, pages, tmp_path):
     absence of new Spark jobs via the statusTracker)."""
     out = str(tmp_path / "noop")
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=4, salt=False)
+                            slice_buckets=4)
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup() or [])
     m = pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                                slice_buckets=4, salt=False)
+                                slice_buckets=4)
     after = len(tracker.getJobIdsForGroup() or [])
     assert all(s["committed"] for s in m["slices"].values())
     assert after == before, "resume of a complete run launched Spark jobs"
@@ -391,7 +401,7 @@ def test_expire_snapshots_and_vacuum(spark, pages, tmp_path):
     import os as _os
     out = str(tmp_path / "exp")
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=2, salt=False)
+                            slice_buckets=2)
     n_snaps = len(pipeline.snapshots(out))
     assert n_snaps == 4
     full = pipeline.read_snapshot(spark, out).count()
@@ -422,7 +432,7 @@ def test_read_incremental_change_feed(spark, pages, tmp_path):
     relies on."""
     out = str(tmp_path / "inc")
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=2, salt=False)
+                            slice_buckets=2)
     n = len(pipeline.snapshots(out))
     full = pipeline.read_snapshot(spark, out).count()
     parts = [pipeline.read_incremental(spark, out, from_snapshot=k,
@@ -452,7 +462,8 @@ def _bucket_files(out: str) -> dict[int, int]:
 
 
 def test_compact_table_binpacks_without_changing_rows(spark, pages,
-                                                      tmp_path):
+                                                      tmp_path,
+                                                      monkeypatch):
     """compact_table rewrites multi-file bucket dirs down to their
     bin-packed target while every read surface — full table, pinned
     snapshots, incremental ranges, counters — returns identical rows;
@@ -460,9 +471,10 @@ def test_compact_table_binpacks_without_changing_rows(spark, pages,
     out = str(tmp_path / "cmp")
     # a fine salt grain splits hot buckets across many write tasks —
     # the production mechanism that accumulates small files per bucket
+    monkeypatch.setattr(pipeline, "salt_grain_bytes",
+                        lambda *a, **k: 16 << 10)
     pipeline.run_extraction(spark, pages, out, n_buckets=4,
-                            slice_buckets=4, salt=True,
-                            salt_threshold_bytes=16 << 10)
+                            slice_buckets=4)
     before_files = _bucket_files(out)
     before_rows = sorted(
         (r["url"], r["extracted_text"]) for r in
@@ -510,7 +522,7 @@ def test_compact_crash_recovery_restores_bucket(spark, pages, tmp_path):
     import shutil as _sh
     out = str(tmp_path / "crash")
     pipeline.run_extraction(spark, pages, out, n_buckets=4,
-                            slice_buckets=4, salt=False)
+                            slice_buckets=4)
     full = pipeline.read_snapshot(spark, out).count()
     data = _os.path.join(out, "data")
     victim = next(b for b, n in _bucket_files(out).items() if n >= 1)
@@ -531,17 +543,17 @@ def test_out_dir_is_exclusive_to_one_run_id(spark, pages, tmp_path):
     — must be refused."""
     out = str(tmp_path / "excl")
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=4, salt=False, run_id="runA")
+                            slice_buckets=4, run_id="runA")
     with pytest.raises(ValueError, match="one output directory"):
         pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                                slice_buckets=4, salt=False,
+                                slice_buckets=4,
                                 run_id="runB")
 
 
 def test_read_snapshot_zero_and_empty(spark, pages, tmp_path):
     out = str(tmp_path / "snap0")
     pipeline.run_extraction(spark, pages, out, n_buckets=8,
-                            slice_buckets=4, salt=False)
+                            slice_buckets=4)
     assert pipeline.read_snapshot(spark, out, snapshot_id=0).count() == 0
     # an out_dir with no data at all
     empty = str(tmp_path / "nothing")
