@@ -15,9 +15,7 @@ native libs in this container) remain hooks":
 ``audio_chunk_features``
     the Arrow-batched kernel the audio chunk PLAN points at: per
     (media_id, chunk) RMS, zero-crossing rate, and peak over REAL
-    decoded samples for WAV payloads; the documented deterministic
-    fake for payloads whose codec is absent (the corpus's RIFF stubs),
-    ``decode_error`` status for malformed WAV bytes.
+    decoded samples for WAV payloads.
 
 ``decode_video_frame`` / ``video_frame_hashes``
     AVI (RIFF 'AVI ') container walk: frame rate from the 'strh'
@@ -25,8 +23,12 @@ native libs in this container) remain hooks":
     chunks; each frame is a JPEG decoded by the from-scratch
     ``jpegcodec``. ``video_frame_hashes`` is the per-frame aHash
     kernel (the video-near-dup fingerprint — same role as
-    ``ahash_images`` for stills); mp4/h264 payloads fall back to the
-    deterministic fake, malformed AVI bytes → ``decode_error``.
+    ``ahash_images`` for stills).
+
+Both kernels run through ``media._decode_map``, the map the image
+kernels use: a payload whose codec is absent (compressed audio,
+mp4/h264) gives one ``unsupported_codec`` row and malformed bytes one
+``decode_error`` row, each at position 0 with null features.
 
 Fixture encoders (``encode_wav``, ``encode_avi_mjpeg``) emit minimal
 valid containers so every decode path is exercised by self-produced
@@ -37,14 +39,13 @@ Decode stays inside the Arrow batch with no native dependency.
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from . import media as M
 
 # ---------------------------------------------------------------- WAV
 
@@ -110,13 +111,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return raw.reshape(-1, ch), rate
 
 
-def _fake_audio_features(payload: bytes, chunk_start: int) -> tuple:
-    """Deterministic fake (rms, zcr, peak) for codec-absent payloads —
-    derived from md5(payload, chunk), same policy as the pixel fake."""
-    d = hashlib.md5(payload[:64] + b"%d" % chunk_start).digest()
-    return (d[0] / 512.0, d[1] / 512.0, d[2] / 256.0)
-
-
 AUDIO_FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("chunk_start_ms", T.IntegerType()),
@@ -127,55 +121,33 @@ AUDIO_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def audio_chunk_features(media: DataFrame, chunk_ms: int = 5000,
-                         partitions: int | None = None) -> DataFrame:
+def audio_chunk_features(media: DataFrame,
+                         chunk_ms: int = 5000) -> DataFrame:
     """Per-(media_id, chunk) RMS / zero-crossing-rate / peak — the
     decode step the ``audio_chunk_plan`` ladder points at, as one
-    Arrow-batched map. REAL for WAV/PCM payloads; deterministic fake
-    (status='fake_decode') for codec-absent ones; 'decode_error' for
-    malformed WAV."""
-    from pyspark.sql import functions as F
+    Arrow-batched map over REAL decoded WAV/PCM samples. A codec-absent
+    payload gives one ``unsupported_codec`` row and malformed WAV one
+    ``decode_error`` row, each at chunk 0 with null features."""
+    def chunks(payload: bytes) -> list[tuple]:
+        samples, rate = decode_wav(payload)
+        mono = samples.mean(axis=1)
+        total_ms = max(1, int(len(mono) * 1000 / rate))
+        rows = []
+        for start in range(0, total_ms, chunk_ms):
+            lo = start * rate // 1000
+            hi = min(len(mono), (start + chunk_ms) * rate // 1000)
+            seg = mono[lo:hi]
+            if len(seg) == 0:
+                continue
+            rms = float(np.sqrt(np.mean(seg * seg)))
+            zcr = float(np.mean(np.signbit(seg[1:])
+                                != np.signbit(seg[:-1])
+                                )) if len(seg) > 1 else 0.0
+            rows.append((start, rms, zcr, float(np.abs(seg).max())))
+        return rows
 
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-        for b in batches:
-            out = []
-            for mid, payload, dur in zip(b["media_id"], b["payload"],
-                                         b["duration_ms"]):
-                payload = bytes(payload or b"")
-                mid, dur = int(mid), int(dur)
-                try:
-                    samples, rate = decode_wav(payload)
-                    mono = samples.mean(axis=1)
-                    total_ms = max(1, int(len(mono) * 1000 / rate))
-                    for start in range(0, total_ms, chunk_ms):
-                        lo = start * rate // 1000
-                        hi = min(len(mono),
-                                 (start + chunk_ms) * rate // 1000)
-                        seg = mono[lo:hi]
-                        if len(seg) == 0:
-                            continue
-                        rms = float(np.sqrt(np.mean(seg * seg)))
-                        zcr = float(np.mean(np.signbit(seg[1:])
-                                            != np.signbit(seg[:-1])
-                                            )) if len(seg) > 1 else 0.0
-                        out.append((mid, start, rms, zcr,
-                                    float(np.abs(seg).max()), "ok"))
-                except NotImplementedError:
-                    if dur <= 0:
-                        continue
-                    for start in range(0, dur, chunk_ms):
-                        rms, zcr, peak = _fake_audio_features(payload,
-                                                              start)
-                        out.append((mid, start, rms, zcr, peak,
-                                    "fake_decode"))
-                except ValueError:
-                    out.append((mid, 0, 0.0, 0.0, 0.0, "decode_error"))
-            yield pd.DataFrame(out, columns=cols)
-
-    auds = media.filter(F.col("kind") == "audio")
-    keyed = auds.repartition(partitions or 64, F.xxhash64("media_id"))
-    return keyed.mapInPandas(batch, schema=AUDIO_FEATURE_SCHEMA)
+    return M._decode_map(media, "audio", AUDIO_FEATURE_SCHEMA, chunks,
+                         (0, None, None, None))
 
 
 # ---------------------------------------------------------------- AVI
@@ -270,48 +242,25 @@ FRAME_HASH_SCHEMA = T.StructType([
 ])
 
 
-def video_frame_hashes(media: DataFrame, every_ms: int = 1000,
-                       partitions: int | None = None) -> DataFrame:
+def video_frame_hashes(media: DataFrame,
+                       every_ms: int = 1000) -> DataFrame:
     """Per-frame perceptual hash (aHash) for video payloads — the
     video-near-dup fingerprint (two videos sharing many frame hashes
     are re-encodes/clips of each other; feed the output to
     ``media.phash_near_duplicates`` keyed per frame). REAL decode for
-    AVI/MJPEG; deterministic fake for codec-absent containers (mp4);
-    'decode_error' for malformed AVI."""
-    from pyspark.sql import functions as F
-
-    from . import media as M
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    AVI/MJPEG; a codec-absent container (mp4) gives one
+    ``unsupported_codec`` row and malformed AVI one ``decode_error``
+    row, each at frame 0 with a null hash."""
+    def frame_hashes(payload: bytes) -> list[tuple]:
         from . import jpegcodec
-        cols = [f.name for f in FRAME_HASH_SCHEMA.fields]
-        for b in batches:
-            out = []
-            for mid, payload, dur in zip(b["media_id"], b["payload"],
-                                         b["duration_ms"]):
-                payload = bytes(payload or b"")
-                mid, dur = int(mid), int(dur)
-                try:
-                    frames, fps = _avi_frames_and_fps(payload)
-                    step = max(1, every_ms * fps // 1000)
-                    for i in range(0, len(frames), step):
-                        px = jpegcodec.decode_jpeg(frames[i])
-                        out.append((mid, i * 1000 // fps,
-                                    M._ahash_of(px), "ok"))
-                except NotImplementedError:
-                    if dur <= 0:
-                        continue
-                    for ts in range(0, dur + 1, every_ms):
-                        px = M._fake_pixels(payload + b"%d" % ts, 16, 16)
-                        out.append((mid, ts, M._ahash_of(px),
-                                    "fake_decode"))
-                except ValueError:
-                    out.append((mid, 0, None, "decode_error"))
-            yield pd.DataFrame(out, columns=cols)
+        frames, fps = _avi_frames_and_fps(payload)
+        step = max(1, every_ms * fps // 1000)
+        return [(i * 1000 // fps,
+                 M._ahash_of(jpegcodec.decode_jpeg(frames[i])))
+                for i in range(0, len(frames), step)]
 
-    vids = media.filter(F.col("kind") == "video")
-    keyed = vids.repartition(partitions or 64, F.xxhash64("media_id"))
-    return keyed.mapInPandas(batch, schema=FRAME_HASH_SCHEMA)
+    return M._decode_map(media, "video", FRAME_HASH_SCHEMA, frame_hashes,
+                         (0, None))
 
 
 # ---------------------------------------------------------------- MP4

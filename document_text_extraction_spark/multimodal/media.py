@@ -3,8 +3,9 @@
 Media payloads are opaque ``binary`` columns with typed metadata — the
 same shape as the ``html`` column in the main pipeline. All Spark-side
 plumbing here is real and tested: schemas, content sniffing (JVM-side
-magic-byte expressions), partitioning by payload size, and the
-``mapInPandas`` batch shape for decode/feature-extraction.
+magic-byte expressions), hash-partitioning by ``media_id`` into the
+session's shuffle partitions, and the ``mapInPandas`` batch shape for
+decode/feature-extraction.
 
 PNG decode is REAL (VERDICT r4 #1): ``_decode_pixels`` implements a
 pure-Python/numpy PNG decoder covering every legal depth/color-type
@@ -20,16 +21,19 @@ registry row plants lossy-re-encoded JPEG copies that only a true
 pixel decode can pair up). WAV/PCM audio and AVI/MJPEG video decode
 for real too (``multimodal/av.py``); only compressed-audio and
 inter-frame video codecs remain the deployment hook (LIMITS.md §5).
-Images never fall back to a fake: an image outside the PNG and
-baseline-JPEG decoders is labelled ``unsupported_codec`` with no hash
-or pixels. Only ``av.py``'s video frames keep the deterministic pixel
-fake (``_fake_pixels``, status ``fake_decode``).
+The image, audio and video decode kernels (``resize_images``,
+``ahash_images``, ``av.audio_chunk_features``,
+``av.video_frame_hashes``) share one decode-and-label map,
+``_decode_map``: nothing is ever faked. A payload outside the decoders
+gives one ``unsupported_codec`` row and malformed bytes one
+``decode_error`` row, both with null features (empty ``pixels`` for
+resize).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -136,9 +140,9 @@ def _encode_png(pixels: np.ndarray, filter_type: int = 0) -> bytes:
 
 def _synth_pixels(width: int, height: int, seed: int) -> np.ndarray:
     """Deterministic (h, w, 3) uint8 pixel content for image ``seed``:
-    md5-derived tile with a position mix (same construction as
-    ``_fake_pixels``) so downsampled aHashes of distinct images stay
-    well-separated — the pinned no-accidental-near-dup property."""
+    md5-derived tile with a position mix so downsampled aHashes of
+    distinct images stay well-separated — the pinned
+    no-accidental-near-dup property."""
     base = np.frombuffer(hashlib.md5(b"png:%d" % seed).digest(),
                          dtype=np.uint8)
     n = width * height * 3
@@ -417,11 +421,11 @@ def _jpeg_header_dims(head: bytes) -> tuple[int, int] | None:
 
 
 def _feature_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batch feature extraction: real byte-level features, stubbed
-    pixel decode. Numpy over the whole batch — byte histograms for every
-    payload come from ONE global bincount over (row_id*256 + byte), no
-    per-row Python in the entropy path (the template a real decoder
-    deployment would follow)."""
+    """Arrow-batch feature extraction: byte-level features and header
+    dimensions, no pixel decode. Byte entropy comes from one C-level
+    bincount per payload reduced in numpy over the whole batch; the
+    container sniff and header-dimension parse read bounded payload
+    heads."""
     cols = [f.name for f in MEDIA_FEATURE_SCHEMA.fields]
     for b in batches:
         n = len(b)
@@ -486,33 +490,56 @@ def _feature_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         }, columns=cols)
 
 
-def extract_media_features(media: DataFrame,
-                           partitions: int | None = None) -> DataFrame:
-    """Partition by payload-size-aware key (big videos spread out, same
-    salting idea as the main pipeline) → Arrow-batch feature map."""
-    n = partitions or 64
-    keyed = media.repartition(n, F.xxhash64("media_id"))
-    return keyed.mapInPandas(_feature_batch, schema=MEDIA_FEATURE_SCHEMA)
+def _spread(media: DataFrame) -> DataFrame:
+    """Hash-partition media rows by ``media_id`` into the session's
+    ``spark.sql.shuffle.partitions`` (an explicit count, so AQE does
+    not coalesce the CPU-bound decode into a few tasks). Placement
+    never changes a row's values."""
+    n = int(media.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return media.repartition(n, F.xxhash64("media_id"))
 
 
-def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """DETERMINISTIC FAKE decode for video frames whose inter-frame
-    codec is absent here (``av.video_frame_hashes``, status
-    ``fake_decode``; images never use it): an (h, w, 3) uint8 array
-    derived from md5(payload), so the hash math downstream stays
-    testable while the video codec is swapped in at deployment."""
-    seed = hashlib.md5(payload or b"").digest()
-    base = np.frombuffer(seed, dtype=np.uint8)
-    n = max(1, width) * max(1, height) * 3
-    reps = -(-n // len(base))
-    tiled = np.tile(base, reps)[:n]
-    # mix the byte position into the tiled digest: a bare 16-byte tile
-    # makes downstream perceptual features degenerate (repeated
-    # sampling offsets -> constant-gray planes and colliding aHashes);
-    # the xor keeps the array a pure deterministic function of payload
-    mixed = tiled ^ ((np.arange(n, dtype=np.int64) * 131) % 251
-                     ).astype(np.uint8)
-    return mixed.reshape(max(1, height), max(1, width), 3)
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Spread rows by ``media_id`` (big videos land on different
+    tasks) → Arrow-batch feature map."""
+    return _spread(media).mapInPandas(_feature_batch,
+                                      schema=MEDIA_FEATURE_SCHEMA)
+
+
+def _decode_map(media: DataFrame, kind: str, schema: T.StructType,
+                decode: Callable[[bytes], list[tuple]],
+                failed: tuple) -> DataFrame:
+    """The one decode-and-label map behind the image, audio and video
+    kernels: rows of ``kind``, spread by ``media_id``, then one
+    Arrow-batched loop. ``decode(payload)`` returns the ok rows'
+    columns between ``media_id`` and ``status``. A payload no decoder
+    here covers (``NotImplementedError``) gives exactly one
+    ``unsupported_codec`` row and malformed bytes (``ValueError``)
+    exactly one ``decode_error`` row, both carrying ``failed`` — no
+    value is made up for what could not be decoded.
+
+    The frame is built with ``object`` columns: pandas would turn a
+    64-bit hash column holding one null into float64 and round every
+    hash in the batch."""
+    cols = schema.fieldNames()
+
+    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            out = []
+            for mid, payload in zip(b["media_id"], b["payload"]):
+                mid = int(mid)
+                try:
+                    rows = decode(bytes(payload or b""))
+                except NotImplementedError:
+                    out.append((mid, *failed, "unsupported_codec"))
+                except ValueError:
+                    out.append((mid, *failed, "decode_error"))
+                else:
+                    out.extend((mid, *r, "ok") for r in rows)
+            yield pd.DataFrame(out, columns=cols, dtype=object)
+
+    return _spread(media.filter(F.col("kind") == kind)).mapInPandas(
+        batch, schema=schema)
 
 
 RESIZED_SCHEMA = T.StructType([
@@ -524,8 +551,8 @@ RESIZED_SCHEMA = T.StructType([
 ])
 
 
-def resize_images(media: DataFrame, out_w: int = 64, out_h: int = 64,
-                  partitions: int | None = None) -> DataFrame:
+def resize_images(media: DataFrame, out_w: int = 64,
+                  out_h: int = 64) -> DataFrame:
     """Image resize as an Arrow-batched map: decode (PNG and baseline
     JPEG) → vectorized nearest-neighbor resample → fixed-size pixel
     buffer per row.
@@ -537,32 +564,15 @@ def resize_images(media: DataFrame, out_w: int = 64, out_h: int = 64,
 
     The resample is pure numpy index arithmetic over the whole image
     (no per-pixel Python)."""
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    px = _decode_pixels(bytes(payload or b""))
-                except NotImplementedError:
-                    out.append((int(mid), out_w, out_h, b"",
-                                "unsupported_codec"))
-                    continue
-                except ValueError:
-                    out.append((int(mid), out_w, out_h, b"",
-                                "decode_error"))
-                    continue
-                # nearest-neighbor: one fancy-index gather
-                ys = (np.arange(out_h) * px.shape[0]) // out_h
-                xs = (np.arange(out_w) * px.shape[1]) // out_w
-                resized = px[ys][:, xs]
-                out.append((int(mid), out_w, out_h,
-                            resized.tobytes(), "ok"))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             RESIZED_SCHEMA.fields])
+    def resize(payload: bytes) -> list[tuple]:
+        px = _decode_pixels(payload)
+        # nearest-neighbor: one fancy-index gather
+        ys = (np.arange(out_h) * px.shape[0]) // out_h
+        xs = (np.arange(out_w) * px.shape[1]) // out_w
+        return [(out_w, out_h, px[ys][:, xs].tobytes())]
 
-    imgs = media.filter(F.col("kind") == "image")
-    keyed = imgs.repartition(partitions or 64, F.xxhash64("media_id"))
-    return keyed.mapInPandas(batch, schema=RESIZED_SCHEMA)
+    return _decode_map(media, "image", RESIZED_SCHEMA, resize,
+                       (out_w, out_h, b""))
 
 
 def audio_chunk_plan(media: DataFrame, chunk_ms: int = 5000) -> DataFrame:
@@ -637,8 +647,7 @@ def _ahash_of(px: np.ndarray, side: int = 8) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def ahash_images(media: DataFrame,
-                 partitions: int | None = None) -> DataFrame:
+def ahash_images(media: DataFrame) -> DataFrame:
     """Perceptual hash (aHash) per image as an Arrow-batched map — the
     image-side fingerprint feeding near-dup detection, same role as
     ``dedup.content_fingerprint_col`` for text. Decode is REAL for PNG and
@@ -647,25 +656,9 @@ def ahash_images(media: DataFrame,
     ``unsupported_codec`` (no decoder here covers it) or
     ``decode_error`` (malformed bytes); a null hash never matches in
     :func:`phash_near_duplicates`' band join."""
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    px = _decode_pixels(bytes(payload or b""))
-                except NotImplementedError:
-                    out.append((int(mid), None, "unsupported_codec"))
-                    continue
-                except ValueError:
-                    out.append((int(mid), None, "decode_error"))
-                    continue
-                out.append((int(mid), _ahash_of(px), "ok"))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             AHASH_SCHEMA.fields])
-
-    imgs = media.filter(F.col("kind") == "image")
-    keyed = imgs.repartition(partitions or 64, F.xxhash64("media_id"))
-    return keyed.mapInPandas(batch, schema=AHASH_SCHEMA)
+    return _decode_map(media, "image", AHASH_SCHEMA,
+                       lambda p: [(_ahash_of(_decode_pixels(p)),)],
+                       (None,))
 
 
 def phash_near_duplicates(hashes: DataFrame, max_hamming: int = 3,

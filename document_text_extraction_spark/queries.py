@@ -3594,8 +3594,7 @@ def q_media_features(spark, sf_dir):
     not SQL-derivable, so the driver row compares the structural
     columns (entropy stays pytest-asserted, test_media_features)."""
     from .multimodal import media as M
-    feats = M.extract_media_features(_media_df(spark, sf_dir),
-                                     partitions=8)
+    feats = M.extract_media_features(_media_df(spark, sf_dir))
     return feats.select(
         "media_id", "kind", "n_bytes", "sniffed",
         "header_width", "header_height", "status")
@@ -4328,7 +4327,7 @@ def q_media_phash(spark, sf_dir):
             yield pd.DataFrame(rows, columns=cols)
 
     media = ids.mapInPandas(gen, schema=M.MEDIA_SCHEMA)
-    hashes = M.ahash_images(media, partitions=16)
+    hashes = M.ahash_images(media)
     return M.phash_near_duplicates(hashes, max_hamming=3, n_bands=4)
 
 
@@ -4399,17 +4398,19 @@ SQL_LENGTH_QUANTILES = (
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ---- FIRST 50 = the driver window (risk-first; the rotation test
     # enforces dirty-set containment). The dirty set overflows the
-    # window (64 queries): the extraction-core edits mark every query
+    # window (79 queries): the extraction-core edits mark every query
     # that runs the extraction map dirty, the dedup/neardup/components/
-    # graphrank edits (and docstring-only media/terms edits) mark their
-    # consumers. Every directly edited query sits here and every slot
-    # holds a dirty query; 14 transitively dirty queries overflow past
-    # position 50 (the full 115-query sweep re-verifies them). -----
+    # graphrank/media/fields/textstats/sections edits mark their
+    # consumers (also through queries.py's top-level imports). Every
+    # directly edited query sits here and every slot holds a dirty
+    # query; 29 transitively dirty queries overflow past position 50
+    # (the full 115-query sweep re-verifies them). -----
     "streaming_neardup_dedup": q_streaming_neardup_dedup,
     "pruned_scan": q_pruned_scan,
     "streaming_incremental_dedup": q_streaming_incremental_dedup,
     "extract_charset_roundtrip": q_extract_charset_roundtrip,
     "media_phash": q_media_phash,
+    "media_features": q_media_features,
     "kmv_distinct": q_kmv_distinct,
     "winnow_fingerprints": q_winnow_fingerprints,
     "minhash_neardup": q_minhash_neardup,
@@ -4459,7 +4460,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # long-stable greens (r2-r5 rows + pytest) -------------------------
     "semdedup_scaled": q_semdedup_scaled,
     "ann_ivf_trained": q_ann_ivf_trained,
-    "media_features": q_media_features,
     "media_sample_plan": q_media_sample_plan,
     "semdedup": q_semdedup,
     "cooccurrence_pmi": q_cooccurrence_pmi,

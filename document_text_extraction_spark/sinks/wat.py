@@ -10,9 +10,10 @@ output's ``fields`` struct (outlinks ∥ anchors collected in the single
 extraction pass, meta robots) — and the matching source closes the
 roundtrip.
 
-* :func:`write_wat` — same distributed-sink skeleton as
-  :func:`.wet.write_wet` (repartition → per-task serialization via
-  ``sources.warc.make_warc`` with ``record_type='metadata'`` →
+* :func:`write_wat` — the distributed-sink skeleton it shares with
+  :func:`.wet.write_wet` (``wet._write_parts``: repartition →
+  per-task serialization via ``sources.warc.make_warc`` with
+  ``record_type='metadata'`` →
   write-to-temp + atomic rename keyed on (partitionId,
   attemptNumber)); returns the file manifest computed in the same job.
   The JSON envelope follows WAT's shape
@@ -37,23 +38,14 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
-from datetime import datetime, timezone
 
 import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.warc import make_warc, parse_wat
-
-_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
-
-WAT_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("path", T.StringType()),
-    T.StructField("records", T.LongType()),
-    T.StructField("bytes", T.LongType()),
-])
+from ..sources.warc import parse_wat
+from .wet import _write_parts
 
 # the envelope subset we publish; from_json prunes to what a reader
 # selects, so growing this schema is backward-compatible
@@ -116,47 +108,15 @@ def write_wat(df: DataFrame, out_dir: str,
         F.col(anchors_col).alias("__anchors"),
         F.col(robots_col).alias("__robots"),
         *([F.col(ts_col).alias("__ts")] if ts_col else []))
-    if n_files is not None:
-        slim = slim.repartition(n_files)
-    os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.wat.gz" if compress else ".warc.wat"
 
-    def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc else 0
-        att = tc.attemptNumber() if tc else 0
-        recs: list[dict] = []
-        for b in batches:
-            tss = b["__ts"] if "__ts" in b.columns else [None] * len(b)
-            for url, hrefs, anchors, robots, ts in zip(
-                    b["__url"], b["__hrefs"], b["__anchors"],
-                    b["__robots"], tss):
-                if ts is None or pd.isna(ts):
-                    ts = _EPOCH
-                elif isinstance(ts, pd.Timestamp):
-                    ts = ts.to_pydatetime()
-                recs.append({
-                    "url": url, "ts": ts,
-                    "payload": _envelope(
-                        url, hrefs, anchors, robots or "",
-                    ).encode("utf-8"),
-                    "record_type": "metadata",
-                    "content_type": "application/json",
-                })
-        if not recs:
-            yield pd.DataFrame([], columns=["path", "records", "bytes"])
-            return
-        data = make_warc(recs, per_record_gzip=compress)
-        final = os.path.join(out_dir, f"part-{pid:05d}{ext}")
-        tmp = os.path.join(out_dir, f"._tmp-{pid:05d}-{att}{ext}")
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, final)
-        yield pd.DataFrame(
-            [(final, len(recs), len(data))],
-            columns=["path", "records", "bytes"])
+    def records(b: pd.DataFrame) -> Iterator[tuple]:
+        for url, hrefs, anchors, robots in zip(
+                b["__url"], b["__hrefs"], b["__anchors"], b["__robots"]):
+            yield url, _envelope(url, hrefs, anchors,
+                                 robots or "").encode("utf-8")
 
-    return slim.mapInPandas(_write, schema=WAT_MANIFEST_SCHEMA)
+    return _write_parts(slim, out_dir, ".warc.wat", compress, n_files,
+                        "metadata", "application/json", records)
 
 
 _WAT_ROWS_SCHEMA = T.StructType([

@@ -35,12 +35,13 @@ same sink.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from datetime import datetime, timezone
 
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.warc import make_warc, parse_wet
@@ -76,12 +77,37 @@ def write_wet(df: DataFrame, out_dir: str,
     WET consumers treat WARC-Date as metadata, and a deterministic
     sentinel keeps output bytes reproducible run-to-run.
     """
-    cols = [url_col, text_col] + ([ts_col] if ts_col else [])
-    slim = df.select(*cols)
+    slim = df.select(
+        F.col(url_col).alias("__url"), F.col(text_col).alias("__text"),
+        *([F.col(ts_col).alias("__ts")] if ts_col else []))
+
+    def records(b: pd.DataFrame) -> Iterator[tuple]:
+        for url, text in zip(b["__url"], b["__text"]):
+            skip = text is None or (isinstance(text, float)
+                                    and pd.isna(text))
+            yield url, None if skip else str(text).encode("utf-8")
+
+    return _write_parts(slim, out_dir, ".warc.wet", compress, n_files,
+                        "conversion", "text/plain", records)
+
+
+def _write_parts(slim: DataFrame, out_dir: str, ext: str, compress: bool,
+                 n_files: int | None, record_type: str, content_type: str,
+                 records: Callable[[pd.DataFrame], Iterable[tuple]]
+                 ) -> DataFrame:
+    """The task protocol of the WET and WAT sinks: each task turns its
+    rows into WARC records (``records(batch)`` yields one
+    ``(url, payload)`` per row, payload None to skip the row; the
+    optional ``__ts`` column gives WARC-Date, the epoch when null or
+    NaN), serializes them with ``make_warc`` and lands
+    ``part-NNNNN{ext}[.gz]`` by write-to-temp + atomic rename keyed on
+    (partitionId, attemptNumber). Returns the manifest (path, records,
+    bytes), one row per non-empty task, computed in the same job."""
     if n_files is not None:
         slim = slim.repartition(n_files)
     os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.wet.gz" if compress else ".warc.wet"
+    if compress:
+        ext += ".gz"
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tc = TaskContext.get()
@@ -89,19 +115,17 @@ def write_wet(df: DataFrame, out_dir: str,
         att = tc.attemptNumber() if tc else 0
         recs: list[dict] = []
         for b in batches:
-            tss = b[ts_col] if ts_col else [None] * len(b)
-            for url, text, ts in zip(b[url_col], b[text_col], tss):
-                if text is None or (isinstance(text, float)
-                                    and pd.isna(text)):
+            tss = b["__ts"] if "__ts" in b.columns else [None] * len(b)
+            for (url, payload), ts in zip(records(b), tss):
+                if payload is None:
                     continue
                 if ts is None or pd.isna(ts):
                     ts = _EPOCH
                 elif isinstance(ts, pd.Timestamp):
                     ts = ts.to_pydatetime()
-                recs.append({"url": url, "ts": ts,
-                             "payload": str(text).encode("utf-8"),
-                             "record_type": "conversion",
-                             "content_type": "text/plain"})
+                recs.append({"url": url, "ts": ts, "payload": payload,
+                             "record_type": record_type,
+                             "content_type": content_type})
         if not recs:
             yield pd.DataFrame([], columns=["path", "records", "bytes"])
             return

@@ -1,11 +1,14 @@
 """WAV/PCM audio decode + AVI/MJPEG video frame decode
 (multimodal/av.py): container roundtrips, feature kernels over REAL
-decoded samples/frames, fake-decode fallbacks for codec-absent
-payloads, and malformed-container statuses.
+decoded samples/frames, and the one labelled row, with no values, that
+each of the four decode maps gives a codec-absent or malformed
+payload.
 
 Reference parity: the reference delegates media decode to OpenCV
 (combined_local_model_ocr.py); this repo decodes in the Arrow batch
 with no native dependency."""
+
+import hashlib
 
 import numpy as np
 import pytest
@@ -49,18 +52,9 @@ class TestWav:
         t = np.arange(48000)  # 3 s at 16 kHz
         tone = (10000 * np.sign(np.sin(t / 5.0))).astype(np.int16)
         wav = av.encode_wav(tone, rate=16000)
-        import hashlib
-        stub = b"RIFF" + hashlib.md5(b"a:1").digest() * 32  # not WAVE
-        rows = [
-            (0, "audio", wav, "audio/wav", -1, -1, 3000),
-            (1, "audio", stub, "audio/wav", -1, -1,
-             7000),  # codec-absent RIFF → fake features
-            (2, "audio", b"RIFF\x04\x00\x00\x00WAVE", "audio/wav", -1,
-             -1, 1000),  # malformed
-        ]
+        rows = [(0, "audio", wav, "audio/wav", -1, -1, 3000)]
         df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-        got = av.audio_chunk_features(df, chunk_ms=1000,
-                                      partitions=2).collect()
+        got = av.audio_chunk_features(df, chunk_ms=1000).collect()
         by_id = {}
         for r in got:
             by_id.setdefault(r.media_id, []).append(r)
@@ -71,12 +65,6 @@ class TestWav:
             assert r.status == "ok"
             assert abs(r.rms - 10000 / 32768) < 1e-3
             assert 0 < r.zcr < 0.5 and r.peak <= 1.0
-        # stub: deterministic fake per chunk over its planned duration
-        fake = by_id[1]
-        assert all(r.status == "fake_decode" for r in fake)
-        assert len(fake) == 7
-        # malformed: one decode_error row
-        assert [r.status for r in by_id[2]] == ["decode_error"]
 
 
 class TestAviMjpeg:
@@ -117,12 +105,9 @@ class TestAviMjpeg:
             (0, "video", a, "video/avi", 32, 24, 2000),
             (1, "video", b, "video/avi", 32, 24, 2000),
             (2, "video", c, "video/avi", 32, 24, 2000),
-            (3, "video", M.synth_media_row(2)[2], "video/mp4", -1, -1,
-             3000),  # mp4 stub → fake hashes
         ]
         df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-        got = av.video_frame_hashes(df, every_ms=500,
-                                    partitions=2).collect()
+        got = av.video_frame_hashes(df, every_ms=500).collect()
         by_id = {}
         for r in got:
             by_id.setdefault(r.media_id, []).append(r)
@@ -132,14 +117,12 @@ class TestAviMjpeg:
         assert len(ha) == 4 and all(r.status == "ok" for r in by_id[0])
         assert ha == hb          # re-encode: identical fingerprints
         assert not (set(h for _, h in ha) & set(h for _, h in hc))
-        assert all(r.status == "fake_decode" for r in by_id[3])
-        assert len(by_id[3]) == 7  # 0..3000 every 500 ms
 
     def test_malformed_avi_status_in_kernel(self, spark):
         rows = [(0, "video", b"RIFF\x04\x00\x00\x00AVI ", "video/avi",
                  -1, -1, 1000)]
         df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-        got = av.video_frame_hashes(df, partitions=1).collect()
+        got = av.video_frame_hashes(df).collect()
         assert [r.status for r in got] == ["decode_error"]
 
 
@@ -175,7 +158,69 @@ class TestMp4Metadata:
                  -1, 9000)]
         df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
         got = {r.media_id: (r.sniffed, r.header_width, r.header_height)
-               for r in M.extract_media_features(df,
-                                                 partitions=1).collect()}
+               for r in M.extract_media_features(df).collect()}
         assert got[0] == ("mp4", 320, 180)
         assert got[1] == ("mp4", -1, -1)  # corpus stub has no moov
+
+
+def _tone_wav() -> bytes:
+    t = np.arange(24000)  # 1.5 s at 16 kHz
+    return av.encode_wav((10000 * np.sign(np.sin(t / 5.0))).astype(np.int16),
+                         rate=16000)
+
+
+def _two_frame_avi() -> bytes:
+    frames = [J.encode_jpeg(M._synth_pixels(32, 24, s), quality=100)
+              for s in (10, 11)]
+    return av.encode_avi_mjpeg(frames, fps=2, size=(32, 24))
+
+
+_GIF = b"GIF89a" + bytes(range(64))
+_BAD_PNG = M._PNG_SIG + b"\x00\x00\x00\x0dIHDRjunkjunkjunk0"
+
+# map → (run, kind, decodable payload, codec-absent payload, malformed
+# payload, the failure row's columns between media_id and status)
+DECODE_MAPS = {
+    "resize_images": (
+        lambda df: M.resize_images(df, 8, 8), "image",
+        M.synth_media_row(0)[2], _GIF, _BAD_PNG,
+        {"out_width": 8, "out_height": 8, "pixels": b""}),
+    "ahash_images": (
+        M.ahash_images, "image", M.synth_media_row(0)[2], _GIF, _BAD_PNG,
+        {"ahash": None}),
+    "audio_chunk_features": (
+        lambda df: av.audio_chunk_features(df, chunk_ms=1000), "audio",
+        _tone_wav(), b"RIFF" + hashlib.md5(b"a:1").digest() * 32,
+        b"RIFF\x04\x00\x00\x00WAVE",
+        {"chunk_start_ms": 0, "rms": None, "zcr": None, "peak": None}),
+    "video_frame_hashes": (
+        lambda df: av.video_frame_hashes(df, every_ms=500), "video",
+        _two_frame_avi(), M.synth_media_row(2)[2],
+        b"RIFF\x04\x00\x00\x00AVI ", {"frame_ts_ms": 0, "ahash": None}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DECODE_MAPS))
+def test_decode_map_failure_rows_carry_no_values(spark, name):
+    """Every decode map gives a codec-absent payload exactly one
+    ``unsupported_codec`` row and a malformed payload exactly one
+    ``decode_error`` row, both with null features (empty ``pixels`` for
+    resize) — nothing is made up. The decodable payload's rows are the
+    same whether or not failure rows share its Arrow batch (a null in a
+    64-bit hash column must not round the batch's hashes)."""
+    run, kind, ok, absent, malformed, failed = DECODE_MAPS[name]
+    rows = [(i, kind, p, "", -1, -1, 3000)
+            for i, p in enumerate((ok, absent, malformed))]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one batch
+    try:
+        mixed = run(spark.createDataFrame(rows, M.MEDIA_SCHEMA)).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    alone = run(spark.createDataFrame(rows[:1], M.MEDIA_SCHEMA)).collect()
+    assert alone and all(r.status == "ok" for r in alone)
+    assert sorted(map(tuple, (r for r in mixed if r.media_id == 0)),
+                  key=repr) == sorted(map(tuple, alone), key=repr)
+    for mid, status in ((1, "unsupported_codec"), (2, "decode_error")):
+        got = [r.asDict() for r in mixed if r.media_id == mid]
+        assert got == [{"media_id": mid, **failed, "status": status}]

@@ -280,7 +280,7 @@ class TestHeaderDims:
         enc = J.encode_jpeg(PX, quality=90)
         rows = [(0, "image", enc, "image/jpeg", 40, 24, -1)]
         df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-        r = M.extract_media_features(df, partitions=1).collect()[0]
+        r = M.extract_media_features(df).collect()[0]
         assert (r.sniffed, r.header_width, r.header_height) == (
             "jpeg", 40, 24)
 

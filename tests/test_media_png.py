@@ -134,23 +134,24 @@ def test_unsupported_and_malformed():
 
 def test_ahash_runs_over_true_pixels():
     """The kernel-visible contract: for a planted PNG the aHash equals
-    the numpy reference computed from the DECODED (true) pixels — the
-    fake-decode path is no longer reachable for PNG."""
+    the numpy reference computed from the DECODED (true) pixels, and
+    the pixels are the planted ones."""
     seed = 12
     w, h = 16 + (seed % 64) * 8, 16 + (seed % 48) * 8
     payload = M._png_bytes(w, h, seed)
     px = M._decode_pixels(payload)
     assert np.array_equal(px, M._synth_pixels(w, h, seed))
     expect = M._ahash_of(px)
-    fake = M._ahash_of(M._fake_pixels(payload, w, h))
-    assert expect != fake  # proves the real path is the one measured
+    assert expect == M._ahash_of(M._synth_pixels(w, h, seed))
+    # a different image hashes differently: the hash reads the pixels
+    assert expect != M._ahash_of(M._synth_pixels(w, h, seed + 1))
 
 
 def test_ahash_images_spark_uses_decoder(spark):
     rows = [M.synth_media_row(i) for i in range(0, 9)]
     df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
     got = {r.media_id: (r.ahash, r.status)
-           for r in M.ahash_images(df, partitions=2).collect()}
+           for r in M.ahash_images(df).collect()}
     for i in (0, 3, 6):  # the image rows
         w, h = 16 + (i % 64) * 8, 16 + (i % 48) * 8
         exp = M._ahash_of(M._decode_pixels(M._png_bytes(w, h, i)))
@@ -167,7 +168,7 @@ def test_corrupt_payload_yields_decode_error_status(spark):
     gif = b"GIF89a" + bytes(range(64))
     gifs = [(i, "image", gif, "image/gif", 16, 16, -1) for i in (2, 3)]
     df = spark.createDataFrame([good, bad, *gifs], M.MEDIA_SCHEMA)
-    hashes = M.ahash_images(df, partitions=1)
+    hashes = M.ahash_images(df)
     got = {r.media_id: (r.status, r.ahash) for r in hashes.collect()}
     assert {k: v[0] for k, v in got.items()} == {
         0: "ok", 1: "decode_error", 2: "unsupported_codec",
@@ -176,7 +177,7 @@ def test_corrupt_payload_yields_decode_error_status(spark):
     pairs = M.phash_near_duplicates(hashes).collect()
     assert not [p for p in pairs if {p.id_a, p.id_b} & {2, 3}]
     rz = {r.media_id: (r.status, r.pixels)
-          for r in M.resize_images(df, 8, 8, partitions=1).collect()}
+          for r in M.resize_images(df, 8, 8).collect()}
     assert {k: v[0] for k, v in rz.items()} == {
         0: "ok", 1: "decode_error", 2: "unsupported_codec",
         3: "unsupported_codec"}

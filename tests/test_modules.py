@@ -269,7 +269,7 @@ def test_media_sniff_jvm_side(spark, media):
 
 
 def test_media_features(spark, media):
-    feats = extract_media_features(media, partitions=8).toPandas()
+    feats = extract_media_features(media).toPandas()
     assert len(feats) == 90
     assert (feats["status"] == "ok").all()
     img = feats[feats["kind"] == "image"]
@@ -282,16 +282,16 @@ def test_media_features(spark, media):
 
 def test_media_resize_plumbing(spark, media):
     """Resize batch shape: fixed out-dims, correct buffer size per row,
-    deterministic across partitionings (fake decode is md5-derived)."""
+    deterministic across input partitionings."""
     from document_text_extraction_spark.multimodal.media import (
         resize_images,
     )
-    a = resize_images(media, out_w=32, out_h=16, partitions=4).toPandas()
+    a = resize_images(media, out_w=32, out_h=16).toPandas()
     assert len(a) == 30  # 90 rows / 3 kinds
     assert (a["status"] == "ok").all()
     assert all(len(p) == 32 * 16 * 3 for p in a["pixels"])
-    b = resize_images(media.repartition(7), out_w=32, out_h=16,
-                      partitions=2).toPandas()
+    b = resize_images(media.repartition(7), out_w=32,
+                      out_h=16).toPandas()
     am = dict(zip(a["media_id"], a["pixels"]))
     bm = dict(zip(b["media_id"], b["pixels"]))
     assert am == bm

@@ -12,7 +12,10 @@ mechanical:
 * a registry query is DIRTY if (a) its own function body in queries.py
   changed, (b) a module-level region of queries.py attributed to it
   (its adjacent SQL oracle constant) changed, (c) its source references
-  a changed module by name (e.g. ``robots``, ``asof``), or (d) it runs
+  a changed module by name (e.g. ``robots``, ``asof``) or through a
+  name queries.py imports from it at top level (``sections_df`` from
+  ``operators/sections.py``, the ``ff`` alias of
+  ``functions/fields.py``), or (d) it runs
   the extraction pipeline (``_extracted`` / ``extract_df`` /
   ``web_pages_from_documents``) and any core extraction module
   (oracle/kernels/corpus/pipeline/web_pages) changed — deliberately
@@ -108,32 +111,68 @@ def _attribute_lines_to_queries(changed: set[int]) -> set[str]:
     return names
 
 
+def _imported_stems() -> dict[str, str]:
+    """queries.py's top-level imports from this package: bound name →
+    stem of the module that defines it (``ff`` → ``fields``,
+    ``sections_df`` → ``sections``, ``pipeline`` → ``pipeline``)."""
+    stems: dict[str, str] = {}
+    for node in ast.parse(inspect.getsource(Q)).body:
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        for alias in node.names:
+            name = alias.asname or alias.name.split(".")[0]
+            obj = getattr(Q, name, None)
+            mod = obj if inspect.ismodule(obj) else inspect.getmodule(obj)
+            if mod is not None and mod.__name__.startswith(PKG + "."):
+                stems[name] = mod.__name__.rsplit(".", 1)[-1]
+    return stems
+
+
+def classify_dirty(stems: set[str], direct: set[str]) -> dict[str, str]:
+    """Registry query → why it is dirty (``direct``, ``transitive`` or
+    ``transitive-core``), in registry order; clean queries are absent.
+    ``stems`` are the changed module stems, ``direct`` the queries
+    whose own queries.py lines changed (rules (a)-(d) above)."""
+    stems = stems - {"queries"}  # handled at function granularity
+    core_changed = bool(stems & CORE_EXTRACTION)
+    # import lines or attribute use only — docstring prose ("the
+    # corpus", "this pipeline") must not flag; an imported function
+    # name (``sections_df``) is specific enough to match bare
+    patterns = [rf"^\s*(?:from|import)\b[^\n]*\b{re.escape(s)}\b"
+                rf"|\b{re.escape(s)}\s*\." for s in stems]
+    for name, stem in _imported_stems().items():
+        if stem in stems:
+            use = r"\s*\." if inspect.ismodule(getattr(Q, name)) else r"\b"
+            patterns.append(rf"\b{re.escape(name)}{use}")
+    used = re.compile("|".join(patterns), re.M) if patterns else None
+    kinds: dict[str, str] = {}
+    for name, fn in Q.QUERIES.items():
+        src = inspect.getsource(fn)
+        if name in direct:
+            kinds[name] = "direct"
+        elif used is not None and used.search(src):
+            kinds[name] = "transitive"
+        elif core_changed and _RUNS_EXTRACTION.search(src):
+            kinds[name] = "transitive-core"
+    return kinds
+
+
+def test_imported_names_attribute_their_module():
+    """A query that reaches a changed module only through a top-level
+    import of queries.py is dirty: ``sections_planted`` calls the
+    imported ``sections_df``, ``cv_fields_planted`` uses ``ff.``, the
+    alias of ``functions/fields.py``."""
+    assert "sections_planted" in classify_dirty({"sections"}, set())
+    assert "cv_fields_planted" in classify_dirty({"fields"}, set())
+
+
 def test_changed_queries_sit_inside_driver_window():
     base = _base_commit()
     if base is None:
         pytest.skip("no round marker commit to diff against")
-    stems = _changed_stems(base)
-    stems.discard("queries")  # handled at function granularity below
     direct = _attribute_lines_to_queries(_queries_py_changed_lines(base))
-    core_changed = bool(stems & CORE_EXTRACTION)
+    dirty_kind = classify_dirty(_changed_stems(base), direct)
     order = list(Q.QUERIES)
-    dirty_kind: dict[str, str] = {}
-    for name in order:
-        fn = Q.QUERIES[name]
-        src = inspect.getsource(fn)
-        if name in direct:
-            dirty_kind[name] = "direct"
-        elif any(
-            # import lines or attribute use only — docstring prose
-            # ("the corpus", "this pipeline") must not flag
-            re.search(rf"(?m)^\s*(?:from|import)\b[^\n]*"
-                      rf"\b{re.escape(s)}\b|\b{re.escape(s)}\s*\.",
-                      src)
-            for s in stems
-        ):
-            dirty_kind[name] = "transitive"
-        elif core_changed and _RUNS_EXTRACTION.search(src):
-            dirty_kind[name] = "transitive"
     late = [(p, n) for p, n in enumerate(order)
             if p >= WINDOW and n in dirty_kind]
     if len(dirty_kind) <= WINDOW:
