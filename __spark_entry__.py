@@ -17,6 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from document_text_extraction_spark import pipeline  # noqa: E402
+from document_text_extraction_spark.functions.fields import (  # noqa: E402
+    fields_col,
+)
 from document_text_extraction_spark.queries import (  # noqa: E402
     ORACLE_SQL,
     QUERIES,
@@ -36,7 +39,7 @@ def entry(spark: SparkSession) -> DataFrame:
     pages = web_pages_from_documents(spark, "/root/testdata/sf0.001")
     out = pipeline.extract_df(pages, n_buckets=16)
     return out.select(
-        "url", "extracted_text", "spans", "fields",
+        "url", "extracted_text", "spans", fields_col().alias("fields"),
         "lineage.status", "lineage.route", "lineage.n_pages",
         "lineage.n_blocks",
     )

@@ -1,13 +1,19 @@
-"""JVM-side (codegen'd) column-expression form of the regex field library.
+"""JVM-side (codegen'd) column expressions of the regex field library.
 
-``oracle.extract_fields`` is the per-document form used inside
-extraction; these expressions are the *dataset-level* form for SQL
-analytics over already-extracted text — they never leave the JVM, so no
-Python cost at all. Regex semantics follow the reference extractor's
-field families.
+The extraction record stores only what a document's bytes alone can
+tell (``pipeline.FIELDS_TYPE``: outlinks, anchors, meta_robots and the
+PDF /Annots and DOCX-relationship ``link_uris``). Every text family —
+emails, phones, links, headings, name, address, institutions,
+positions/companies and skills — is derived from the stored text and
+spans by :func:`fields_col`, in the JVM, so the extraction map runs no
+regex field pass at all. Regex semantics follow the reference
+extractor's field families.
 """
 
 from __future__ import annotations
+
+import functools
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,21 +33,78 @@ DEFAULT_VOCAB = [
 ]
 
 
+@functools.cache
+def _re_class(escape: str) -> str:
+    """Java character-class body holding exactly the code points that
+    Python's ``re`` matches with ``escape`` (``\\d``, ``\\s`` or
+    ``\\w``). Java's own classes are ASCII by default, and its
+    ``(?U)`` forms differ too (Python's ``\\w`` takes No numerals such
+    as '²', Java's takes marks instead), so the ranges are read off
+    Python's ``re`` itself. Non-ASCII bounds stay literal: a pattern
+    holding a supplementary character makes Java's lookbehind step back
+    by code point, not by UTF-16 unit.
+
+    Java tests a class's ranges one by one, and ``\\w`` has about 700
+    of them. So the ASCII ranges come first, and the rest form a binary
+    tree of nested classes, each half behind an intersection with the
+    span it covers: any code point is decided after a few dozen range
+    tests, not hundreds (with one flat list, :func:`emails_col` ran
+    one to two orders of magnitude slower)."""
+    def lit(cp: int) -> str:
+        return chr(cp) if cp > 0x7F else f"\\x{{{cp:x}}}"
+
+    def tree(ranges: list[tuple[int, int]]) -> str:
+        if len(ranges) <= 8:
+            return "".join(f"{lit(a)}-{lit(b)}" for a, b in ranges)
+        half = len(ranges) // 2
+        return "".join(
+            f"[{lit(part[0][0])}-{lit(part[-1][1])}&&[{tree(part)}]]"
+            for part in (ranges[:half], ranges[half:]))
+    every = "".join(map(chr, range(0x110000)))
+    ranges = [(m.start(), m.end() - 1)
+              for m in re.finditer(escape + "+", every)]
+    low = [(a, min(b, 0x7F)) for a, b in ranges if a <= 0x7F]
+    high = [(max(a, 0x80), b) for a, b in ranges if b >= 0x80]
+    return tree(low) + f"[{lit(0x80)}-{lit(0x10FFFF)}&&[{tree(high)}]]"
+
+
+def _word_bound() -> str:
+    """Python's unicode ``\\b``: a word character on one side only."""
+    w = _re_class(r"\w")
+    return f"(?:(?<![{w}])(?=[{w}])|(?<=[{w}])(?![{w}]))"
+
+
+def _py_strip(s: Column) -> Column:
+    """``str.strip()``: Spark's ``trim`` drops only U+0020."""
+    ws = _re_class(r"\s")
+    return F.regexp_replace(s, rf"\A[{ws}]+|[{ws}]+\z", "")
+
+
+def _findall(text: Column, pattern: str, group: int = 0) -> Column:
+    return F.regexp_extract_all(text, F.lit(pattern), F.lit(group))
+
+
 def emails_col(text: Column) -> Column:
-    # group 0 explicitly: these patterns have no capture groups and
-    # regexp_extract_all defaults to group 1
-    return F.array_sort(
-        F.array_distinct(
-            F.regexp_extract_all(text, F.lit(EMAIL_PATTERN), F.lit(0))
-        )
-    )
+    """O44 emails, sorted distinct (``final.py:199-200``; its TLD class
+    ``[A-Z|a-z]`` is a typo admitting '|', so the TLD is ``[A-Za-z]``
+    as in :data:`EMAIL_PATTERN`), bounded by Python's ``\\b``."""
+    b = _word_bound()
+    return F.array_sort(F.array_distinct(_findall(
+        text, b + EMAIL_PATTERN + b)))
 
 
 def phones_col(text: Column) -> Column:
-    """Extract candidates, strip non-digits (keep +), keep len>=10."""
+    """O45 phones (``final.py:202-212``): the union of the international
+    and the parenthesized-local pattern, each match stripped to its
+    digits and '+', kept when 10 or more remain; sorted distinct."""
+    d, s = _re_class(r"\d"), _re_class(r"\s")
+    sep = f"[-.{s}]?"
+    intl = (rf"\+?[{d}]{{1,3}}{sep}\(?[{d}]{{3}}\)?{sep}[{d}]{{3}}{sep}"
+            rf"[{d}]{{4}}")
+    local = rf"\([{d}]{{3}}\)[{s}]?[{d}]{{3}}{sep}[{d}]{{4}}"
     cleaned = F.transform(
-        F.regexp_extract_all(text, F.lit(PHONE_PATTERN), F.lit(0)),
-        lambda m: F.regexp_replace(m, r"[^\d+]", ""),
+        F.concat(_findall(text, intl), _findall(text, local)),
+        lambda m: F.regexp_replace(m, f"[^{d}+]", ""),
     )
     return F.array_sort(
         F.array_distinct(F.filter(cleaned, lambda c: F.length(c) >= 10))
@@ -49,11 +112,15 @@ def phones_col(text: Column) -> Column:
 
 
 def links_col(text: Column) -> Column:
-    return F.array_sort(
-        F.array_distinct(
-            F.regexp_extract_all(text, F.lit(URL_PATTERN), F.lit(0))
-        )
+    """O46 links (``final.py:214-222``): linkedin and github profile
+    paths without a scheme, and http(s) URLs; sorted distinct."""
+    w, s = _re_class(r"\w"), _re_class(r"\s")
+    found = F.concat(
+        _findall(text, rf"linkedin\.com/in/[{w}\-]+"),
+        _findall(text, rf"github\.com/[{w}\-]+"),
+        _findall(text, rf"https?://[^{s}\"'<>]+"),
     )
+    return F.array_sort(F.array_distinct(found))
 
 
 def pii_scrub_col(text: Column) -> Column:
@@ -121,9 +188,9 @@ def experience_years_col(text: Column) -> Column:
     return F.coalesce(F.array_max(nums), F.lit(-1).cast("long"))
 
 
-# O53/O51/O52 families — the same bounded patterns as oracle.py (kept
-# RE2/Java-compatible so DuckDB oracles can replicate them)
-NAME_LINE_PATTERN = r"[A-Za-z ]+"
+# O53/O51/O52 families, bounded re-expressions of the reference's greedy
+# ``[\w\s]+`` shapes (kept RE2/Java-compatible so DuckDB oracles can
+# replicate them)
 INSTITUTION_PATTERN = (
     r"University of [A-Z][A-Za-z]+|[A-Z][A-Za-z]+ (?:University|College)"
 )
@@ -138,7 +205,7 @@ def name_col(text: Column) -> Column:
     """O53 name heuristic (``approach4_v2.py:27-37``): first plausible
     line among the first 5 — 5<len<50, no @/+, letters+spaces only."""
     lines = F.transform(
-        F.slice(F.split(text, "\n"), 1, 5), lambda ln: F.trim(ln)
+        F.slice(F.split(text, "\n"), 1, 5), lambda ln: _py_strip(ln)
     )
     ok = F.filter(
         lines,
@@ -153,8 +220,9 @@ def address_col(text: Column) -> Column:
     """O55 address heuristic (``approach4_v2.py:70-85``): first
     keyword line ('contact details:'/'address:') among the first 10
     lines, comma-split, email/phone/keyword parts dropped, rejoined.
-    Pure array expressions — no UDF, same rule as
-    ``oracle.extract_address``."""
+    The FIRST keyword line wins even if all its parts are dropped (the
+    reference returns from inside the loop). Pure array expressions —
+    no UDF."""
     lines = F.slice(F.split(text, "\n"), 1, 10)
     hits = F.filter(
         lines,
@@ -162,7 +230,7 @@ def address_col(text: Column) -> Column:
         | F.lower(ln).contains("address:"),
     )
     first = F.get(hits, 0)
-    parts = F.transform(F.split(first, ","), lambda p: F.trim(p))
+    parts = F.transform(F.split(first, ","), lambda p: _py_strip(p))
     kept = F.filter(
         parts,
         lambda p: ~p.contains("@") & ~p.contains("+")
@@ -174,18 +242,45 @@ def address_col(text: Column) -> Column:
 def institutions_col(text: Column) -> Column:
     """O51 institution phrases (``final.py:290-299``), sorted distinct."""
     return F.array_sort(F.array_distinct(
-        F.regexp_extract_all(text, F.lit(INSTITUTION_PATTERN), F.lit(0))
-    ))
+        _findall(text, INSTITUTION_PATTERN)))
 
 
 def positions_col(text: Column) -> Column:
     """O52 job titles in match order (``final.py:326-334``)."""
-    return F.regexp_extract_all(text, F.lit(JOB_TITLE_PATTERN), F.lit(1))
+    return _findall(text, JOB_TITLE_PATTERN, 1)
 
 
 def companies_col(text: Column) -> Column:
     """O52 companies in match order — index-paired with positions."""
-    return F.regexp_extract_all(text, F.lit(JOB_TITLE_PATTERN), F.lit(2))
+    return _findall(text, JOB_TITLE_PATTERN, 2)
+
+
+def fields_col() -> Column:
+    """The typed field struct of an extraction table (the columns
+    ``extracted_text``, ``spans`` and stored ``fields`` of
+    ``pipeline.extract_df`` output), member for member: the text
+    families from the column functions above, ``headings`` from the
+    heading spans, ``links`` the text links unioned with the stored
+    /Annots and DOCX-relationship ``link_uris``, and the stored
+    ``outlinks``, ``anchors`` and ``meta_robots`` as they are."""
+    text, stored = F.col("extracted_text"), F.col("fields")
+    headings = F.filter("spans", lambda s: s["kind"] == "heading")
+    return F.struct(
+        emails_col(text).alias("emails"),
+        phones_col(text).alias("phones"),
+        F.array_sort(F.array_union(
+            links_col(text), stored["link_uris"])).alias("links"),
+        F.transform(headings, lambda s: s["text"]).alias("headings"),
+        name_col(text).alias("name"),
+        address_col(text).alias("address"),
+        institutions_col(text).alias("institutions"),
+        positions_col(text).alias("positions"),
+        companies_col(text).alias("companies"),
+        skills_col(text).alias("skills"),
+        stored["outlinks"].alias("outlinks"),
+        stored["anchors"].alias("anchors"),
+        stored["meta_robots"].alias("meta_robots"),
+    )
 
 
 def paired_positions_col(positions: Column, companies: Column) -> Column:

@@ -4,7 +4,7 @@
 receives a pandas batch of documents and returns the full extraction
 record for each. The extraction itself is ``oracle.extract_document``,
 called once per document — the only implementation of sniff, HTML
-block classification, PDF reading order and fields. This module only
+block classification, PDF reading order and link facts. This module only
 times each call and lays the records out as batch columns.
 """
 
@@ -25,7 +25,7 @@ def extract_batch(urls: pd.Series, payloads: pd.Series) -> pd.DataFrame:
     (list of span dicts), fields (dict), n_pages, n_blocks, elapsed_ms
     — one row per input row, in input order. ``elapsed_ms``
     (``lineage.elapsed_ms`` downstream) times the whole per-document
-    extraction: sniff, transfer decode, parse, classify and fields.
+    extraction: sniff, transfer decode, parse and classify.
     """
     records = []
     elapsed = []

@@ -17,7 +17,10 @@ Semantics kept from the reference (the "what", SURVEY.md §7.1):
   "histogram valley = separator": per-block link-density (anchor chars /
   total chars) with boilerplate-ancestor containers, Readability/
   Boilerpipe family;
-* regex field families;
+* the link facts only the bytes carry: ``<a href>`` outlinks and their
+  anchor text, the ``<meta name=robots>`` directive, PDF /Annots and
+  DOCX-relationship URIs. The regex field families are derived from the
+  stored text in the JVM (``functions.fields.fields_col``);
 * error rows, never exceptions escaping per-document work.
 """
 
@@ -324,13 +327,6 @@ _META_NAME_ROBOTS_RE = re.compile(
     r"""name\s*=\s*["']?robots["']?""", re.I)
 _META_CONTENT_RE = re.compile(
     r"""content\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>"']+))""", re.I)
-
-
-def extract_html(data: bytes) -> tuple[str, list[dict]]:
-    """Back-compat form of :func:`extract_html_full` without the
-    outlink hrefs / anchors / robots directive."""
-    text, spans, _, _, _ = extract_html_full(data)
-    return text, spans
 
 
 def extract_html_full(data: bytes) -> tuple[str, list[dict],
@@ -1315,14 +1311,6 @@ def _apply_page_rotation(shows: list[dict], rotate: int,
             s["x"], s["y"] = h - s["y"], s["x"]
 
 
-def merge_link_uris(fields: dict, uris: list[str]) -> dict:
-    """Fold annotation URIs into the regex-found ``fields['links']``
-    (sorted distinct union)."""
-    if uris:
-        fields["links"] = sorted(set(fields["links"]).union(uris))
-    return fields
-
-
 def page_contents(data: bytes) -> list[tuple]:
     """(content stream, font map, form-XObject map, link-annotation
     URIs, (rotate, width, height)) per page, in PAGE order.
@@ -1815,13 +1803,6 @@ def _column_clusters(xs: list[float], gap: float = COLUMN_GAP_PT) -> list[float]
     return starts
 
 
-def extract_pdf(data: bytes) -> tuple[str, list[dict], int]:
-    """Back-compat form of :func:`extract_pdf_full` without the
-    link-annotation URIs."""
-    text, spans, n_pages, _ = extract_pdf_full(data)
-    return text, spans, n_pages
-
-
 def extract_pdf_full(data: bytes) -> tuple[str, list[dict], int, list[str]]:
     """Parse the PDF text layer; returns (extracted_text, spans,
     n_pages, link_annotation_uris).
@@ -1932,152 +1913,11 @@ def extract_docx_full(data: bytes) -> tuple[str, list[dict], list[str]]:
 
 
 # ---------------------------------------------------------------------------
-# Regex field library (O44–O54 families)
-# ---------------------------------------------------------------------------
-
-# deliberate deviation from the reference's literal regex
-# (final.py:199-200 writes the TLD class as [A-Z|a-z] — a character-
-# class typo that admits '|' into TLDs): we use [A-Za-z] so this stays
-# bit-identical to functions/fields.EMAIL_PATTERN and the DuckDB
-# oracles, which the extraction-time fields must agree with
-EMAIL_RE = re.compile(r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}\b")
-PHONE_RES = [
-    re.compile(r"\+?\d{1,3}[-.\s]?\(?\d{3}\)?[-.\s]?\d{3}[-.\s]?\d{4}"),
-    re.compile(r"\(\d{3}\)\s?\d{3}[-.\s]?\d{4}"),
-]
-LINK_RES = [
-    re.compile(r"linkedin\.com/in/[\w-]+"),
-    re.compile(r"github\.com/[\w-]+"),
-    re.compile(r"https?://[^\s\"'<>]+"),
-]
-_PHONE_CLEAN_RE = re.compile(r"[^\d+]")
-
-# O53 name heuristic (``approach4_v2.py:27-37``): first 5 lines, 5<len<50,
-# no @ / +, letters+spaces only. RE2/Java-compatible (no lookaround).
-NAME_LINE_RE = re.compile(r"^[A-Za-z ]+$")
-# O51 institutions (``final.py:290-299``): the reference's greedy
-# ``[\w\s]+`` swallows neighboring words, so this is the bounded
-# re-expression of the same three shapes.
-INSTITUTION_RE = re.compile(
-    r"University of [A-Z][A-Za-z]+|[A-Z][A-Za-z]+ (?:University|College)"
-)
-# O52 "(title) at (company)" (``final.py:326-334``), bounded forms of
-# the reference's ``[\w\s]+(?:Engineer|...)\s+at\s+[\w\s.]+``.
-JOB_TITLE_RE = re.compile(
-    r"([A-Z][A-Za-z]*(?: [A-Z][A-Za-z]*)* "
-    r"(?:Engineer|Developer|Manager|Analyst|Consultant|Intern)) at "
-    r"([A-Z][A-Za-z]*(?: [A-Z][A-Za-z]*)*)"
-)
-# O49 skills vocabulary (``final.py:225-265`` family), matched in vocab
-# order (substring, case-insensitive)
-SKILLS_VOCAB = [
-    "spark", "python", "sql", "java", "scala", "hash", "join", "sort",
-    "merge", "stream", "batch", "window", "filter", "query",
-]
-
-
-def extract_name(text: str) -> str:
-    """First plausible name line among the first 5 lines (O53)."""
-    # bounded split: maxsplit keeps this O(head), not O(document)
-    for line in text.split("\n", 5)[:5]:
-        line = line.strip()
-        if (5 < len(line) < 50 and "@" not in line and "+" not in line
-                and NAME_LINE_RE.match(line)):
-            return line
-    return ""
-
-
-ADDRESS_KEYWORDS = ("contact details:", "address:")
-
-
-def extract_address(text: str) -> str:
-    """O55 address heuristic (``approach4_v2.py:70-85``): scan the
-    first 10 lines for a contact-details/address keyword line,
-    comma-split that line, drop email/phone/keyword parts (contains
-    '@'/'+'/'contact' or len<=3), rejoin with ', '. The FIRST keyword
-    line wins even if all its parts are dropped (reference returns
-    from inside the loop)."""
-    for line in text.split("\n", 10)[:10]:
-        low = line.lower()
-        if any(kw in low for kw in ADDRESS_KEYWORDS):
-            kept = []
-            for part in line.split(","):
-                part = part.strip()
-                if ("@" not in part and "+" not in part
-                        and "contact" not in part.lower()
-                        and len(part) > 3):
-                    kept.append(part)
-            return ", ".join(kept)
-    return ""
-
-
-# cheap one-scan triggers: a field family's (expensive, alternation-
-# heavy) findall only runs on text that can possibly match it — a text
-# without the trigger has no matches, so the gate is observationally
-# identical. _ANY_TRIGGER_RE is the union of every family's trigger:
-# on corpus text the all-clear case is the overwhelming majority, so
-# one scan replaces the per-family scans for most documents.
-_DIGIT_SEARCH_RE = re.compile(r"\d")
-_LINK_TRIGGER_RE = re.compile(r"linkedin\.com|github\.com|https?://")
-_INST_TRIGGER_RE = re.compile(r"niversity|ollege")
-_JOB_TRIGGER_RE = re.compile(
-    r"Engineer|Developer|Manager|Analyst|Consultant|Intern")
-_ANY_TRIGGER_RE = re.compile(
-    r"[@\d]|linkedin\.com|github\.com|https?://|niversity|ollege"
-    r"|Engineer|Developer|Manager|Analyst|Consultant|Intern")
-
-
-def extract_fields(text: str, spans: list[dict]) -> dict:
-    """Typed field families from extracted text (reference regexes:
-    emails ``final.py:199-200``, phones ``final.py:202-212`` with
-    post-clean + len>=10, links ``final.py:214-222``, name
-    ``approach4_v2.py:27-37``, institutions ``final.py:290-299``,
-    positions/companies ``final.py:326-334`` in match order — pairing
-    preserved for the zip-join, O19)."""
-    hit = _ANY_TRIGGER_RE.search(text) is not None
-    emails = (sorted(set(EMAIL_RE.findall(text)))
-              if hit and "@" in text else [])
-    phones = set()
-    if hit and _DIGIT_SEARCH_RE.search(text) is not None:
-        for rx in PHONE_RES:
-            for m in rx.findall(text):
-                cleaned = _PHONE_CLEAN_RE.sub("", m)
-                if len(cleaned) >= 10:
-                    phones.add(cleaned)
-    links = set()
-    if hit and _LINK_TRIGGER_RE.search(text) is not None:
-        for rx in LINK_RES:
-            links.update(rx.findall(text))
-    institutions = (sorted(set(INSTITUTION_RE.findall(text)))
-                    if hit and _INST_TRIGGER_RE.search(text) is not None
-                    else [])
-    jobs = (JOB_TITLE_RE.findall(text)
-            if hit and _JOB_TRIGGER_RE.search(text) is not None else [])
-    headings = [s["text"] for s in spans if s["kind"] == "heading"]
-    low = text.lower()
-    return {
-        "emails": emails,
-        "phones": sorted(phones),
-        "links": sorted(links),
-        "headings": headings,
-        "name": extract_name(text),
-        "address": extract_address(text),
-        "institutions": institutions,
-        "positions": [p for p, _ in jobs],
-        "companies": [c for _, c in jobs],
-        "skills": [w for w in SKILLS_VOCAB if w in low],
-    }
-
-
-# ---------------------------------------------------------------------------
 # Per-document driver (the pure map the whole engine distributes)
 # ---------------------------------------------------------------------------
 
 EMPTY_FIELDS = {
-    "emails": [], "phones": [], "links": [], "headings": [],
-    "name": "", "address": "", "institutions": [], "positions": [],
-    "companies": [], "skills": [], "outlinks": [], "anchors": [],
-    "meta_robots": "",
+    "link_uris": [], "outlinks": [], "anchors": [], "meta_robots": "",
 }
 
 
@@ -2115,9 +1955,12 @@ def extract_document(data: bytes) -> dict:
     """bytes → extraction record; never raises (EP3 error-row protocol).
 
     The record holds status, route, reason, extracted_text, spans,
-    fields, n_pages and n_blocks. Sections are not part of it: they are
-    derived from the spans at dataset level
-    (``operators.sections.sections_df``).
+    fields, n_pages and n_blocks. ``fields`` holds only what the bytes
+    alone tell (``link_uris``, ``outlinks``, ``anchors``,
+    ``meta_robots``). Sections and the regex field families are not
+    part of it: they are derived from the text and spans at dataset
+    level (``operators.sections.sections_df``,
+    ``functions.fields.fields_col``).
 
     ``reason`` is None on success, else a stable failure-class code
     (unknown_route | unsupported_filter | encrypted | bad_flate |
@@ -2160,16 +2003,14 @@ def extract_document(data: bytes) -> dict:
                 "fields": dict(EMPTY_FIELDS),
                 "n_pages": 0, "n_blocks": 0,
             }
-        fields = merge_link_uris(extract_fields(text, spans), link_uris)
-        # raw hrefs in document order, duplicates kept — the link-graph
-        # input (resolution against the page url is a JVM expression)
-        fields["outlinks"] = outlinks
-        fields["anchors"] = anchors
-        fields["meta_robots"] = meta_robots
         return {
             "status": "ok", "route": route, "reason": None,
             "extracted_text": text, "spans": spans,
-            "fields": fields,
+            # raw hrefs in document order, duplicates kept — the
+            # link-graph input (resolution against the page url is a
+            # JVM expression)
+            "fields": {"link_uris": link_uris, "outlinks": outlinks,
+                       "anchors": anchors, "meta_robots": meta_robots},
             "n_pages": n_pages, "n_blocks": len(spans),
         }
     except Exception as e:

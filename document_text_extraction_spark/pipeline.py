@@ -58,17 +58,11 @@ SPAN_TYPE = T.StructType([
     T.StructField("text", T.StringType()),
 ])
 
+# what the document's bytes alone tell; the regex field families are
+# derived from the stored text by ``functions.fields.fields_col``
 FIELDS_TYPE = T.StructType([
-    T.StructField("emails", T.ArrayType(T.StringType())),
-    T.StructField("phones", T.ArrayType(T.StringType())),
-    T.StructField("links", T.ArrayType(T.StringType())),
-    T.StructField("headings", T.ArrayType(T.StringType())),
-    T.StructField("name", T.StringType()),                    # O53
-    T.StructField("address", T.StringType()),                 # O55
-    T.StructField("institutions", T.ArrayType(T.StringType())),  # O51
-    T.StructField("positions", T.ArrayType(T.StringType())),  # O52, paired
-    T.StructField("companies", T.ArrayType(T.StringType())),  # with positions
-    T.StructField("skills", T.ArrayType(T.StringType())),     # O49
+    # PDF /Annots and DOCX-relationship URIs, as the parser found them
+    T.StructField("link_uris", T.ArrayType(T.StringType())),
     # <a href> values in document order (raw; resolution is a JVM
     # expression) — the link-graph input
     T.StructField("outlinks", T.ArrayType(T.StringType())),

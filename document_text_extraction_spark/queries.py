@@ -325,7 +325,8 @@ def q_extract_pdf_links(spark, sf_dir):
     # canonicalizer can't sort bare array columns (unhashable list)
     return (
         out.filter(F.col("doc_id") % 80 == 17)
-        .select("doc_id", F.array_join(F.col("fields.links"), "|").alias("links"))
+        .select("doc_id",
+                F.array_join(ff.fields_col()["links"], "|").alias("links"))
     )
 
 
@@ -347,7 +348,8 @@ def q_extract_docx_links(spark, sf_dir):
     # serialized with '|' for the driver's scalar-only canonicalizer
     return (
         out.filter(F.col("doc_id") % 40 == 12)
-        .select("doc_id", F.array_join(F.col("fields.links"), "|").alias("links"))
+        .select("doc_id",
+                F.array_join(ff.fields_col()["links"], "|").alias("links"))
     )
 
 

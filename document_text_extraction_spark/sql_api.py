@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from . import pipeline
+from .functions.fields import fields_col
 from .sources import web_pages_from_documents
 
 VIEWS = ("web_pages", "extracted", "documents", "events", "embeddings")
@@ -25,11 +26,13 @@ VIEWS = ("web_pages", "extracted", "documents", "events", "embeddings")
 def register_views(spark: SparkSession, sf_dir: str,
                    n_buckets: int = 64) -> None:
     """Create temp views: raw tables, the derived pages and the
-    extraction output (lazy — nothing runs until queried)."""
+    extraction output with its derived field struct (lazy — nothing
+    runs until queried)."""
     for t in ("documents", "events", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet") \
             .createOrReplaceTempView(t)
     pages = web_pages_from_documents(spark, sf_dir)
     pages.createOrReplaceTempView("web_pages")
     pipeline.extract_df(pages, n_buckets=n_buckets) \
+        .withColumn("fields", fields_col()) \
         .createOrReplaceTempView("extracted")

@@ -208,7 +208,7 @@ def measure(n_per_class: int = 200, seed: int = 42,
         diverged, example = 0, None
         for _ in range(n_per_class):
             page = gen_case(rng, cls)
-            a, _ = oracle.extract_html(page)
+            a, *_ = oracle.extract_html_full(page)
             b = twin_extract(page)
             if a != b:
                 diverged += 1
@@ -223,7 +223,7 @@ def measure(n_per_class: int = 200, seed: int = 42,
             print(f"{cls:32s} {d:>6d}/{n:<3d} {d / n:>7.1%}")
             if d and ex:
                 print(f"   e.g. {ex[:90]!r}")
-                ta, _ = oracle.extract_html(ex)
+                ta, *_ = oracle.extract_html_full(ex)
                 print(f"   ours: {ta[:80]!r}")
                 print(f"   twin: {twin_extract(ex)[:80]!r}")
         print(f"{'TOTAL':32s} {total_d:>6d}/{total_n:<4d} "

@@ -7,6 +7,7 @@ import subprocess
 import sys
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from document_text_extraction_spark.functions import (
     datelike_col,
@@ -47,10 +48,8 @@ def test_field_expressions(spark):
 
 def test_address_heuristic(spark):
     """O55: keyword line wins, email/phone/keyword parts dropped, first
-    keyword line wins even when empty, no keyword → '' — and the JVM
-    expression agrees with the pure-Python oracle on every case."""
+    keyword line wins even when empty, no keyword → ''."""
     from document_text_extraction_spark.functions.fields import address_col
-    from document_text_extraction_spark.oracle import extract_address
     cases = [
         "Jo Doe\nContact details: a@b.co, +1 555 123, 12 Oak St, Springfield",
         "Address: 99 River Rd, Hilltown\nbody text",
@@ -64,11 +63,98 @@ def test_address_heuristic(spark):
     # faithfully (approach4_v2.py:77-84)
     expected = ["12 Oak St, Springfield", "Address: 99 River Rd, Hilltown",
                 "", "", "", "ADDRESS: 7 Shout Ln, Yelltown"]
-    assert [extract_address(t) for t in cases] == expected
     df = spark.createDataFrame([(t,) for t in cases], ["text"])
     got = [r["a"] for r in
            df.select(address_col(F.col("text")).alias("a")).collect()]
     assert got == expected
+
+
+# strings on which Java's regex classes part from Python's ``re``:
+# (text, its non-empty derived members); the values are the ones the
+# per-document Python field library produced for the same text
+_FIELDS_COL_CASES = [
+    ("(555) 123-4567", {"phones": ["5551234567"]}),
+    ("call +1 555\n123 4567 now", {"phones": ["+15551234567"]}),
+    ("tel +１ (５５５) １２３-４５６７",
+     {"phones": ["+１５５５１２３４５６７", "５５５１２３４５６７"]}),
+    ("(٥٥٥) ١٢٣-٤٥٦٧", {"phones": ["٥٥٥١٢٣٤٥٦٧"]}),
+    ("linkedin.com/in/jöhn and github.com/_x-y",
+     {"links": ["github.com/_x-y", "linkedin.com/in/jöhn"]}),
+    ("user@example.com1", {}),
+    ("x²y@z.org ½a@b.org", {}),
+    ("\U0001d7d8a@b.org \U0001d7d8.b@c.org", {"emails": [".b@c.org"]}),
+    ("\tRiley Nguyen\r\nrest", {"name": "Riley Nguyen"}),
+    ("Address:\xa05 Elm Ave ,\u2003Dover",
+     {"address": "Address:\xa05 Elm Ave, Dover"}),
+]
+
+
+def test_fields_col_follows_python_re(spark):
+    """``fields_col()`` derives the 13-member field struct with Python
+    ``re`` semantics: unicode ``\\d``/``\\s``/``\\w``/``\\b``
+    (No numerals such as '²' are word characters, supplementary digits
+    included), ``str.strip`` whitespace, both phone patterns, scheme-less
+    profile links, and text links unioned with a PDF's /Annots URIs."""
+    from document_text_extraction_spark import corpus, oracle, pipeline
+    from document_text_extraction_spark.functions.fields import fields_col
+    stream = (b"BT 10 10 Td (see https://x.example/text and "
+              b"https://x.example/shared) Tj ET")
+    annot = (b"<< /Type /Annot /Subtype /Link /Rect [0 0 9 9] "
+             b"/A << /S /URI /URI (https://x.example/%s) >> >>")
+    pdf = oracle.extract_document(corpus._assemble_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Contents 4 0 R /Annots [5 0 R 6 0 R] >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(stream), stream),
+        annot % b"shared", annot % b"annot",
+    ]))
+    rows = [(t, [], oracle.EMPTY_FIELDS) for t, _ in _FIELDS_COL_CASES]
+    rows.append((pdf["extracted_text"], pdf["spans"], pdf["fields"]))
+    want = [w for _, w in _FIELDS_COL_CASES] + [{"links": [
+        "https://x.example/annot", "https://x.example/shared",
+        "https://x.example/text"]}]
+    df = spark.createDataFrame(rows, T.StructType([
+        T.StructField("extracted_text", T.StringType()),
+        T.StructField("spans", T.ArrayType(pipeline.SPAN_TYPE)),
+        T.StructField("fields", pipeline.FIELDS_TYPE),
+    ])).select(fields_col().alias("f"))
+    arr, s = "array<string>", "string"
+    assert [(m.name, m.dataType.simpleString())
+            for m in df.schema["f"].dataType] == [
+        ("emails", arr), ("phones", arr), ("links", arr),
+        ("headings", arr), ("name", s), ("address", s),
+        ("institutions", arr), ("positions", arr), ("companies", arr),
+        ("skills", arr), ("outlinks", arr), ("anchors", arr),
+        ("meta_robots", s)]
+    for (text, *_), w, r in zip(rows, want, df.collect()):
+        got = {k: v for k, v in r.f.asDict().items() if v}
+        assert got == w, text
+
+
+def test_re_class_matches_python_at_every_range_edge(spark):
+    """The nested Java classes of ``\\d``, ``\\s`` and ``\\w`` take, as
+    such and negated, exactly the code points Python's ``re`` does at
+    both ends of each range and just outside it."""
+    import re
+
+    from document_text_extraction_spark.functions.fields import _re_class
+    every = "".join(map(chr, range(0x110000)))
+    for esc in (r"\d", r"\s", r"\w"):
+        cps = sorted({cp for m in re.finditer(esc + "+", every)
+                      for cp in (m.start() - 1, m.start(), m.end() - 1,
+                                 m.end())
+                      if 0 <= cp < 0x110000
+                      and not 0xD800 <= cp <= 0xDFFF})
+        cls = _re_class(esc)
+        rows = spark.createDataFrame(
+            [(cp, chr(cp)) for cp in cps], "cp int, ch string").select(
+            "cp", F.col("ch").rlike(rf"\A[{cls}]\z").alias("pos"),
+            F.col("ch").rlike(rf"\A[^{cls}]\z").alias("neg")).collect()
+        bad = [r.cp for r in rows
+               if r.pos != bool(re.fullmatch(esc, chr(r.cp)))
+               or r.neg == r.pos]
+        assert not bad, (esc, bad[:5])
 
 
 def test_skill_tokens_and_datelike(spark):

@@ -60,43 +60,34 @@ def test_batch_order_independence():
         assert list(fwd[c]) == list(rev[c]), c
 
 
-def test_fields_planted():
+def test_fields_planted(derived_fields):
+    """Planted email and phone, derived by ``fields_col()`` from the
+    extracted text."""
     text = "reach me at jane.doe@example.com or +1 (555) 123-4567 ok fine"
-    rows = [corpus.make_page(3, text)]
-    out = _batch(rows)
-    f = out.iloc[0]["fields"]
+    f, = derived_fields([corpus.make_page(3, text)["html"]])
     assert f["emails"] == ["jane.doe@example.com"]
     # both reference phone patterns fire (intl + parenthesized local) —
     # union semantics, matching final.py:202-212
     assert f["phones"] == ["+15551234567", "5551234567"]
 
 
-def test_fields_name_entities_skills_planted():
-    """O53/O51/O52/O49 families flow through extraction end-to-end
-    (short texts keep the planted phrases inside one 10-word line)."""
+def test_fields_name_entities_skills_planted(derived_fields):
+    """O53/O51/O52/O49 families derived by ``fields_col()`` from the
+    extracted text (short texts keep the planted phrases inside one
+    10-word line)."""
     texts = [
         "Riley Nguyen",  # one 10-word chunk line → first extracted line
         "Studied at University of Oxford then more",
         "Senior Data Engineer at Acme Ltd since",
         "uses spark and python with sql daily",
     ]
-    out = kernels.extract_batch(
-        pd.Series([f"u{i}" for i in range(len(texts))]),
-        pd.Series([corpus.make_html(9, t) for t in texts]),
-    )
-    f0 = out.iloc[0]["fields"]
+    f0, f1, f2, f3 = derived_fields(
+        [corpus.make_html(9, t) for t in texts])
     assert f0["name"] == "Riley Nguyen"
-    f1 = out.iloc[1]["fields"]
     assert f1["institutions"] == ["University of Oxford"]
-    f2 = out.iloc[2]["fields"]
     assert f2["positions"] == ["Senior Data Engineer"]
     assert f2["companies"] == ["Acme Ltd"]
-    f3 = out.iloc[3]["fields"]
     assert f3["skills"] == ["spark", "python", "sql"]
-    # every record still byte-matches the oracle
-    for i, t in enumerate(texts):
-        ref = oracle.extract_document(corpus.make_html(9, t))
-        assert out.iloc[i]["fields"] == ref["fields"], i
 
 
 def test_empty_batch():

@@ -57,7 +57,7 @@ def test_docx_hyperlinks_resolved_through_rels():
     rec = oracle.extract_document(corpus.make_docx(doc_id, text))
     assert rec["status"] == "ok"
     assert rec["extracted_text"] == "\n".join(corpus.chunk_text(text))
-    assert rec["fields"]["links"] == sorted(
+    assert rec["fields"]["link_uris"] == sorted(
         corpus.docx_link_uris_for(doc_id))
 
 
@@ -68,7 +68,8 @@ def test_docx_short_doc_caps_links_at_paragraph_count():
     doc_id = 52  # 2 declared URIs
     rec = oracle.extract_document(
         corpus.make_docx(doc_id, "just nine words of text in one short line"))
-    assert rec["fields"]["links"] == [corpus.docx_link_uris_for(doc_id)[0]]
+    assert rec["fields"]["link_uris"] == [
+        corpus.docx_link_uris_for(doc_id)[0]]
 
 
 def test_docx_internal_rels_ignored():
@@ -77,7 +78,7 @@ def test_docx_internal_rels_ignored():
     doc_id = 32  # docx without hyperlinks
     rec = oracle.extract_document(
         corpus.make_docx(doc_id, corpus.synth_text(doc_id)))
-    assert rec["fields"]["links"] == []
+    assert rec["fields"]["link_uris"] == []
     # internal (no TargetMode) rel must not leak
     import io
     import zipfile

@@ -41,7 +41,7 @@ def test_sniff(payload, route):
 
 def test_html_minimal():
     doc = b"<html><body><main><p>hello plain world</p></main></body></html>"
-    text, spans = oracle.extract_html(doc)
+    text, spans, *_ = oracle.extract_html_full(doc)
     assert text == "hello plain world"
     assert [s["kind"] for s in spans] == ["main"]
 
@@ -49,7 +49,7 @@ def test_html_minimal():
 def test_html_boilerplate_classified():
     doc_id, words = 7, " ".join(["alpha"] * 25)
     data = corpus.make_html(doc_id, words)
-    text, spans = oracle.extract_html(data)
+    text, spans, *_ = oracle.extract_html_full(data)
     assert text == golden_text(words)
     kinds = {s["kind"] for s in spans}
     assert "boilerplate" in kinds and "main" in kinds
@@ -61,7 +61,7 @@ def test_html_boilerplate_classified():
 def test_html_list_items():
     words = " ".join(f"w{i}" for i in range(30))
     data = corpus.make_html(10, words)  # doc_id % 5 == 0 → <li> layout
-    text, spans = oracle.extract_html(data)
+    text, spans, *_ = oracle.extract_html_full(data)
     assert text == golden_text(words)
     assert {s["kind"] for s in spans if s["text"].startswith("w")} == {"list_item"}
 
@@ -69,7 +69,7 @@ def test_html_list_items():
 def test_html_heading_kept_entities_decoded():
     doc = (b"<html><body><article><h2>Results &amp; Methods</h2>"
            b"<p>one two three</p></article></body></html>")
-    text, spans = oracle.extract_html(doc)
+    text, spans, *_ = oracle.extract_html_full(doc)
     assert text == "Results & Methods\none two three"
     assert spans[0]["kind"] == "heading"
 
@@ -77,7 +77,7 @@ def test_html_heading_kept_entities_decoded():
 def test_html_link_dense_block_dropped():
     doc = (b"<html><body><div><a href='/a'>lots of linked words here</a>"
            b" ok</div><p>real content stays here now</p></body></html>")
-    text, _ = oracle.extract_html(doc)
+    text, *_ = oracle.extract_html_full(doc)
     assert text == "real content stays here now"
 
 
@@ -134,7 +134,7 @@ def test_html_block_edge_cases(doc, kinds, outlinks, anchors):
 def test_pdf_single_column():
     words = " ".join(f"tok{i}" for i in range(40))
     data = corpus.make_pdf(15, words)  # 15 % 3 == 0 → 1 column
-    text, spans, n_pages = oracle.extract_pdf(data)
+    text, spans, n_pages, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
     assert n_pages == 1
     ys = [s["y0"] for s in spans]
@@ -144,7 +144,7 @@ def test_pdf_single_column():
 def test_pdf_multi_column_reading_order():
     words = " ".join(f"tok{i}" for i in range(120))  # 12 lines
     data = corpus.make_pdf(16, words)  # 16 % 3 == 1 → 2 columns
-    text, spans, _ = oracle.extract_pdf(data)
+    text, spans, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
     xs = sorted({s["x0"] for s in spans})
     assert len(xs) == 2 and xs[1] - xs[0] > oracle.COLUMN_GAP_PT
@@ -153,14 +153,14 @@ def test_pdf_multi_column_reading_order():
 def test_pdf_three_columns():
     words = " ".join(f"tok{i}" for i in range(150))
     data = corpus.make_pdf(17, words)  # 17 % 3 == 2 → 3 columns
-    text, _, _ = oracle.extract_pdf(data)
+    text, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
 
 
 def test_pdf_multi_page():
     words = " ".join(f"tok{i}" for i in range(900))  # 90 lines > 40/col
     data = corpus.make_pdf(15, words)  # 1 column → 40 lines/page → 3 pages
-    text, spans, n_pages = oracle.extract_pdf(data)
+    text, spans, n_pages, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
     assert n_pages == 3
     pages = [s["page"] for s in spans]
@@ -170,23 +170,25 @@ def test_pdf_multi_page():
 def test_pdf_escapes_and_tj():
     words = "open ( close ) back \\ slash plus (x) done ok yes"
     data = corpus.make_pdf(14, words)
-    text, _, _ = oracle.extract_pdf(data)
+    text, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
 
 
 def test_pdf_truncated_raises():
     with pytest.raises(oracle.PdfParseError):
-        oracle.extract_pdf(b"%PDF-1.4\n1 0 obj\n<< /Type /Cat")
+        oracle.extract_pdf_full(b"%PDF-1.4\n1 0 obj\n<< /Type /Cat")
 
 
 # ---------------------------------------------------------------------------
 # fields
 # ---------------------------------------------------------------------------
 
-def test_fields_regexes():
+def test_fields_regexes(derived_fields):
+    """The regex families derived from the stored text
+    (``functions.fields.fields_col``) over an extracted page."""
     text = ("contact a.b+c@example.com or x@y.org call +1 (555) 123-4567 "
             "or 5551234567 see linkedin.com/in/jane-d and github.com/jane")
-    f = oracle.extract_fields(text, [])
+    f, = derived_fields([corpus.make_html(3, text)])
     assert f["emails"] == ["a.b+c@example.com", "x@y.org"]
     assert "+15551234567" in f["phones"] and "5551234567" in f["phones"]
     assert "linkedin.com/in/jane-d" in f["links"]
@@ -236,7 +238,7 @@ def test_pdf_flate_roundtrip():
     words = " ".join(f"tok{i}" for i in range(80))
     data = corpus.make_pdf(16, words)  # even doc_id → compressed
     assert b"/FlateDecode" in data
-    text, spans, n_pages = oracle.extract_pdf(data)
+    text, spans, n_pages, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
 
 
@@ -244,7 +246,7 @@ def test_pdf_flate_multipage_tree_order():
     words = " ".join(f"tok{i}" for i in range(900))
     data = corpus.make_pdf(18, words)  # even → compressed, 3 cols
     assert b"/FlateDecode" in data
-    text, spans, n_pages = oracle.extract_pdf(data)
+    text, spans, n_pages, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
     assert n_pages >= 2
 
@@ -265,7 +267,7 @@ def test_pdf_tree_walk_overrides_byte_order():
            + obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>")
            + obj(4, b"<< /Type /Page /Parent 2 0 R /Contents 6 0 R >>")
            + b"trailer\n<< /Root 1 0 R >>\n%%EOF")
-    text, spans, n_pages = oracle.extract_pdf(pdf)
+    text, spans, n_pages, *_ = oracle.extract_pdf_full(pdf)
     assert text == "page one\npage two"
     assert n_pages == 2
 
@@ -281,7 +283,7 @@ def test_pdf_corrupt_flate_is_parse_failure():
 def test_html_gt_inside_quoted_attribute():
     doc = (b"<html><body><p title=\"a>b\">kept text here</p>"
            b"<a href='/x?q=1>2'>link</a></body></html>")
-    text, spans = oracle.extract_html(doc)
+    text, spans, *_ = oracle.extract_html_full(doc)
     assert text == "kept text here"
     # the attribute value never leaks into any block
     assert all("a>b" not in s["text"] for s in spans)
@@ -360,7 +362,7 @@ def test_pdf_indirect_length_resolved():
         b"5 0 obj\n%d\nendobj\n" % len(s1)
         + b"trailer\n<< /Root 1 0 R >>\n%%EOF"
     )
-    text, _, _ = oracle.extract_pdf(pdf)
+    text, *_ = oracle.extract_pdf_full(pdf)
     assert text == "indirect len works"
 
 
@@ -433,7 +435,7 @@ def test_pdf_filter_variants_roundtrip(mode, marker):
     words = " ".join(f"f{i}" for i in range(80))
     data = corpus.make_pdf(16, words, filter_mode=mode)
     assert marker in data
-    text, _, _ = oracle.extract_pdf(data)
+    text, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
 
 
@@ -470,7 +472,7 @@ def test_winansi_differences_roundtrip():
         # substituted letters must NOT appear as plain ASCII shows
         if doc_id % 2 == 1:  # raw streams: inspect bytes directly
             assert b"(sentinel" not in data
-        text, _, _ = oracle.extract_pdf(data)
+        text, *_ = oracle.extract_pdf_full(data)
         assert text == golden_text(words)
 
 
@@ -544,7 +546,7 @@ def test_indirect_decode_parms_resolved():
         b"trailer\n<< /Root 1 0 R >>\n%%%%EOF\n"
         % (len(enc), enc, cols)
     )
-    text, _, _ = oracle.extract_pdf(pdf)
+    text, *_ = oracle.extract_pdf_full(pdf)
     assert text == "indirect"
     # an unresolvable ref must refuse, not garble
     broken = pdf.replace(b"/DecodeParms 5 0 R", b"/DecodeParms 9 0 R")
@@ -588,7 +590,7 @@ def test_tj_kern_word_spacing():
     # the streams genuinely contain no inter-word space glyphs
     body = data.split(b"stream\n", 1)[1]
     assert b"(" in body and b") -" in body
-    text, _, _ = oracle.extract_pdf(data)
+    text, *_ = oracle.extract_pdf_full(data)
     assert text == golden_text(words)
     # unit semantics at the threshold boundary
     shows = oracle._interpret_page(
@@ -635,7 +637,7 @@ def test_form_xobject_text_roundtrip():
         assert b"/Subtype /Form" in data
         if doc_id % 2 == 1:  # raw streams: the Do ops are visible bytes
             assert b"Do" in data
-        text, _, _ = oracle.extract_pdf(data)
+        text, *_ = oracle.extract_pdf_full(data)
         assert text == golden_text(words)
     # load-bearing check: raw (uncompressed) variant — page content
     # alone is missing the form-carried lines

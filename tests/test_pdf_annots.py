@@ -11,23 +11,32 @@ def _golden(text: str) -> str:
 def test_annots_roundtrip_and_links_both_variants():
     """Variant 0 (flate, inline /Annots + one indirect /A) and variant 1
     (raw, indirect /Annots array): golden text intact, URIs in
-    fields.links, the /Text note annot contributes nothing."""
+    fields.link_uris, the /Text note annot contributes nothing."""
     for doc_id in (17, 97):
         text = corpus.synth_text(doc_id, 120, 240)
         rec = oracle.extract_document(corpus.make_pdf_annots(doc_id, text))
         assert rec["status"] == "ok", (doc_id, rec["reason"])
         assert rec["extracted_text"] == _golden(text)
-        assert rec["fields"]["links"] == sorted(
+        assert rec["fields"]["link_uris"] == sorted(
             corpus.annot_uris_for(doc_id))
-        assert all("reviewer" not in lk for lk in rec["fields"]["links"])
+        assert all("reviewer" not in lk
+                   for lk in rec["fields"]["link_uris"])
 
 
-def test_annot_uris_merge_with_regex_links():
-    """Annotation URIs union (sorted, distinct) with regex-found text
-    links — the shared merge_link_uris contract."""
-    fields = {"links": ["github.com/someone", "z://dup"]}
-    out = oracle.merge_link_uris(fields, ["a://first", "z://dup"])
-    assert out["links"] == ["a://first", "github.com/someone", "z://dup"]
+def test_annot_uris_merge_with_regex_links(spark):
+    """Stored annotation URIs union (sorted, distinct) with the links
+    ``fields_col()`` finds in the text."""
+    from document_text_extraction_spark import pipeline
+    from document_text_extraction_spark.functions.fields import fields_col
+    fields = dict(oracle.EMPTY_FIELDS,
+                  link_uris=["a://first", "https://x.example/dup"])
+    df = spark.createDataFrame(
+        [("see github.com/someone https://x.example/dup", [], fields)],
+        "extracted_text string, spans array<struct<kind:string,"
+        f"text:string>>, fields {pipeline.FIELDS_TYPE.simpleString()}")
+    out = df.select(fields_col().alias("f")).first().f
+    assert out["links"] == ["a://first", "github.com/someone",
+                            "https://x.example/dup"]
 
 
 def test_literal_string_unescape():
@@ -85,4 +94,4 @@ def test_annots_slot_in_corpus_route():
     text = corpus.synth_text(doc_id)
     rec = oracle.extract_document(corpus.payload_for(doc_id, text))
     assert rec["status"] == "ok"
-    assert rec["fields"]["links"] == corpus.annot_uris_for(doc_id)
+    assert rec["fields"]["link_uris"] == corpus.annot_uris_for(doc_id)

@@ -59,7 +59,7 @@ def test_q_restores_ctm():
     content = (b"BT 10 700 Td (first) Tj ET\n"
                b"q 0 1 -1 0 0 0 cm BT 650 -10 Td (rot) Tj ET Q\n"
                b"BT 10 650 Td (after) Tj ET")
-    text, spans, _ = oracle.extract_pdf(_mini_pdf(content))
+    text, spans, *_ = oracle.extract_pdf_full(_mini_pdf(content))
     by = {s["text"]: (s["x0"], s["y0"]) for s in spans}
     assert by["first"] == (10.0, 700.0)
     # rotated: device = (650, -10) under 90-deg cm -> (10, 650)... the
@@ -73,7 +73,7 @@ def test_q_restores_ctm():
 def test_nested_cm_composes():
     content = (b"q 2 0 0 2 0 0 cm q 1 0 0 1 5 7 cm "
                b"BT 10 20 Td (x) Tj ET Q Q")
-    _, spans, _ = oracle.extract_pdf(_mini_pdf(content))
+    _, spans, *_ = oracle.extract_pdf_full(_mini_pdf(content))
     # translate(5,7) then scale(2): device = 2*(10+5), 2*(20+7)
     assert spans[0]["x0"] == 30.0 and spans[0]["y0"] == 54.0
 
@@ -91,7 +91,7 @@ def test_form_matrix_composes():
         b"/Matrix [1 0 0 1 40 50] /Length %d >>\nstream\n%s\nendstream"
         % (len(form), form),
     ]
-    _, spans, _ = oracle.extract_pdf(corpus._assemble_pdf(objs))
+    _, spans, *_ = oracle.extract_pdf_full(corpus._assemble_pdf(objs))
     assert spans[0]["x0"] == 40.0 and spans[0]["y0"] == 50.0
 
 

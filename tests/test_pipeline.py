@@ -38,6 +38,13 @@ def test_output_schema_columns():
         "part_bucket"]
 
 
+def test_fields_type_stores_only_byte_facts():
+    """The stored field struct holds what the bytes alone tell; the
+    regex families are derived by ``functions.fields.fields_col``."""
+    assert pipeline.FIELDS_TYPE.fieldNames() == [
+        "link_uris", "outlinks", "anchors", "meta_robots"]
+
+
 def test_extract_matches_oracle_all_rows(spark, pages):
     out = pipeline.extract_df(pages, n_buckets=16).select(
         "url", "extracted_text", "lineage.status", "lineage.route"

@@ -65,9 +65,11 @@ def _base_commit() -> str | None:
 
 
 def _changed_stems(base: str) -> set[str]:
+    """Module stems of the package files changed since ``base``; a
+    package's ``__init__.py`` counts as the package (``sinks``)."""
     files = _git("diff", "--name-only", base, "--", PKG).splitlines()
-    return {f.rsplit("/", 1)[-1].removesuffix(".py") for f in files
-            if f.endswith(".py")}
+    return {f.removesuffix("/__init__.py").removesuffix(".py")
+            .rsplit("/", 1)[-1] for f in files if f.endswith(".py")}
 
 
 def _queries_py_changed_lines(base: str) -> set[int]:
@@ -161,9 +163,11 @@ def test_imported_names_attribute_their_module():
     """A query that reaches a changed module only through a top-level
     import of queries.py is dirty: ``sections_planted`` calls the
     imported ``sections_df``, ``cv_fields_planted`` uses ``ff.``, the
-    alias of ``functions/fields.py``."""
+    alias of ``functions/fields.py``; a package stem (a changed
+    ``sinks/__init__.py``) dirties the queries importing from it."""
     assert "sections_planted" in classify_dirty({"sections"}, set())
     assert "cv_fields_planted" in classify_dirty({"fields"}, set())
+    assert "wet_roundtrip" in classify_dirty({"sinks"}, set())
 
 
 def test_changed_queries_sit_inside_driver_window():
